@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from usda_food_data_pipeline_spark import registry
-from usda_food_data_pipeline_spark.session import get_spark
+from usda_food_data_pipeline_spark.session import QueryRun, get_spark
 
 
 def run_query(df) -> None:
@@ -266,25 +266,23 @@ def main() -> None:
         best = -1.0
         try:
             for _ in range(repeats):
-                t0 = time.time()
-                run_query(fn(spark, sf_dir))
-                sec = round(time.time() - t0, 3)
+                # each repeat owns (and on exit releases) every cache the
+                # query persists, so every repeat is measured standalone
+                with QueryRun() as run:
+                    t0 = time.time()
+                    run_query(fn(spark, sf_dir))
+                    sec = round(time.time() - t0, 3)
                 best = sec if best < 0 else min(best, sec)
-                # operators may persist() intermediates (minhash signature
-                # table, component labels); drop them so every repeat is
-                # measured standalone
-                spark.catalog.clearCache()
         except Exception as ex:  # noqa: BLE001
             best = -1.0
             errors.append(name)
             print(f"bench error in {name}: {ex}", file=sys.stderr)
-            spark.catalog.clearCache()
         timings[name] = best
         # read guard counters OUTSIDE the timed window (r05 verdict
-        # task 5): guarded queries registered a GuardStats at plan
-        # build; .get runs one keys-only aggregate action
-        obs = registry.GUARD_STATS.pop(name, None)
-        if obs is not None and best >= 0:
+        # task 5): guarded queries registered a GuardStats with their
+        # run at plan build; .get runs one keys-only aggregate action
+        obs = run.guards.get(name) if best >= 0 else None
+        if obs is not None:
             try:
                 guards[name] = obs.get
             except Exception as ex:  # noqa: BLE001

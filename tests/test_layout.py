@@ -3,6 +3,8 @@ co-located-join story for 100 TB (README 'Design for 100 TB')."""
 
 from __future__ import annotations
 
+import ast
+import os
 import shutil
 import tempfile
 
@@ -274,3 +276,83 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "usda_food_data_pipeline_spark"
+)
+
+
+def _package_modules(*subdirs: str):
+    roots = [os.path.join(_PKG, d) for d in subdirs] or [_PKG]
+    for root in roots:
+        for dirpath, _, files in os.walk(root):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    with open(path) as fh:
+                        yield os.path.relpath(path, _PKG), ast.parse(fh.read())
+
+
+def _calls(node: ast.AST, method: str):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == method:
+            yield n
+
+
+def test_every_persist_has_one_owner():
+    """A ``.persist()`` outside ``session.own`` must be assigned to a name
+    that a ``finally`` of the same function unpersists (the
+    eager-operator rule); every other persist goes through ``own()`` so
+    a query run releases it."""
+    bad = []
+    for rel, tree in _package_modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or (rel == "session.py" and fn.name == "own"):
+                continue
+            released = {
+                c.func.value.id
+                for t in ast.walk(fn)
+                if isinstance(t, ast.Try)
+                for stmt in t.finalbody
+                for c in _calls(stmt, "unpersist")
+                if isinstance(c.func.value, ast.Name)
+            }
+            owned = {
+                id(c)
+                for s in ast.walk(fn)
+                if isinstance(s, ast.Assign)
+                and {t.id for t in s.targets if isinstance(t, ast.Name)} & released
+                for c in _calls(s.value, "persist")
+            }
+            bad += [f"{rel}:{c.lineno} {fn.name}" for c in _calls(fn, "persist") if id(c) not in owned]
+    assert not bad, f"persist() without an owner: {bad}"
+
+
+def test_no_module_level_mutable_state_in_operators_or_functions():
+    """Operators and functions hold no state between calls: no
+    ``global`` rebinding, and module-level names are immutable
+    constants (literals, tuples, frozen mappings, compiled patterns)."""
+    allowed_calls = {"MappingProxyType", "compile", "frozenset"}
+    bad = []
+    for rel, tree in _package_modules("operators", "functions"):
+        bad += [f"{rel}:{n.lineno} global" for n in ast.walk(tree) if isinstance(n, ast.Global)]
+        for stmt in tree.body:
+            if isinstance(stmt, ast.Assign):
+                targets, value = stmt.targets, stmt.value
+            elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+                targets, value = [stmt.target], stmt.value
+            else:
+                continue
+            if any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets):
+                continue
+            mutable = isinstance(
+                value, (ast.List, ast.Dict, ast.Set, ast.ListComp, ast.DictComp, ast.SetComp)
+            )
+            if isinstance(value, ast.Call):
+                f = value.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                mutable = name not in allowed_calls
+            if mutable:
+                bad.append(f"{rel}:{stmt.lineno} {ast.unparse(targets[0])}")
+    assert not bad, f"module-level mutable state: {bad}"

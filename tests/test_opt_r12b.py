@@ -168,7 +168,8 @@ def test_bpe_encode_arrow_matches_expression(spark):
     """The Arrow-batched encoder must reproduce the expression fold's
     greedy left-to-right non-overlapping merge semantics exactly —
     including cascading merges (a rule whose output feeds a later
-    rule), repeated pairs, and empty/whitespace-only texts."""
+    rule), repeated pairs, empty/whitespace-only texts, and NULL text
+    (NULL out, not an empty piece list)."""
     from usda_food_data_pipeline_spark.functions.bpe import (
         bpe_encode,
         bpe_encode_arrow,
@@ -186,6 +187,7 @@ def test_bpe_encode_arrow_matches_expression(spark):
             (2, "aabbcc cab ba"),
             (3, "   "),
             (4, "abcabc ccccc"),
+            (5, None),
         ],
         "doc_id long, text string",
     )
@@ -205,3 +207,4 @@ def test_bpe_encode_arrow_matches_expression(spark):
     assert expr == arrow
     assert arrow[1][:2] == ["abc", "ab"]  # 'abc' fully cascaded
     assert arrow[3] == []
+    assert arrow[5] is None

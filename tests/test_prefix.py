@@ -44,21 +44,21 @@ def test_prefix_sum_output_reads_the_collected_partitioning(spark):
     DataFrame must read the SAME materialized partitioning.  Since r08
     that pin is a ``localCheckpoint`` (LogicalRDD scan, lineage CUT —
     re-executing repartitionByRange is impossible by construction),
-    with its OWN lifetime: a janitor rollover from an interleaved
-    dedup-operator call must not be able to unpersist it (the r07
-    failure mode: stale offsets against a re-sampled exchange)."""
-    from usda_food_data_pipeline_spark.operators.dedup import _INTERMEDIATES
+    with its OWN lifetime: exiting the query run that built it must not
+    be able to unpersist it (the r07 failure mode: stale offsets against
+    a re-sampled exchange)."""
+    from usda_food_data_pipeline_spark.session import QueryRun
 
     df = spark.createDataFrame([(i, i % 3) for i in range(100)], ["id", "v"])
-    out = global_prefix_sum(df, [F.col("id")], "v", num_partitions=4)
+    with QueryRun():
+        out = global_prefix_sum(df, [F.col("id")], "v", num_partitions=4)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     # lineage is cut: the plan bottoms out in a checkpointed RDD scan,
     # with no Exchange / repartitionByRange left to re-execute
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
     assert "RepartitionByExpression" not in plan, plan
-    # own lifetime: a janitor rollover (what any subsequent tracked
-    # operator call does) must not invalidate the output
-    _INTERMEDIATES.rollover([])
+    # own lifetime: the run has exited, and the output still reads the
+    # checkpoint the offsets were collected from
     got = {r["id"]: r["cum"] for r in out.collect()}
     assert got == {i: sum(j % 3 for j in range(i + 1)) for i in range(100)}
 

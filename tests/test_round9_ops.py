@@ -451,17 +451,21 @@ def test_lsh_recall_eval_invariants(spark):
     (precision 1 — both sides verify with exact integer Jaccard at the
     same threshold), so sum(n_hit) == |lsh_pairs ∩ truth| == |lsh_pairs
     restricted to truth keys|.  Runs the registered composite twice
-    back-to-back to exercise the janitor track() path (second call's
-    rollover retires the first call's materialized sides)."""
+    back-to-back, each in its own query run: the second run rebuilds
+    both materialized sides after the first run released them."""
     from usda_food_data_pipeline_spark import registry
 
     sf = "/root/testdata/sf0.001"
+    from usda_food_data_pipeline_spark.session import QueryRun
+
     q = registry.queries()["lsh_recall_eval"]
-    rows = q(spark, sf).collect()
+    with QueryRun():
+        rows = q(spark, sf).collect()
     assert rows, "no truth pairs at smoke scale?"
     for r in rows:
         assert 0 <= r["n_hit"] <= r["n_true"], r
-    rows2 = q(spark, sf).collect()
+    with QueryRun():
+        rows2 = q(spark, sf).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
 
 

@@ -381,3 +381,29 @@ def test_incremental_dedup_crash_replay_is_exactly_once(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == n_after_commit
     got2 = {r.doc_id for r in spark.read.parquet(corpus).drop("epoch").collect()}
     assert got2 == got
+
+
+def test_incremental_dedup_epochs_leave_no_cache(spark, tmp_path):
+    """Each seeded epoch dedups against corpus-sized signature caches;
+    the processor must free them once the epoch's survivors are
+    written, or a long-running stream's storage grows every epoch."""
+    from usda_food_data_pipeline_spark.streaming.dedup import (
+        make_incremental_dedup_batch_processor,
+    )
+
+    spark.catalog.clearCache()
+    proc = make_incremental_dedup_batch_processor(
+        str(tmp_path / "corpus"), jaccard_threshold=0.5
+    )
+    batches = [
+        [(1, "the quick brown fox jumps over the lazy dog today ok"),
+         (2, "completely different content about spark shuffles here")],
+        [(10, "the quick brown fox jumps over the lazy dog today yes"),
+         (11, "entirely novel text with new words and no overlap at all")],
+        [(20, "entirely novel text with new words and no overlap at ALL"),
+         (21, "a third epoch brings yet another unrelated document in")],
+    ]
+    for epoch, rows in enumerate(batches):
+        proc(spark.createDataFrame(rows, "doc_id bigint, text string"), epoch)
+    assert spark.read.parquet(str(tmp_path / "corpus")).count() >= 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -187,8 +187,6 @@ def main() -> int:
         if not res.get("ok"):
             n_fail += 1
         print(json.dumps(res))
-        # operators may persist() intermediates; measure queries standalone
-        spark.catalog.clearCache()
     print(json.dumps({"total_failures": n_fail}))
     return 1 if n_fail else 0
 

@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from usda_food_data_pipeline_spark import registry
-from usda_food_data_pipeline_spark.session import get_spark
+from usda_food_data_pipeline_spark.session import QueryRun, get_spark
 
 QUERIES = [
     "dedup_exact",
@@ -67,14 +67,14 @@ def main() -> None:
         for name in QUERIES:
             best, rows = -1.0, None
             for _ in range(args.repeats):
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                rows = df.count()
-                sec = round(time.time() - t0, 2)
+                with QueryRun() as run:
+                    t0 = time.time()
+                    df = qs[name](spark, sf_dir)
+                    rows = df.count()
+                    sec = round(time.time() - t0, 2)
                 best = sec if best < 0 else min(best, sec)
-                spark.catalog.clearCache()
             scales[label][name] = best
-            obs = registry.GUARD_STATS.pop(name, None)
+            obs = run.guards.get(name)
             if name in GUARDED:
                 entry = {"out_rows": rows}
                 if obs is not None:

@@ -9,7 +9,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from usda_food_data_pipeline_spark import registry
-from usda_food_data_pipeline_spark.session import get_spark
+from usda_food_data_pipeline_spark.session import QueryRun, get_spark
 
 DEFAULT = ["tpch_q6", "tpch_q5", "dedup_latest_order", "cosine_topk", "flagship"]
 
@@ -20,10 +20,11 @@ def main() -> None:
     spark = get_spark("dump-plans")
     qs = registry.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        print(f"===== {name} =====")
-        print(df._jdf.queryExecution().executedPlan().toString())
+        with QueryRun():
+            df = qs[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            print(f"===== {name} =====")
+            print(df._jdf.queryExecution().executedPlan().toString())
 
 
 if __name__ == "__main__":

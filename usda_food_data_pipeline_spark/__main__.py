@@ -13,7 +13,7 @@ import argparse
 import json
 import sys
 
-from .session import get_spark
+from .session import QueryRun, get_spark
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -73,12 +73,13 @@ def main(argv: list[str] | None = None) -> int:
         if args.name not in qs:
             print(json.dumps({"error": f"unknown query {args.name!r}"}), file=sys.stderr)
             return 2
-        df = qs[args.name](spark, args.sf_dir)
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-            print(json.dumps({"status": "ok", "output": args.output}))
-        else:
-            df.show(args.limit, truncate=40)
+        with QueryRun():
+            df = qs[args.name](spark, args.sf_dir)
+            if args.output:
+                df.write.mode("overwrite").parquet(args.output)
+                print(json.dumps({"status": "ok", "output": args.output}))
+            else:
+                df.show(args.limit, truncate=40)
     return 0
 
 

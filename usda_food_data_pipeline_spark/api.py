@@ -13,6 +13,10 @@ function here:
    formatted metadata documents. Everything downstream of the
    retrieved documents (prompting, chat) is application code outside
    the engine, exactly as in the reference.
+
+Each function materializes its result before returning, so each runs
+inside its own :class:`~.session.QueryRun`: every cache the call
+persists is released when it returns or raises.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from pyspark.sql import functions as F
 from .functions.embed import embed_text_batch
 from .operators.similarity import cosine_topk
 from .plans.usda_pipeline import usda_pipeline
+from .session import QueryRun
 from .sources.sinks import build_embedding_index, write_quoted_csv
 from .sources.tables import read_usda_csv
 
@@ -41,13 +46,14 @@ def run_pipeline(
         # type drift between sampled and full reads
         return read_usda_csv(spark, f"{landing_dir}/{name}.csv", name)
 
-    out = usda_pipeline(
-        read("branded_food"), read("food"), read("nutrient"), read("food_nutrient")
-    )
-    if fmt == "csv":
-        write_quoted_csv(out, output_path)  # :160 QUOTE_NONNUMERIC analog
-    else:
-        out.write.mode("overwrite").parquet(output_path)
+    with QueryRun():
+        out = usda_pipeline(
+            read("branded_food"), read("food"), read("nutrient"), read("food_nutrient")
+        )
+        if fmt == "csv":
+            write_quoted_csv(out, output_path)  # :160 QUOTE_NONNUMERIC analog
+        else:
+            out.write.mode("overwrite").parquet(output_path)
 
 
 def build_index(
@@ -59,7 +65,8 @@ def build_index(
     dim: int = 64,
 ) -> None:
     """Reference index build, self-contained: embeddings to parquet."""
-    build_embedding_index(df, text_col, id_col, index_path, dim)
+    with QueryRun():
+        build_embedding_index(df, text_col, id_col, index_path, dim)
 
 
 def retrieve(
@@ -75,17 +82,18 @@ def retrieve(
     the query, cosine top-k over the index, attach metadata, return a
     list of documents (the k-row collect is the sanctioned one —
     app.py:63-68 does exactly this via Pinecone)."""
-    index = spark.read.parquet(index_path)
-    qdf = spark.createDataFrame([(query_text,)], "q string").select(
-        embed_text_batch(dim)(F.col("q")).alias("embedding")
-    )
-    top = cosine_topk(index, qdf, k=k, id_col=id_col)
-    # a zero-vector query (empty/whitespace text) yields NULL cosines
-    # (try_divide) — return nothing rather than k arbitrary rows
-    top = top.filter(F.col("score").isNotNull())
-    if metadata_df is not None:
-        top = top.join(metadata_df, id_col, "left")
-    rows = top.orderBy(F.col("score").desc(), F.col(id_col)).collect()
+    with QueryRun():
+        index = spark.read.parquet(index_path)
+        qdf = spark.createDataFrame([(query_text,)], "q string").select(
+            embed_text_batch(dim)(F.col("q")).alias("embedding")
+        )
+        top = cosine_topk(index, qdf, k=k, id_col=id_col)
+        # a zero-vector query (empty/whitespace text) yields NULL cosines
+        # (try_divide) — return nothing rather than k arbitrary rows
+        top = top.filter(F.col("score").isNotNull())
+        if metadata_df is not None:
+            top = top.join(metadata_df, id_col, "left")
+        rows = top.orderBy(F.col("score").desc(), F.col(id_col)).collect()
     return [
         {kk: vv for kk, vv in r.asDict().items() if vv is not None} for r in rows
     ]
@@ -118,28 +126,29 @@ def retrieve_hybrid(
     terms = [t for t in query_text.lower().split() if t]
     if not terms:
         return []
-    lex = bm25_topk(docs_df, id_col, text_col, terms, k=candidates).select(
-        id_col,
-        F.row_number()
-        .over(Window.orderBy(F.col("bm25").desc(), F.col(id_col)))
-        .alias("rank"),
-    )
-    index = spark.read.parquet(index_path)
-    qdf = spark.createDataFrame([(query_text,)], "q string").select(
-        embed_text_batch(dim)(F.col("q")).alias("embedding")
-    )
-    vec = (
-        cosine_topk(index, qdf, k=candidates, id_col=id_col)
-        .filter(F.col("score").isNotNull())
-        .select(
+    with QueryRun():
+        lex = bm25_topk(docs_df, id_col, text_col, terms, k=candidates).select(
             id_col,
             F.row_number()
-            .over(Window.orderBy(F.col("score").desc(), F.col(id_col)))
+            .over(Window.orderBy(F.col("bm25").desc(), F.col(id_col)))
             .alias("rank"),
         )
-    )
-    fused = rrf_fuse(lex, vec, id_col, k=k).join(
-        docs_df.select(id_col, text_col), id_col, "left"
-    )
-    rows = fused.orderBy(F.col("rrf").desc(), F.col(id_col)).collect()
+        index = spark.read.parquet(index_path)
+        qdf = spark.createDataFrame([(query_text,)], "q string").select(
+            embed_text_batch(dim)(F.col("q")).alias("embedding")
+        )
+        vec = (
+            cosine_topk(index, qdf, k=candidates, id_col=id_col)
+            .filter(F.col("score").isNotNull())
+            .select(
+                id_col,
+                F.row_number()
+                .over(Window.orderBy(F.col("score").desc(), F.col(id_col)))
+                .alias("rank"),
+            )
+        )
+        fused = rrf_fuse(lex, vec, id_col, k=k).join(
+            docs_df.select(id_col, text_col), id_col, "left"
+        )
+        rows = fused.orderBy(F.col("rrf").desc(), F.col(id_col)).collect()
     return [r.asDict() for r in rows]

@@ -184,7 +184,7 @@ def bpe_encode_arrow(tokens: Column, rules: list[tuple[int, str, str, str, int]]
         res = []
         for toks in tok_ser:
             if toks is None:
-                res.append([])
+                res.append(None)
                 continue
             pieces: list = []
             for w in toks:

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
+from ..session import own
 
 LP_SCALE = 9
 _LP_TYPE = f"decimal(18,{LP_SCALE})"
@@ -71,7 +72,7 @@ def nb_train(
     # distinct-count collect, the model join); persist so the corpus
     # token stream is exploded and aggregated once — tc is
     # |classes| x |vocab| rows
-    tc = toks.groupBy("_y", "token").agg(F.count(F.lit(1)).alias("_c")).persist()
+    tc = own(toks.groupBy("_y", "token").agg(F.count(F.lit(1)).alias("_c")))
     # class token totals + overall vocab size: tiny aggregates off the
     # (label, token) count table, collected (|classes| rows / 1 row)
     totals = {

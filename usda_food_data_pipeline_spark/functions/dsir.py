@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import md5_int, tokenize
+from ..session import own
 
 HASH_SEED = 31
 LP_SCALE = 9
@@ -105,17 +106,16 @@ def dsir_select(
         py_grid_nanos,
         py_ln_int,
     )
-    from ..operators.dedup import _INTERMEDIATES
 
     spark = docs.sparkSession
     # (doc, bucket, count): the only corpus-sized aggregate; feeds both
     # the q distribution (re-aggregated to <= n_buckets rows) and
-    # scoring — persist so the pool is tokenized once (janitor-tracked;
-    # the next tracked operator call retires it).
-    dc = occurrences(raw, with_id=True).groupBy(id_col, "b").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
-    _INTERMEDIATES.rollover([dc])
+    # scoring — persist so the pool is tokenized once.
+    dc = own(
+        occurrences(raw, with_id=True).groupBy(id_col, "b").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+    )
     cq = dc.groupBy("b").agg(F.sum("cnt").alias("cq"))
     ct = occurrences(target, with_id=False).groupBy("b").agg(
         F.count(F.lit(1)).alias("ct")

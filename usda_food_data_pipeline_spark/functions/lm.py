@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
+from ..session import own
 
 # Brants et al.'s backoff constant. Encoded in the scoring path as the
 # exact integer ratio 2/5 (ln(0.4·c/N) = ln(2c) - ln(5N)) — changing it
@@ -119,7 +120,6 @@ def lm_score_stupid_backoff(
         py_grid_nanos,
         py_ln_int,
     )
-    from ..operators.dedup import _INTERMEDIATES
 
     spark = docs.sparkSession
     # tokenize the training slice ONCE: both count tables read this
@@ -144,10 +144,8 @@ def lm_score_stupid_backoff(
     )
     # The model tables feed several consumers (log-table collects + the
     # scoring joins); persist so each is aggregated once.
-    # Janitor-tracked: the NEXT tracked operator call retires them.
-    uni = uni.persist()
-    bg = bg.persist()
-    _INTERMEDIATES.rollover([uni, bg])
+    uni = own(uni)
+    bg = own(bg)
 
     # Portable log tables (see module docstring): two bounded driver
     # jobs build everything — distinct bigram counts, and one pass over
@@ -159,17 +157,19 @@ def lm_score_stupid_backoff(
     # corpus-sized.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(2) as pool:
-        f_bg = pool.submit(
-            lambda: sorted(int(r["c"]) for r in bg.select("c").distinct().collect())
-        )
-        f_uni = pool.submit(
-            lambda: uni.agg(
-                F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
-            ).collect()[0]
-        )
-        bg_vals, st = f_bg.result(), f_uni.result()
-    toks.unpersist()
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            f_bg = pool.submit(
+                lambda: sorted(int(r["c"]) for r in bg.select("c").distinct().collect())
+            )
+            f_uni = pool.submit(
+                lambda: uni.agg(
+                    F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
+                ).collect()[0]
+            )
+            bg_vals, st = f_bg.result(), f_uni.result()
+    finally:
+        toks.unpersist()
     n_total = int(st["_n"] or 0)
     uni_vals = sorted(int(v) for v in (st["_vals"] or []))
     back_vals = sorted({1} | set(uni_vals))

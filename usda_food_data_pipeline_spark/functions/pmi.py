@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
+from ..session import own
 
 PMI_SCALE = 9
 _PMI_TYPE = f"decimal(18,{PMI_SCALE})"
@@ -58,7 +59,6 @@ def pmi_phrases(
     by (pmi_nanos DESC, w1, w2) — deterministic because the ranking key
     is an exact integer.
     """
-    from ..operators.dedup import _INTERMEDIATES
     from .portable_ln import (
         grid_decimal_col,
         literal_table,
@@ -67,22 +67,19 @@ def pmi_phrases(
     )
 
     spark = docs.sparkSession
-    toks = docs.select(tokenize(F.col(text_col)).alias("toks")).persist()
-    uni = (
+    toks = own(docs.select(tokenize(F.col(text_col)).alias("toks")))
+    uni = own(
         toks.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
-    bg = (
+    bg = own(
         toks.select(F.explode(_adjacent(F.col("toks"))).alias("p"))
         .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_xy"))
         .filter(F.col("c_xy") >= min_count)
-        .persist()
     )
-    _INTERMEDIATES.rollover([toks, uni, bg])
 
     # bounded driver jobs: totals + distinct count VALUES (heavy-tailed
     # counts ⇒ tiny domains), run concurrently like lm's model build

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
+from ..session import own
 
 # BM25 constants (standard Okapi defaults); dyadic b so b*dl/avgdl is
 # one multiply + one divide in both engines (no decimal drift).
@@ -82,10 +83,10 @@ def tfidf_keywords(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> Dat
     from .portable_ln import grid_nanos_col, literal_table, py_ln_combine
 
     spark = df.sparkSession
-    tf = doc_term_freq(df, id_col, text_col).persist()
+    tf = own(doc_term_freq(df, id_col, text_col))
     # dfreq feeds the distinct-df collect AND the score join; persist so
     # the (doc, token, tf) cache is aggregated once
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
+    dfreq = own(tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")))
     n = int(df.agg(F.count(F.lit(1))).collect()[0][0])
     # portable idf (module docstring): distinct df values are bounded
     # by distinct frequency cardinality, not vocab; the smoothed idf
@@ -180,7 +181,7 @@ def bm25_scores(
     # persist: tf (query-term matches only — tiny) feeds both the df
     # collect and the score join; without it the corpus is re-scanned
     # per consumer.
-    tf = matched.groupBy(id_col, "dl", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
+    tf = own(matched.groupBy(id_col, "dl", "token").agg(F.count(F.lit(1)).alias("tf")))
     df_rows = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).collect()
     # portable idf over the (≤ |query_terms|)-row df table; the
     # Robertson idf ln(1 + (N-df+0.5)/(df+0.5)) == ln((2N+2)/(2df+1)),
@@ -319,7 +320,7 @@ def bm25_batch_topk(
             "token"
         ),
     )
-    tf = matched.groupBy(id_col, "dl", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
+    tf = own(matched.groupBy(id_col, "dl", "token").agg(F.count(F.lit(1)).alias("tf")))
     df_rows = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).collect()
     # portable idf shared across the whole query batch (see bm25_scores)
     idf_tbl = literal_table(

@@ -8,19 +8,22 @@ the DuckDB oracle (registry_text).
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..operators.dedup import md5_int, tokenize
+from ..session import own
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic
 # language ID. Order matters: deterministic argmax tiebreak.
-LANG_PROFILES: dict[str, list[str]] = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "that"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "zu"],
-    "es": ["el", "la", "de", "los", "las", "y", "que", "es"],
-    "fr": ["le", "la", "les", "et", "des", "un", "une", "est"],
-}
+LANG_PROFILES = MappingProxyType({
+    "en": ("the", "a", "of", "and", "to", "in", "is", "that"),
+    "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
+    "es": ("el", "la", "de", "los", "las", "y", "que", "es"),
+    "fr": ("le", "la", "les", "et", "des", "un", "une", "est"),
+})
 
 PUNCT_CLASS = "[^.,;:!?]"
 ALPHA_CLASS = "[^a-zA-Z]"
@@ -32,7 +35,7 @@ def token_count(text: Column) -> Column:
     return F.size(tokenize(text))
 
 
-def stopword_hits(tokens: Column, stopwords: list[str]) -> Column:
+def stopword_hits(tokens: Column, stopwords: tuple[str, ...]) -> Column:
     """Count of tokens (with repeats) found in the stopword list."""
     arr = F.array(*[F.lit(w) for w in stopwords])
     return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t)))
@@ -127,11 +130,11 @@ def rolling_hash(text: Column) -> Column:
 # (DuckDB oracle): character classes, bounded repeats — no lookaround.
 # Replacement order matters: the id-number pattern is a substring shape
 # of the phone pattern, so it runs first.
-PII_PATTERNS: list[tuple[str, str]] = [
+PII_PATTERNS: tuple[tuple[str, str], ...] = (
     (r"\d{3}-\d{2}-\d{4}", "<ID>"),
     (r"\+?\d{3}[- ]\d{3}[- ]\d{4}", "<PHONE>"),
     (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-]
+)
 
 
 def redact_pii(text: Column) -> Column:
@@ -301,7 +304,7 @@ def token_surprisal(df, id_col: str, text_col: str):
     toks = df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token"))
     # counts feeds the distinct-n collect and the occurrence join;
     # persist so the corpus is tokenized once
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")).persist()
+    counts = own(toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")))
     n_total = int(toks.agg(F.count(F.lit(1))).collect()[0][0] or 0)
     # portable ln over the distinct count values, as exact grid nanos
     ln_tbl = literal_table(
@@ -425,14 +428,13 @@ def boilerplate_scrub(
     # rebuild pass; persist so tokenize+chunk runs once (the tf-idf
     # posting-list pattern — at warehouse scale this is a written
     # intermediate table, in-session a MEMORY_AND_DISK cache)
-    chunked = df.select(F.col(id_col), chunks_expr.alias("_chunks")).persist()
-    bp_hashes = (
+    chunked = own(df.select(F.col(id_col), chunks_expr.alias("_chunks")))
+    bp_hashes = own(
         chunked.select(F.explode("_chunks").alias("_c"))
         .groupBy(F.md5("_c").alias("_h"))
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .filter(F.col("_cnt") >= min_count)
         .select("_h")
-        .persist()
     )
     n_bp = bp_hashes.count()
 
@@ -619,14 +621,8 @@ def doc_repetition(df, id_col: str, text_col: str):
         F.col(id_col), F.explode(_bigrams(tokenize(F.col(text_col)))).alias("g")
     )
     # the (doc, bigram) count table feeds the rollup AND the top-1
-    # window; persist so the corpus tokenizes once.  Janitor-tracked:
-    # safe here (unlike prefix.py's cache) because no collected
-    # constant couples to this materialization — an early unpersist
-    # merely recomputes the same deterministic counts.
-    cnt = occ.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c")).persist()
-    from ..operators.dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([cnt])
+    # window; persist so the corpus tokenizes once.
+    cnt = own(occ.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c")))
     per = cnt.groupBy(id_col).agg(
         F.sum("c").cast("bigint").alias("n_bigrams"),
         F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0)))
@@ -671,7 +667,7 @@ GOPHER_SYMBOL_NUM, GOPHER_SYMBOL_DEN = 1, 10     # (hash+ellipsis)/words <= 0.1
 GOPHER_BULLET_NUM, GOPHER_BULLET_DEN = 9, 10     # bullet lines <= 90%
 GOPHER_ELLIPSIS_NUM, GOPHER_ELLIPSIS_DEN = 3, 10  # ellipsis lines <= 30%
 GOPHER_ALPHA_NUM, GOPHER_ALPHA_DEN = 4, 5        # words w/ alpha >= 80%
-GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 GOPHER_MIN_STOPWORDS = 2
 
 
@@ -783,11 +779,10 @@ def dedup_lines_global(df, id_col: str, text_col: str, chunk_tokens: int = 2):
         raise ValueError(f"chunk_tokens must be positive, got {k}")
     # persist: both the posexplode side and the per-doc totals consume
     # this tokenize+chunk projection; without it the whole-corpus
-    # tokenize chain evaluates twice (released by the session's
-    # clear_engine_caches between queries, as boilerplate_scrub does)
-    base = df.select(
-        F.col(id_col), chunk_array(tokenize(F.col(text_col)), k).alias("_chunks")
-    ).persist()
+    # tokenize chain evaluates twice
+    base = own(
+        df.select(F.col(id_col), chunk_array(tokenize(F.col(text_col)), k).alias("_chunks"))
+    )
     exploded = base.select(
         id_col, F.posexplode("_chunks").alias("_pos", "_chunk")
     )

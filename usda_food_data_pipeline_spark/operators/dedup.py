@@ -19,6 +19,8 @@ import pandas  # noqa: F401 — resolves pandas_udf postponed type hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import own
+
 
 def dedup_latest(
     df: DataFrame, key_cols: list[str], order_col: str, keep: str = "max"
@@ -310,88 +312,6 @@ class CheckpointJanitor:
         self._gen = set()
 
 
-class _IntermediateJanitor:
-    """Generational tracker for the persisted intermediates of
-    engine operators (MinHash signature tables, shingle/prefix
-    occupancy tables, quantized point tables, model count tables).
-
-    Those operators return LAZY DataFrames whose plans read the caches,
-    so the operator itself must not unpersist before returning.
-    Instead, each new tracked operator call retires the PREVIOUS call's
-    generation: by then the previous result has been consumed (the
-    registry/bench pattern — one query materializes before the next
-    builds), and if a caller still holds it lazily, unpersist merely
-    degrades that plan to recompute — never a wrong answer. A session
-    running the whole registry back-to-back therefore holds at most one
-    generation of intermediate blocks instead of accumulating one per
-    query until driver GC (see test_checkpoint_release.py).
-
-    Driver-side and single-generation by design.  Tracked (rollover)
-    call sites — ADVICE r11 low 2, kept current:
-
-    - dedup operators: minhash signatures (exact/LSH/incremental pair
-      generators), jaccard prefix tables, simhash fingerprints
-      (this module: minhash_lsh_pairs, jaccard_pairs_prefix,
-      dedup-exact fp, incremental sig_a/sig_b, containment sh_t,
-      simhash_neardup fp);
-    - kmeans family: the quantized point table in kmeans_assign,
-      pq_quantize, pq_adc_topk, ivf_adc_topk (operators/kmeans.py);
-    - model/count tables: functions/lm.py (uni+bg), functions/dsir.py
-      (dc), functions/pmi.py (toks+uni+bg), functions/textstats.py
-      (cnt), registry_text q_maxsim_retrieval (cnt), registry_select
-      (ex0, baskets), registry_curation (`track` of a persisted side).
-
-    CONTRACT for composites: at most one tracked-operator call may be
-    live per materialization — a composite that needs results from two
-    tracked operators must persist + count the first result and
-    ``track()`` it (lsh_recall_eval's pattern below) BEFORE invoking
-    the second, whose rollover frees the first call's build caches.
-    Every registry composite satisfies this today (dedup_clusters /
-    incremental_dedup contain exactly one tracked call;
-    lsh_recall_eval, split_leakage and training_pipeline use the
-    track() protocol — training_pipeline tracks its persisted deduped
-    table after the minhash rollover (r12); the kmeans-consumer
-    queries each call kmeans_assign once).
-    """
-
-    def __init__(self) -> None:
-        self._gen: list[DataFrame] = []
-
-    def rollover(self, dfs: list[DataFrame]) -> None:
-        self.release()
-        self._gen = list(dfs)
-
-    def track(self, df: DataFrame) -> None:
-        """Attach an ALREADY-MATERIALIZED persisted DataFrame to the
-        current generation so the next tracked operator call retires it
-        too.  For composites that must hold results from more than one
-        tracked operator (e.g. lsh_recall_eval joins exact-Jaccard truth
-        with LSH pairs): persist + count each side BEFORE invoking the
-        next tracked operator (whose rollover frees the previous
-        operator's build caches — harmless once the side is
-        materialized), then track the materialized side here."""
-        self._gen.append(df)
-
-    def release(self) -> None:
-        import contextlib
-
-        for df in self._gen:
-            with contextlib.suppress(Exception):
-                df.unpersist(False)
-        self._gen = []
-
-
-_INTERMEDIATES = _IntermediateJanitor()
-
-
-def release_dedup_caches() -> None:
-    """Free the persisted intermediates of the most recent pair-
-    generating dedup operator call (long-lived sessions can call this
-    after consuming a result instead of waiting for the next query's
-    rollover)."""
-    _INTERMEDIATES.release()
-
-
 def tokenize(col: Column) -> Column:
     """Lower-cased whitespace tokens (empty tokens removed)."""
     return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda t: t != F.lit(""))
@@ -503,9 +423,7 @@ def minhash_lsh_pairs(
     # the signature table feeds three plan branches (banding + two
     # candidate-verify attaches); persist it so shingling/hashing runs
     # once — at cluster scale this is a materialized intermediate table
-    sig = sig.persist()
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sig])
+    sig = own(sig)
 
     # band value = concat of its rows' minhashes; explode to (band_id,
     # bucket). The banded rows carry ONLY (doc_id, band, bucket) — the
@@ -759,7 +677,7 @@ def jaccard_pairs_prefix(
     ).withColumn("sz", F.size("sh"))
     # feeds the df-count, the prefix build, and both verify attaches —
     # materialize once (at cluster scale: an intermediate table)
-    sh_t = sh_t.persist()
+    sh_t = own(sh_t)
 
     ex = sh_t.select("doc_id_", "sz", F.explode("sh").alias("s"))
     dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_n"))
@@ -778,13 +696,10 @@ def jaccard_pairs_prefix(
     # without it every join side replays shingling + df + window (the
     # unpersisted form measured ~2× wall-clock at sf0.1)
     occ = prefix.groupBy("s").agg(F.count(F.lit(1)).alias("_occ"))
-    withocc = (
+    withocc = own(
         prefix.join(occ, "s")
         .withColumn("_hot", (F.col("_occ") > max_bucket).cast("long"))
-        .persist()
     )
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sh_t, withocc])
     # per-doc constants for the candidate filter: size + hot-entry
     # count. One slim row per doc, joined back onto the AGGREGATED pair
     # stream — never carried through the collision exchange. Join
@@ -1075,16 +990,14 @@ def simhash_neardup_pairs(
     mask = (1 << r) - 1
     from ..sources.tables import spread
 
-    fp = (
+    fp = own(
         spread(df)
         .select(
             F.col(id_col).alias("doc_id_"),
             simhash_token_hashes_wide(tokenize(F.col(text_col)), bits).alias("_sh"),
         )
         .select("doc_id_", simhash_from_hashes(F.col("_sh"), bits).alias("fp"))
-        .persist()
     )
-    _INTERMEDIATES.rollover([fp])
     banded = fp.select(
         "doc_id_",
         "fp",
@@ -1207,14 +1120,16 @@ def connected_components(
     # — unpersist() is a no-op on checkpoint blocks and ContextCleaner
     # only runs on driver GC, so storage otherwise grows with rounds.
     janitor = CheckpointJanitor(labels.sparkSession)
-    for _ in range(max_iter):
-        new_labels = janitor.checkpoint(propagate(labels))
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            converged = True
-            break
-    und.unpersist()
+    try:
+        for _ in range(max_iter):
+            new_labels = janitor.checkpoint(propagate(labels))
+            changed = new_labels.filter(F.col("_changed")).limit(1).count()
+            labels = new_labels.drop("_changed")
+            if changed == 0:
+                converged = True
+                break
+    finally:
+        und.unpersist()
     if not converged:
         # silent non-convergence would return WRONG components (and
         # mismatch the exact recursive-CTE oracle) — fail loudly instead
@@ -1270,7 +1185,9 @@ def _connected_components_star(
     xxhash64 checksum — an aggregate probe, no collect); at the fixpoint
     every component is a star centered on its min node."""
     all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-    e = (
+    # the persist()'d input edge list; every later generation is a
+    # localCheckpoint
+    e = first_gen = (
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -1289,28 +1206,31 @@ def _connected_components_star(
         ).collect()[0]
         return row["n"], row["h"]
 
-    first_gen = e  # the persist()'d input edge list
-    prev_fp = fingerprint(e)
     converged = False
     # CheckpointJanitor frees the superseded generation's blocks each
     # round — executor storage stays one-generation flat however many
     # rounds the contraction takes (see test_checkpoint_release)
     janitor = CheckpointJanitor(e.sparkSession)
-    for _ in range(max_iter):
-        # localCheckpoint (not persist): each round's plan references the
-        # previous round twice per star op, so the LOGICAL plan doubles
-        # every round and Catalyst re-optimization comes to dominate
-        # wall-clock (~70s/round by round 3 on a 999-edge chain);
-        # checkpointing truncates lineage so each round plans O(1) work
-        new_e = janitor.checkpoint(_small_star(_large_star(e)))
-        fp = fingerprint(new_e)
-        if e is first_gen:
-            e.unpersist()  # real persist() → real release
-        e = new_e
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
+    try:
+        prev_fp = fingerprint(e)
+        for _ in range(max_iter):
+            # localCheckpoint (not persist): each round's plan references
+            # the previous round twice per star op, so the LOGICAL plan
+            # doubles every round and Catalyst re-optimization comes to
+            # dominate wall-clock (~70s/round by round 3 on a 999-edge
+            # chain); checkpointing truncates lineage so each round
+            # plans O(1) work
+            new_e = janitor.checkpoint(_small_star(_large_star(e)))
+            fp = fingerprint(new_e)
+            if e is first_gen:
+                first_gen.unpersist()  # real persist() → real release
+            e = new_e
+            if fp == prev_fp:
+                converged = True
+                break
+            prev_fp = fp
+    finally:
+        first_gen.unpersist()
     if not converged:
         raise RuntimeError(
             f"star connected_components did not converge within {max_iter} rounds"
@@ -1356,10 +1276,9 @@ def minhash_lsh_pairs_cross(
             F.col(id_col).alias("doc_id_"),
             word_shingles(tokenize(F.col(text_col)), shingle_n).alias("shingles"),
         )
-        return (
+        return own(
             s.select("doc_id_", "shingles", minhash_base(F.col("shingles")).alias("_mhbase"))
             .select("doc_id_", "shingles", *minhash_signature(F.col("_mhbase"), num_hashes))
-            .persist()
         )
 
     def banded_of(sig: DataFrame) -> DataFrame:
@@ -1383,8 +1302,6 @@ def minhash_lsh_pairs_cross(
         )
 
     sig_a, sig_b = sig_of(left), sig_of(right)
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sig_a, sig_b])
     banded_a = cap_bucket_size(banded_of(sig_a), ["band", "bucket"], max_bucket, observation)
     banded_b = cap_bucket_size(banded_of(sig_b), ["band", "bucket"], max_bucket, observation_right)
     cand = (
@@ -1548,7 +1465,7 @@ def containment_pairs_prefix(
             )
         ).alias("sh"),
     ).withColumn("sz", F.size("sh"))
-    sh_t = sh_t.persist()
+    sh_t = own(sh_t)
 
     ex = sh_t.select("doc_id_", "sz", F.explode("sh").alias("s"))
     # NOT persisted: caching this vocab-sized aggregate replaces the
@@ -1649,7 +1566,6 @@ def containment_pairs_prefix(
     # plans static by default).  Only when hot codes exist does the
     # doc-level eligibility probe (one prefix-window pass) and then
     # possibly the L2 branch run.
-    _INTERMEDIATES.rollover([sh_t])
     # single-pass existence aggregates, not filter().limit(1).count():
     # CollectLimit executes incrementally (1 → 4 → 16 … partitions,
     # spark.sql.limit.scaleUpFactor) and on the EMPTY result — the

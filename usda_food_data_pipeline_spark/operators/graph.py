@@ -90,68 +90,72 @@ def pagerank(
             .distinct()
             .persist()
         )
-    n = nodes.count()  # 1-row statistic, same spirit as the CC convergence probe
-    base = (1.0 - damping) / n
-    small = n <= broadcast_nodes_limit
+    ed_loop = ed
+    try:
+        n = nodes.count()  # 1-row statistic, same spirit as the CC convergence probe
+        base = (1.0 - damping) / n
+        small = n <= broadcast_nodes_limit
 
-    if small:
-        ed_loop = ed
-    else:
-        # beyond the broadcast limit the share join degrades to a
-        # shuffle — pay the edge exchange ONCE here, not per iteration:
-        # the cached hash-partitioned layout satisfies the join's
-        # distribution requirement every round, so only the nodes-sized
-        # shares table moves per iteration. outdeg materializes from
-        # the original cache first so the source lineage never replays.
-        outdeg.count()
-        ed_loop = ed.repartition("src").persist()
-        ed_loop.count()
+        if not small:
+            # beyond the broadcast limit the share join degrades to a
+            # shuffle — pay the edge exchange ONCE here, not per
+            # iteration: the cached hash-partitioned layout satisfies
+            # the join's distribution requirement every round, so only
+            # the nodes-sized shares table moves per iteration. outdeg
+            # materializes from the original cache first so the source
+            # lineage never replays.
+            outdeg.count()
+            ed_loop = ed.repartition("src").persist()
+            ed_loop.count()
+            ed.unpersist()
+
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        from .dedup import CheckpointJanitor
+
+        janitor = CheckpointJanitor(edges.sparkSession)
+        for _ in range(iters):
+            # per-source share on the SMALL table; sinks (no out-edges)
+            # drop out of the inner join and correctly contribute nothing
+            shares = ranks.join(outdeg, "node").select(
+                "node", (F.col("rank") / F.col("outdeg")).alias("share")
+            )
+            # non-broadcast: hash-build on the nodes-sized shares side
+            # and STREAM the pre-partitioned edges (no per-iteration
+            # edge sort — a sort-merge join would re-sort the edge cache
+            # every round)
+            r = F.broadcast(shares) if small else shares.hint("shuffle_hash")
+            contribs = ed_loop.join(r, ed_loop["src"] == r["node"]).select(
+                F.col("dst").alias("node2"), F.col("share").alias("c")
+            )
+            summed = contribs.groupBy(F.col("node2").alias("node")).agg(
+                (F.sum(F.floor(F.col("c") * F.lit(MASS_GRID))) / F.lit(MASS_GRID)).alias(
+                    "in_mass"
+                )
+            )
+            # symmetric graph ⇒ every node receives mass; keep the left
+            # join anyway so directed graphs with sink-only nodes stay
+            # correct
+            ranks = (
+                nodes.join(summed, "node", "left")
+                .select(
+                    "node",
+                    (F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))).alias(
+                        "rank"
+                    ),
+                )
+            )
+            if checkpoint:
+                # superseded rank generations freed explicitly each
+                # round (unpersist is a no-op on checkpoint blocks;
+                # ContextCleaner waits for driver GC) — storage stays
+                # one-generation flat
+                ranks = janitor.checkpoint(ranks)
+        return ranks
+    finally:
         ed.unpersist()
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    from .dedup import CheckpointJanitor
-
-    janitor = CheckpointJanitor(edges.sparkSession)
-    for _ in range(iters):
-        # per-source share on the SMALL table; sinks (no out-edges) drop
-        # out of the inner join and correctly contribute nothing
-        shares = ranks.join(outdeg, "node").select(
-            "node", (F.col("rank") / F.col("outdeg")).alias("share")
-        )
-        # non-broadcast: hash-build on the nodes-sized shares side and
-        # STREAM the pre-partitioned edges (no per-iteration edge sort
-        # — a sort-merge join would re-sort the edge cache every round)
-        r = F.broadcast(shares) if small else shares.hint("shuffle_hash")
-        contribs = ed_loop.join(r, ed_loop["src"] == r["node"]).select(
-            F.col("dst").alias("node2"), F.col("share").alias("c")
-        )
-        summed = contribs.groupBy(F.col("node2").alias("node")).agg(
-            (F.sum(F.floor(F.col("c") * F.lit(MASS_GRID))) / F.lit(MASS_GRID)).alias(
-                "in_mass"
-            )
-        )
-        # symmetric graph ⇒ every node receives mass; keep the left join
-        # anyway so directed graphs with sink-only nodes stay correct
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-        )
-        if checkpoint:
-            # superseded rank generations freed explicitly each round
-            # (unpersist is a no-op on checkpoint blocks; ContextCleaner
-            # waits for driver GC) — storage stays one-generation flat
-            ranks = janitor.checkpoint(ranks)
-    # small path: ed_loop IS ed; non-small: ed was released at setup
-    ed_loop.unpersist()
-    outdeg.unpersist()
-    if not symmetric:
+        ed_loop.unpersist()
+        outdeg.unpersist()
         nodes.unpersist()
-    return ranks
 
 
 def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
@@ -176,7 +180,7 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     # (r12 opt, 0.87× same-session A/B: exchange reuse does not cover
     # the full fan-out here, unlike the 2-arm LPA/kcore unions where a
     # matching persist measured flat and was not landed); released
-    # below once the 1-row result is eagerly checkpointed
+    # once the 1-row result is eagerly checkpointed, or the query raises
     e = pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).distinct().persist()
     und = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
     deg = und.groupBy(F.col("x").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
@@ -213,10 +217,11 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
         .crossJoin(e.agg(F.count(F.lit(1)).alias("n_edges")))
         .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
     )
-    result = out.localCheckpoint(eager=True)
-    oriented.unpersist()
-    e.unpersist()
-    return result
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        oriented.unpersist()
+        e.unpersist()
 
 
 def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
@@ -314,9 +319,10 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
         )
     # sever the unrolled lineage so downstream consumers don't replay
     # three join rounds per action, then release the edge cache
-    out = labels.select("n", "label").localCheckpoint(eager=True)
-    und.unpersist()
-    return out
+    try:
+        return labels.select("n", "label").localCheckpoint(eager=True)
+    finally:
+        und.unpersist()
 
 
 def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
@@ -374,19 +380,20 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
 
     janitor = CheckpointJanitor(edges.sparkSession)
     surv = und.select("n").distinct()
-    for _ in range(rounds):
-        deg = (
+    try:
+        for _ in range(rounds):
+            deg = (
+                und.join(surv, "n")
+                .join(surv.select(F.col("n").alias("m")), "m")
+                .groupBy("n")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            surv = janitor.checkpoint(deg.filter(F.col("deg") >= k).select("n"))
+        return janitor.checkpoint(
             und.join(surv, "n")
             .join(surv.select(F.col("n").alias("m")), "m")
             .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("deg"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
         )
-        surv = janitor.checkpoint(deg.filter(F.col("deg") >= k).select("n"))
-    out = janitor.checkpoint(
-        und.join(surv, "n")
-        .join(surv.select(F.col("n").alias("m")), "m")
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    )
-    und.unpersist()
-    return out
+    finally:
+        und.unpersist()

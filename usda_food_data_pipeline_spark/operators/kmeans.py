@@ -57,6 +57,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import own
+
 SCALE = 1024      # input quantization: floor(x * SCALE) + SHIFT
 SHIFT = 1024
 GRID = 10**3      # centroid coordinates are integers on a 1/GRID grid
@@ -113,13 +115,9 @@ def kmeans_assign(
 
     The quantized point table feeds the seed collect, every training
     round, and the final assignment — persist it for the life of the
-    query plan (r12 opt; the next registry query's janitor rollover
-    retires the blocks, the ivf_adc_topk pattern).
+    query run (r12 opt, the ivf_adc_topk pattern).
     """
-    pts = _quantized(emb, id_col, vec_col).persist()
-    from .dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([pts])
+    pts = own(_quantized(emb, id_col, vec_col))
     cents, dim = _train_cents(pts, id_col, k, n_iter)
     return _assign(pts, cents, dim).select(id_col, "cluster", "d2")
 
@@ -398,12 +396,8 @@ def pq_quantize(
 
     # one quantized point table feeds the seed collect, every training
     # round and the final code projection — persist it for the life of
-    # the query plan (r12 opt, the ivf_adc_topk pattern; the next
-    # registry query's janitor rollover retires the blocks)
-    pts = _quantized(emb, id_col, vec_col).persist()
-    from .dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([pts])
+    # the query run (r12 opt, the ivf_adc_topk pattern)
+    pts = own(_quantized(emb, id_col, vec_col))
     cents = _train_pq(pts, id_col, m, k, n_iter, w)
     k_eff = len(cents[0])
     d2 = None
@@ -463,11 +457,8 @@ def pq_adc_topk(
     w = dim // m
 
     # persist the quantized point table across seed/round/query-row/
-    # code jobs (r12 opt, the ivf_adc_topk pattern; janitor-retired)
-    pts = _quantized(emb, id_col, vec_col).persist()
-    from .dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([pts])
+    # code jobs (r12 opt, the ivf_adc_topk pattern)
+    pts = own(_quantized(emb, id_col, vec_col))
     cents = _train_pq(pts, id_col, m, k, n_iter, w)
     k_eff = len(cents[0])
     codes = _assign_multi(pts, cents).select(
@@ -606,12 +597,8 @@ def ivf_adc_topk(
 
     # one quantized point table feeds the seed collect, every training
     # round, the query-row collect and the final assignment — persist it
-    # for the life of the query plan (the next registry query's janitor
-    # rollover retires the blocks)
-    pts = _quantized(emb, id_col, vec_col).persist()
-    from .dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([pts])
+    # for the life of the query run
+    pts = own(_quantized(emb, id_col, vec_col))
     # coarse + fine codebooks are independent: train them in the SAME
     # per-round jobs (was: two _train_pq calls = 2x the round jobs and
     # seed collects; r11-opt same-session A/B below)

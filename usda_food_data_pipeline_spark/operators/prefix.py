@@ -29,13 +29,12 @@ per-partition stage is therefore ``localCheckpoint``-ed (lineage CUT,
 not just cached): the totals collect materializes the checkpoint
 blocks, and the returned plan reads those same blocks — re-execution
 of the exchange is impossible by construction, not merely unlikely.
-This cache deliberately does NOT join the shared dedup janitor
-(ADVICE r07: a janitor rollover from any subsequent tracked operator
-would have unpersisted a correctness-load-bearing persist() before the
-caller consumed the output, re-running the exchange under a new
-sampling seed against the stale offset map).  The blocks release when
-the returned DataFrame is garbage-collected, like label_propagation's
-checkpoint generations.
+The checkpoint is deliberately NOT owned by the query run (ADVICE r07:
+releasing a correctness-load-bearing persist() before the caller
+consumed the output would re-run the exchange under a new sampling seed
+against the stale offset map).  The blocks release when the returned
+DataFrame is garbage-collected, like label_propagation's checkpoint
+generations.
 
 ``token_budget_select`` applies this to the selection step most
 training-data pipelines end with: order the corpus by a quality score
@@ -83,10 +82,9 @@ def global_prefix_sum(
     # action) materializes the checkpoint blocks, cutting lineage — the
     # offsets and the returned output can only ever read ONE physical
     # partitioning (see module docstring).  Own lifetime, deliberately
-    # NOT janitor-tracked (ADVICE r07 medium): this block is
+    # NOT run-owned (ADVICE r07 medium): this block is
     # correctness-load-bearing for the returned plan, so it must outlive
-    # any interleaved dedup-operator call; it releases with the
-    # DataFrame reference.
+    # the run that built it; it releases with the DataFrame reference.
     local = ranged.withColumn("_lcum", F.sum(value_col).over(w)).localCheckpoint(
         eager=False
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import own
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -260,32 +262,32 @@ def kmeans_lloyd(
             as_double_array(vec_col).alias(vec_col),
         )
     )
-    for _ in range(iters):
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-        ex = assigned.select(
-            "centroid_id", F.posexplode(as_double_array(vec_col)).alias("dim", "val")
-        )
-        means = (
-            ex.groupBy("centroid_id", "dim")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s.m
-                ).alias("new_vec")
+    try:
+        for _ in range(iters):
+            assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+            ex = assigned.select(
+                "centroid_id", F.posexplode(as_double_array(vec_col)).alias("dim", "val")
             )
-        )
-        centroids = (
-            centroids.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce("new_vec", F.col(vec_col)).alias(vec_col),  # empty cluster
+            means = (
+                ex.groupBy("centroid_id", "dim")
+                .agg(F.avg("val").alias("m"))
+                .groupBy("centroid_id")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s.m
+                    ).alias("new_vec")
+                )
             )
-            .persist()
-        )
-        centroids.count()  # materialize this generation
-    embeddings.unpersist()
-    return centroids
+            centroids = own(
+                centroids.join(means, "centroid_id", "left").select(
+                    "centroid_id",
+                    F.coalesce("new_vec", F.col(vec_col)).alias(vec_col),  # empty cluster
+                )
+            )
+            centroids.count()  # materialize this generation
+        return centroids
+    finally:
+        embeddings.unpersist()
 
 
 def quantize_int8(vec: Column | str) -> tuple[Column, Column]:

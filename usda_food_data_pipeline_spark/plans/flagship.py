@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.cleaning import grid_round_col, sql_grid_round
 from ..operators.dedup import dedup_latest
 from ..operators.pivot import group_avg_pivot
+from ..session import own
 from ..sources.tables import load_table
 
 RETURNFLAG_VALUES = ["A", "N", "R"]
@@ -48,7 +49,7 @@ def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `latest` feeds two branches (join spine + lineitem pruning); persist
     # so the dedup window runs once. One row per customer — small at any
     # scale that has a customer dimension.
-    latest = latest.persist()
+    latest = own(latest)
 
     # Prune lineitem to surviving orders BEFORE the pivot agg — the
     # semi-join pushdown the reference lacked (SURVEY §4).

@@ -1,12 +1,15 @@
 """End-to-end training-data preparation pipeline (the north-star
 composite): quality gate → exact dedup → MinHash-LSH near-dup
-clustering → canonical survivors, as ONE lazy Spark plan.
+clustering → canonical survivors.
 
 This is what the engine exists for at 100 TB: every stage is a
-previously-verified operator (functions.textstats, operators.dedup) and
-the whole chain is still a single DAG — filters push into the scan,
-the near-dup self-join only sees the quality-surviving subset, and the
-iterative clustering runs on the (persisted) candidate-pair edge list.
+previously-verified operator (functions.textstats, operators.dedup).
+Building the plan runs eager jobs: the exact-dedup table is persisted
+and counted, and the iterative clustering runs its rounds on the
+(persisted) candidate-pair edge list, checkpointing each round. The
+returned survivor plan reads those materializations; filters push into
+the scan and the near-dup self-join only sees the quality-surviving
+subset.
 
 Stage map (all oracle-verified individually and, via the
 ``training_pipeline`` query, end-to-end):
@@ -24,12 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import quality_score, token_count
-from ..operators.dedup import (
-    _INTERMEDIATES,
-    connected_components,
-    dedup_latest,
-    minhash_lsh_pairs,
-)
+from ..operators.dedup import connected_components, dedup_latest, minhash_lsh_pairs
+from ..session import own
 from ..sources.tables import load_table
 
 QUALITY_MIN = 0.905
@@ -60,20 +59,14 @@ def training_pipeline(
     # subplan CSE, so unpersisted each consumer re-runs the gate +
     # content-hash window over the full corpus text (r12 opt: 0.85×
     # same-session A/B; at scale this is 2 corpus text passes removed).
-    # Janitor protocol: materialize BEFORE minhash_lsh_pairs (whose
-    # rollover retires the previous query's generation), then track()
-    # so the NEXT tracked call retires this cache too.
-    deduped = (
+    deduped = own(
         dedup_latest(
             gated.withColumn("_h", F.md5("text")), ["_h"], "doc_id", keep="min"
-        )
-        .drop("_h")
-        .persist()
+        ).drop("_h")
     )
     deduped.count()
 
     pairs = minhash_lsh_pairs(deduped, "doc_id", "text", **MINHASH_PARAMS)
-    _INTERMEDIATES.track(deduped)
     components = connected_components(
         pairs, deduped.select(F.col("doc_id").alias("node")), "id_a", "id_b"
     )

@@ -44,26 +44,6 @@ class QuerySpec:
 
 _SPECS: list[QuerySpec] = []
 
-# guard telemetry for the pair-generating registered queries (r05
-# verdict task 5): each guarded query attaches a fresh GuardStats when
-# its plan is built; bench.py reads the counters after the run so a
-# production-scale corpus that DOES cross a bucket cap shows up in the
-# BENCH artifacts as nonzero guard_dropped_* instead of silently
-# reduced recall. Keyed by query name; rebuilt per plan construction.
-GUARD_STATS: dict[str, object] = {}
-
-
-def guard_observation(name: str):
-    """Fresh GuardStats registered under ``name`` for bench/driver
-    visibility. Reading ``GUARD_STATS[name].get`` runs one aggregate
-    action over the guarded keys-only occupancy projection."""
-    from .operators.dedup import GuardStats
-
-    obs = GuardStats()
-    GUARD_STATS[name] = obs
-    return obs
-
-
 def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn], QueryFn]:
     def wrap(fn: QueryFn) -> QueryFn:
         _SPECS.append(QuerySpec(name, fn, oracle, doc))

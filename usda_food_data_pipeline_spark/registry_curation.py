@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .operators.dedup import md5_int, oracle_md5_int_sql, tokenize, word_shingles
 from .registry import register
 from .registry_text import TOKS_SQL, shingles_sql
+from .session import own
 from .sources.tables import load_table
 from .sources.tables import spread as _spread
 
@@ -574,14 +575,9 @@ def q_split_leakage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the two aggregates both read the verified pair stream, which is
     # referenced three times (count + two union arms) — persist the
-    # OUTPUT-SIZED pair table once so the LSH build runs once, and hand
-    # it to the janitor so the next registry query retires the blocks
-    # (the lsh_recall_eval composite discipline)
-    from .operators.dedup import _INTERMEDIATES
-
-    p = p.persist()
+    # OUTPUT-SIZED pair table once so the LSH build runs once
+    p = own(p)
     p.count()
-    _INTERMEDIATES.track(p)
     n_pairs = p.groupBy("split_a", "split_b").agg(F.count(F.lit(1)).alias("n_pairs"))
     unioned = (
         p.select("split_a", "split_b", F.col("id_a").alias("d"))

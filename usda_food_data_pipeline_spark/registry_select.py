@@ -22,12 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.dedup import (
-    _INTERMEDIATES,
-    minhash_lsh_pairs,
-    tokenize,
-    word_shingles,
-)
+from .operators.dedup import minhash_lsh_pairs, tokenize, word_shingles
 from .registry import register
 from .registry_text import (
     TOKS_SQL,
@@ -38,6 +33,7 @@ from .registry_text import (
     minhash_pairs_ctes,
     shingles_sql,
 )
+from .session import own
 from .sources.tables import load_table
 from .sources.tables import spread as _spread
 
@@ -176,13 +172,14 @@ def q_coverage_greedy_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop rounds, not the data layout.
     """
     docs = _spread(load_table(spark, sf_dir, "documents"))
-    ex0 = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokenize(F.col("text")), _SHINGLE_N))
-        ).alias("t"),
-    ).persist()
-    _INTERMEDIATES.rollover([ex0])
+    ex0 = own(
+        docs.select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(word_shingles(tokenize(F.col("text")), _SHINGLE_N))
+            ).alias("t"),
+        )
+    )
 
     rows: list[tuple[int, int, int]] = []
     sel_ids: list[int] = []
@@ -380,7 +377,7 @@ def q_jaccard_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard value is one IEEE division of exact integers — the
     attested cross-engine float convention.
     """
-    from .registry import guard_observation
+    from .session import guard
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
@@ -391,7 +388,7 @@ def q_jaccard_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_BANDS,
         shingle_n=_SHINGLE_N,
         jaccard_threshold=_MH_THRESHOLD,
-        observation=guard_observation("jaccard_knn_graph"),
+        observation=guard("jaccard_knn_graph"),
     )
     sym = pairs.select(
         F.col("id_a").alias("doc_id"), F.col("id_b").alias("nb_id"), "jaccard"
@@ -943,8 +940,7 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    baskets = baskets.persist()
-    _INTERMEDIATES.rollover([baskets])
+    baskets = own(baskets)
     n = baskets.agg(F.count("*").cast("bigint").alias("n_orders"))
     s = (
         baskets.select(F.explode("parts").alias("pk"))

@@ -221,13 +221,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     b·r-tunable precision is acceptable -> dedup_minhash_lsh (same
     verified-exact pair values, band-blocked candidates)."""
     from .operators.dedup import jaccard_pairs_prefix
-    from .registry import guard_observation
+    from .session import guard
 
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs_prefix(
         docs, "doc_id", "text",
         threshold_num=_NJ_TN, threshold_den=_NJ_TD, shingle_n=2,
-        observation=guard_observation("dedup_ngram_jaccard"),
+        observation=guard("dedup_ngram_jaccard"),
     )
 
 
@@ -338,14 +338,14 @@ SELECT id_a, id_b, jaccard FROM mh_pairs
     f"MinHash({_NUM_HASHES})+LSH({_BANDS} bands x {_ROWS_PER_BAND} rows) pairs, verified by exact Jaccard",
 )
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .registry import guard_observation
+    from .session import guard
 
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         docs, "doc_id", "text",
         num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N,
         jaccard_threshold=_MH_THRESHOLD,
-        observation=guard_observation("dedup_minhash_lsh"),
+        observation=guard("dedup_minhash_lsh"),
     )
 
 
@@ -384,13 +384,12 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-(1-s^r)^b.  Truth comes from the exact prefix-filter operator
     (contractual recall), at the SAME shingle width as the LSH side.
 
-    Composite-janitor discipline (operators/dedup._IntermediateJanitor):
-    each tracked operator's output is persisted and MATERIALIZED before
-    the next tracked call (whose rollover frees the previous build
-    caches), then track()-ed so the next registry query retires it.
-    Bucket ids are floor(jaccard*10) with the identical double op order
-    in both engines (bit-equal since the jaccard values themselves are
-    attested by dedup_ngram_jaccard/dedup_minhash_lsh).
+    Each side is persisted and materialized before the other is built,
+    and its build caches are freed once it is, so the final join reads
+    two cached pair tables and nothing else stays cached.  Bucket ids
+    are floor(jaccard*10) with the identical double op order in both
+    engines (bit-equal since the jaccard values themselves are attested
+    by dedup_ngram_jaccard/dedup_minhash_lsh).
 
     ELIGIBILITY NOTE (same contract as containment_pairs): both
     operators cap oversized blocks, and they cap on DIFFERENT keys —
@@ -404,32 +403,25 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive exact operator — that cost is the point of the
     measurement, exactly like adc_recall_eval's brute-force side).
     """
-    from .operators.dedup import (
-        _INTERMEDIATES,
-        jaccard_pairs_prefix,
-        minhash_lsh_pairs,
-    )
-    from .registry import guard_observation
+    from .operators.dedup import jaccard_pairs_prefix, minhash_lsh_pairs
+    from .session import guard, own_materialized
 
-    obs = guard_observation("lsh_recall_eval")
+    obs = guard("lsh_recall_eval")
     docs = load_table(spark, sf_dir, "documents")
-    truth = jaccard_pairs_prefix(
-        docs, "doc_id", "text",
-        threshold_num=_NJ_TN, threshold_den=_NJ_TD, shingle_n=_SHINGLE_N,
-        observation=obs,
-    ).persist()
-    truth.count()
-    # minhash's rollover frees the prefix operator's BUILD caches —
-    # harmless, truth is materialized above. Do NOT track truth before
-    # this call or the rollover would free truth itself.
-    lsh = minhash_lsh_pairs(
-        docs, "doc_id", "text",
-        num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N,
-        jaccard_threshold=_MH_THRESHOLD, observation=obs,
-    ).select("id_a", "id_b", F.lit(1).alias("_hit")).persist()
-    lsh.count()
-    _INTERMEDIATES.track(truth)
-    _INTERMEDIATES.track(lsh)
+    truth = own_materialized(
+        lambda: jaccard_pairs_prefix(
+            docs, "doc_id", "text",
+            threshold_num=_NJ_TN, threshold_den=_NJ_TD, shingle_n=_SHINGLE_N,
+            observation=obs,
+        )
+    )
+    lsh = own_materialized(
+        lambda: minhash_lsh_pairs(
+            docs, "doc_id", "text",
+            num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N,
+            jaccard_threshold=_MH_THRESHOLD, observation=obs,
+        ).select("id_a", "id_b", F.lit(1).alias("_hit"))
+    )
     return (
         truth.join(lsh, ["id_a", "id_b"], "left")
         .groupBy(
@@ -504,12 +496,12 @@ WHERE bit_count(xor(a.fp, b.fp)) <= {max_hamming}
 )
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_neardup_pairs
-    from .registry import guard_observation
+    from .session import guard
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_neardup_pairs(
         docs, "doc_id", "text",
-        observation=guard_observation("simhash_neardup"),
+        observation=guard("simhash_neardup"),
     )
 
 
@@ -2371,14 +2363,21 @@ def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(ch=_MAXSIM_CH, dim=_EMBED_DIM)
     from .operators.dedup import md5_int, tokenize
 
-    from .operators.dedup import _INTERMEDIATES
+    from .session import own
     from .sources.tables import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok_ex = docs.select(
         "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "tok")
     )
-    cnt = (
+    # the bucket-count table feeds FOUR plan branches (nrm, the
+    # query-side slices qcnt/qnrm, and the dot-product join): the
+    # unpersisted form re-ran the tokenize+posexplode+md5 subtree per
+    # branch — 4 corpus scans in the executed plan
+    # (plans/r11/maxsim_retrieval_before.txt). One materialized (doc,
+    # chunk, bucket) table is corpus-token-bounded and at cluster scale
+    # is exactly the intermediate a ColBERT indexer would persist.
+    cnt = own(
         tok_ex.select(
             "doc_id",
             (F.col("pos") / _MAXSIM_CH).cast("bigint").alias("chunk_id"),
@@ -2386,19 +2385,7 @@ def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "chunk_id", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-        # the bucket-count table feeds FOUR plan branches (nrm, the
-        # query-side slices qcnt/qnrm, and the dot-product join): the
-        # unpersisted form re-ran the tokenize+posexplode+md5 subtree
-        # per branch — 4 corpus scans in the executed plan
-        # (plans/r11/maxsim_retrieval_before.txt). One materialized
-        # (doc, chunk, bucket) table is corpus-token-bounded and at
-        # cluster scale is exactly the intermediate a ColBERT indexer
-        # would persist.
-        .persist()
     )
-    # retire the previous query's tracked intermediates; track cnt so
-    # the next registry query retires it (the shared janitor discipline)
-    _INTERMEDIATES.rollover([cnt])
     nrm = cnt.groupBy("doc_id", "chunk_id").agg(
         F.sum(F.col("c") * F.col("c")).alias("sq")
     )
@@ -3491,7 +3478,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles (portable 48-bit codes).
     """
     from .operators.dedup import containment_pairs_prefix
-    from .registry import guard_observation
+    from .session import guard
     from .sources.tables import spread
 
     # spread: the CPU-heavy shingle/hash projection (and the plan-build
@@ -3504,7 +3491,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         _CT_TN,
         _CT_TD,
-        observation=guard_observation("containment_pairs"),
+        observation=guard("containment_pairs"),
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register
+from .session import own
 from .sources.tables import load_table
 
 _LATE_DAYS = 90
@@ -243,16 +244,14 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     eu = _eu_suppliers(spark, sf_dir).select("s_suppkey")
     amount = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,6)")
-    per_part = (
+    # persisted: the global total and the HAVING filter both consume
+    # this part-cardinality aggregate — without the cache Spark has no
+    # CTE materialization and the total's subtree RE-SCANS the lineitem
+    # fact (two full fact scans at 100 TB, seen in the executed plan)
+    per_part = own(
         li.join(F.broadcast(eu), li.l_suppkey == eu.s_suppkey, "left_semi")
         .groupBy(F.col("l_partkey").alias("part_key"))
         .agg(F.sum(amount).alias("val"))
-        # persisted: the global total and the HAVING filter both consume
-        # this part-cardinality aggregate — without the cache Spark has
-        # no CTE materialization and the total's subtree RE-SCANS the
-        # lineitem fact (two full fact scans at 100 TB, seen in the
-        # executed plan)
-        .persist()
     )
     total = per_part.agg(
         F.sum("val").alias("tot"), F.count(F.lit(1)).alias("npart")

@@ -137,12 +137,12 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall); the sign-bit bucket is the semantic_dedup scheme whose
     occupancy tracks embedding-space density (sf1: max bucket 160,
     zero drops)."""
-    from .registry import guard_observation
+    from .session import guard
 
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup_pairs(
         emb, threshold=0.3, bucket_bits=8,
-        observation=guard_observation("embedding_neardup"),
+        observation=guard("embedding_neardup"),
     )
 
 
@@ -346,12 +346,12 @@ WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import semantic_dedup
-    from .registry import guard_observation
+    from .session import guard
 
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup(
         emb, threshold=0.3, bucket_bits=8,
-        observation=guard_observation("semantic_dedup"),
+        observation=guard("semantic_dedup"),
     )
 
 
@@ -482,14 +482,14 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     no exact trigram still lands near its source in embedding space.
     Every-10th vector stands in for the held-out benchmark set."""
     from .operators.similarity import semantic_decontaminate
-    from .registry import guard_observation
+    from .session import guard
 
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     bench = emb.filter(F.col("vec_id") % 10 == 0)
     return semantic_decontaminate(
         corpus, bench, threshold=0.3, bucket_bits=8,
-        observation=guard_observation("semantic_decontaminate"),
+        observation=guard("semantic_decontaminate"),
     )
 
 

@@ -9,8 +9,10 @@ for the (rare) pandas-UDF paths.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -97,13 +99,83 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def clear_engine_caches(spark: SparkSession) -> None:
-    """Release DataFrames persisted inside operators (MinHash signature
-    tables, component label generations, flagship's dedup spine).
+class QueryRun:
+    """Owner of every cache one query persists.
 
-    Those persists are load-bearing within a single query execution but
-    cannot be unpersisted by the operator itself (the result is lazy).
-    Long-lived sessions that run many engine queries should call this
-    between logical units — bench.py and tools/check_correctness.py do.
+    Operators return lazy plans that read ``persist()``-ed intermediates,
+    so only the caller that materializes the result knows when those
+    caches are dead. That caller opens a run around building and
+    materializing the query; :func:`own` registers each persist with the
+    active run, and leaving the ``with`` block (normally or by an
+    exception) unpersists all of them. The run also holds the query's
+    :class:`~.operators.dedup.GuardStats` by name (:func:`guard`).
+
+    Runs nest and interleave safely: the active run lives in a
+    ``ContextVar``, and a run only ever releases what it owns.
     """
-    spark.catalog.clearCache()
+
+    def __init__(self) -> None:
+        self._owned: list[DataFrame] = []
+        self.guards: dict[str, object] = {}
+
+    def __enter__(self) -> QueryRun:
+        self._token = _ACTIVE.set(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _ACTIVE.reset(self._token)
+        self.release()
+
+    def build(self, fn, *args):
+        """``fn(*args)`` with this run active, keeping what it owns
+        until :meth:`release` (for callers whose result is materialized
+        after they return)."""
+        token = _ACTIVE.set(self)
+        try:
+            return fn(*args)
+        finally:
+            _ACTIVE.reset(token)
+
+    def release(self) -> None:
+        for df in self._owned:
+            df.unpersist(False)
+        self._owned = []
+
+
+_ACTIVE: ContextVar[QueryRun | None] = ContextVar("query_run", default=None)
+
+
+def own(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the life of the active run. With no run active
+    this is a plain persist that the caller's ``clearCache()`` frees."""
+    df = df.persist()
+    run = _ACTIVE.get()
+    if run is not None:
+        run._owned.append(df)
+    return df
+
+
+def own_materialized(build: Callable[[], DataFrame]) -> DataFrame:
+    """``own(build())``, counted inside a nested run: the caches that
+    ``build`` persists are freed once the result is materialized, so a
+    composite query's first side does not hold its build caches while
+    the next side runs. The result belongs to the active run."""
+    inner = QueryRun()
+    try:
+        df = own(inner.build(build))
+        df.count()
+    finally:
+        inner.release()
+    return df
+
+
+def guard(name: str):
+    """A fresh GuardStats for query ``name``, held by the active run so
+    the caller can read the guard counters after materializing."""
+    from .operators.dedup import GuardStats
+
+    obs = GuardStats()
+    run = _ACTIVE.get()
+    if run is not None:
+        run.guards[name] = obs
+    return obs

@@ -144,6 +144,7 @@ def make_incremental_dedup_batch_processor(
       advances makes the replayed epoch a no-op (``epoch=N`` exists).
     """
     from ..operators.dedup import incremental_dedup
+    from ..session import QueryRun
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -163,19 +164,22 @@ def make_incremental_dedup_batch_processor(
         seeded = fs.exists(corpus_path) and fs.globStatus(
             spark._jvm.org.apache.hadoop.fs.Path(corpus_path, "epoch=*")
         )
-        if seeded:
-            # partition discovery adds the epoch column; drop it before
-            # handing the corpus to the dedup operator
-            existing = spark.read.parquet(corpus_dir).drop("epoch")
-            survivors = incremental_dedup(
-                existing, batch_df, id_col, text_col,
-                jaccard_threshold=jaccard_threshold,
-            )
-        else:
-            # first batch: only internal exact dedup vs itself is the
-            # batch operators' job; accept all rows as the seed corpus
-            survivors = batch_df
-        survivors.write.mode("overwrite").parquet(str(staging))
+        # the run frees the epoch's corpus-sized signature caches once
+        # the survivors are written
+        with QueryRun():
+            if seeded:
+                # partition discovery adds the epoch column; drop it
+                # before handing the corpus to the dedup operator
+                existing = spark.read.parquet(corpus_dir).drop("epoch")
+                survivors = incremental_dedup(
+                    existing, batch_df, id_col, text_col,
+                    jaccard_threshold=jaccard_threshold,
+                )
+            else:
+                # first batch: only internal exact dedup vs itself is the
+                # batch operators' job; accept all rows as the seed corpus
+                survivors = batch_df
+            survivors.write.mode("overwrite").parquet(str(staging))
         fs.mkdirs(corpus_path)
         if not fs.rename(staging, epoch_path):
             raise RuntimeError(
