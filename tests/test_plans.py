@@ -36,6 +36,29 @@ def test_cosine_topk_is_heap_based(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan  # no data shuffle at all
 
 
+def _scoring_projection(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return next(ln for ln in plan.splitlines() if "Project [" in ln and " AS score#" in ln)
+
+
+def test_cosine_topk_scoring_projection(spark):
+    """Per row, cosine_topk folds twice (the dot with the query and the
+    row's own norm); the query's norm is computed once, on the driver for
+    a vector or on the broadcast row for a DataFrame. An array<double>
+    column is scored as is; an array<float> one keeps its cast."""
+    from usda_food_data_pipeline_spark.operators.similarity import cosine_topk
+
+    rows = [(i, [float(i), 1.0, 2.0]) for i in range(20)]
+    for elem in ("double", "float"):
+        emb = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+        for query in (emb.filter("vec_id = 3"), [3.0, 1.0, 2.0]):
+            proj = _scoring_projection(cosine_topk(emb, query, k=5))
+            assert proj.count("aggregate(") == 2
+            assert "zip_with(_qvec" not in proj
+            assert ("transform(embedding" in proj) == (elem == "float")
+
+
 def test_range_join_is_bucketed_hash_join(spark, sf_dir):
     plan = plan_of(spark, "range_join_bands", sf_dir)
     assert "BroadcastHashJoin" in plan

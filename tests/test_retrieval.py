@@ -421,3 +421,191 @@ def test_semantic_decontaminate_overcap_benchmark_bucket_both_engines(spark):
         ).collect()
     }
     assert got_capped == {0, 1, 2}  # over-cap corpus bucket → no pairs
+
+
+# --- the featurizer and api.retrieve against independent references ------
+
+_VOCAB = ("greek", "yogurt", "plain", "nonfat", "cheddar", "cheese", "whole", "milk",
+          "apple", "juice", "raw", "organic", "peanut", "butter", "salted", "bread")
+_ZERO_IDS = {67, 157, 247}  # None, "" and whitespace-only names: zero vectors
+
+
+def _food_names(n: int = 120) -> list[tuple[int, str | None]]:
+    """Seeded food names: three copies of one name (tied scores) and
+    three names without tokens (zero vectors)."""
+    import random
+
+    rnd = random.Random(5)
+    names = [" ".join(rnd.choice(_VOCAB) for _ in range(rnd.randint(1, 4))) for _ in range(n)]
+    names[10] = names[40] = names[70] = "greek yogurt plain"
+    names[20], names[50], names[80] = None, "", " \t "
+    return [(3 * i + 7, t) for i, t in enumerate(names)]
+
+
+def _md5_embed(text: str | None, dim: int) -> list[float]:
+    """Reference featurizer: md5 bucket counts of the lower-cased
+    ASCII-whitespace tokens, L2-normalized."""
+    import hashlib
+    import re
+
+    counts = [0.0] * dim
+    for tok in re.split(r"[ \t\n\x0b\f\r]+", (text or "").strip().lower()):
+        if tok:
+            counts[int(hashlib.md5(f"s11:{tok}".encode()).hexdigest()[:12], 16) % dim] += 1.0
+    norm = math.sqrt(sum(c * c for c in counts))
+    return [c / norm for c in counts] if norm > 0 else counts
+
+
+def _fold_topk(ids, vecs, query, k):
+    """Exact cosine top-k with every dot product a sequential double
+    fold (the engine's arithmetic): score descending, ties by id; rows
+    with a zero norm are skipped."""
+    import numpy as np
+
+    def fold_dot(m, v):
+        acc = np.zeros(m.shape[0])
+        for j in range(m.shape[1]):
+            acc = acc + m[:, j] * v[j]
+        return acc
+
+    ids = np.asarray(ids)
+    m = np.asarray(vecs, dtype=np.float64)
+    q = np.asarray(query, dtype=np.float64)
+    denom = np.sqrt(fold_dot(m * m, np.ones(m.shape[1]))) * math.sqrt(fold_dot(q[None, :], q)[0])
+    keep = np.flatnonzero(denom != 0)
+    scores = fold_dot(m[keep], q) / denom[keep]
+    order = np.lexsort((ids[keep], -scores))[:k]
+    return [(int(ids[keep[i]]), float(scores[i])) for i in order]
+
+
+def test_featurizer_driver_udf_and_md5_reference_agree(spark):
+    import numpy as np
+
+    from usda_food_data_pipeline_spark.functions.embed import embed_text_batch, embed_vector
+
+    texts = [None, "", "   ", "yogurt", "greek yogurt", "a\tb\nc \r d\x0b\x0ce", "ΟΔΟΣ", "İstanbul",
+             "straße", "milk milk MILK bread", "a\u00a0b  c"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    for dim in (7, 64):
+        udf = {r.i: r.v for r in df.select("i", embed_text_batch(dim)("t").alias("v")).collect()}
+        for i, t in enumerate(texts):
+            want = np.array(_md5_embed(t, dim)).tobytes()
+            assert np.array(embed_vector(t, dim)).tobytes() == want, (dim, t)
+            assert np.array(udf[i]).tobytes() == want, (dim, t)
+
+
+@pytest.fixture(scope="module")
+def food_index(spark, tmp_path_factory):
+    from usda_food_data_pipeline_spark import api
+
+    # file-backed metadata, as the reference's is (its size is known to
+    # the planner, so the metadata join broadcasts it)
+    root = tmp_path_factory.mktemp("food_index")
+    spark.createDataFrame(_food_names(), "fdc_id long, description string").write.parquet(
+        str(root / "names")
+    )
+    names = spark.read.parquet(str(root / "names"))
+    paths = {}
+    for dim in (64, 1024):
+        paths[dim] = str(root / f"dim{dim}")
+        api.build_index(spark, names, "description", "fdc_id", paths[dim], dim=dim)
+    return names, paths
+
+
+@pytest.mark.parametrize("dim", [64, 1024])
+def test_retrieve_matches_sequential_fold_topk(spark, food_index, dim):
+    from usda_food_data_pipeline_spark import api
+
+    names, paths = food_index
+    desc = dict(_food_names())
+    index = [(r.fdc_id, r.embedding) for r in spark.read.parquet(paths[dim]).collect()]
+    ids, vecs = [i for i, _ in index], [v for _, v in index]
+    assert {i for i, v in index if not any(v)} == _ZERO_IDS
+    n_nonzero = len(index) - len(_ZERO_IDS)
+    queries = ["greek yogurt", "cheddar cheese whole", "apple juice raw", "unknownword",
+               "Milk  MILK\tbread"]
+    ties = 0
+    for q in queries:
+        for k in (10, n_nonzero + 5):
+            want = _fold_topk(ids, vecs, _md5_embed(q, dim), k)
+            hits = api.retrieve(spark, paths[dim], q, metadata_df=names, id_col="fdc_id",
+                                k=k, dim=dim)
+            assert [(h["fdc_id"], h["score"]) for h in hits] == want, (q, k)
+            assert all(h.get("description") == desc[h["fdc_id"]] for h in hits)
+            assert not {h["fdc_id"] for h in hits} & _ZERO_IDS
+            ties += sum(a["score"] == b["score"] for a, b in zip(hits, hits[1:]))
+        # k beyond the rows with a nonzero vector returns exactly those rows
+        assert len(hits) == n_nonzero
+    assert ties > 0  # the duplicate names did produce tied scores
+
+
+def test_retrieve_rejects_metadata_score_column(spark, food_index):
+    from usda_food_data_pipeline_spark import api
+
+    names, paths = food_index
+    meta = names.withColumn("score", F.lit(1.0))
+    with pytest.raises(ValueError, match="'score'"):
+        api.retrieve(spark, paths[64], "greek yogurt", metadata_df=meta, id_col="fdc_id")
+
+
+def test_retrieve_cost_no_python_worker_no_broadcast_join(spark, food_index, monkeypatch):
+    """api.retrieve with file-backed metadata runs at most 3 Spark jobs
+    and scores the index against a literal query vector: no Python
+    evaluation, no nested-loop join."""
+    from usda_food_data_pipeline_spark import api
+
+    names, paths = food_index
+    df_cls = type(names)
+    collect = df_cls.collect
+    plans = []
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_retrieve_cost", "api.retrieve")
+    try:
+        hits = api.retrieve(spark, paths[64], "greek yogurt", metadata_df=names,
+                            id_col="fdc_id", k=10, dim=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(hits) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup("test_retrieve_cost")) <= 3
+    [plan] = plans
+    for node in ("ArrowEvalPython", "BatchEvalPython", "BroadcastNestedLoopJoin"):
+        assert node not in plan
+
+
+def test_retrieve_hybrid_output_pinned(spark, tmp_path):
+    """retrieve_hybrid's fused (doc_id, rank_lexical, rank_vector, rrf)
+    on a fixed query set, as the DataFrame-query vector side produced."""
+    from usda_food_data_pipeline_spark import api
+
+    docs = spark.createDataFrame(_food_names(), "doc_id long, text string")
+    path = str(tmp_path / "index")
+    api.build_index(spark, docs, "text", "doc_id", path, dim=64)
+    want = {
+        "greek yogurt": [
+            (37, 1, 1, 0.032786885), (127, 2, 2, 0.032258065), (217, 3, 3, 0.031746032),
+            (28, 4, 6, 0.030776515), (109, 6, 4, 0.030776515)],
+        "cheddar cheese": [
+            (121, 1, 2, 0.032522475), (313, 2, 3, 0.032002048), (46, 3, 7, 0.030798389),
+            (160, 4, 9, 0.030117754), (25, 9, 5, 0.029877369)],
+        "apple juice raw": [
+            (91, 1, 2, 0.032522475), (34, 3, 1, 0.032266458), (262, 2, 3, 0.032002048),
+            (151, 4, 4, 0.03125), (49, 5, 5, 0.030769231)],
+        "unknownword": [
+            (7, None, 1, 0.016393443), (10, None, 2, 0.016129032), (13, None, 3, 0.015873016),
+            (16, None, 4, 0.015625), (19, None, 5, 0.015384615)],
+        "Milk  MILK\tbread": [
+            (250, 1, 2, 0.032522475), (298, 4, 1, 0.032018443), (226, 2, 4, 0.031754032),
+            (16, 5, 3, 0.031257631), (364, 3, 7, 0.030798389)],
+    }
+    desc = dict(_food_names())
+    for q, rows in want.items():
+        out = api.retrieve_hybrid(spark, path, docs, q, dim=64, k=5, candidates=10)
+        assert [(r["doc_id"], r["rank_lexical"], r["rank_vector"], r["rrf"]) for r in out] == rows
+        assert all(r["text"] == desc[r["doc_id"]] for r in out)

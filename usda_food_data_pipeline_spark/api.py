@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.embed import embed_text_batch
+from .functions.embed import embed_vector
 from .operators.similarity import cosine_topk
 from .plans.usda_pipeline import usda_pipeline
 from .session import QueryRun
@@ -80,14 +80,27 @@ def retrieve(
 ) -> list[dict]:
     """Reference ``similarity_search`` → ``get_food_nutrients``: embed
     the query, cosine top-k over the index, attach metadata, return a
-    list of documents (the k-row collect is the sanctioned one —
-    app.py:63-68 does exactly this via Pinecone)."""
+    list of documents, best first (the k-row collect is the sanctioned
+    one — app.py:63-68 does exactly this via Pinecone).
+
+    The query is embedded on the driver (:func:`embed_vector`, the
+    featurizer the index build applies per row) and scored as a literal
+    vector: one scan of the index, no Python worker, no query broadcast.
+    Each document carries ``id_col``, ``score`` and the non-NULL
+    ``metadata_df`` columns; ``metadata_df`` must not have its own
+    ``score`` column (``ValueError``). A query without tokens returns
+    ``[]``.
+    """
+    if metadata_df is not None:
+        clash = [c for c in metadata_df.columns if c.lower() == "score"]
+        if clash:
+            raise ValueError(
+                f"metadata_df column {clash[0]!r} collides with the retrieval score column"
+            )
+    qvec = embed_vector(query_text, dim)
     with QueryRun():
         index = spark.read.parquet(index_path)
-        qdf = spark.createDataFrame([(query_text,)], "q string").select(
-            embed_text_batch(dim)(F.col("q")).alias("embedding")
-        )
-        top = cosine_topk(index, qdf, k=k, id_col=id_col)
+        top = cosine_topk(index, qvec, k=k, id_col=id_col)
         # a zero-vector query (empty/whitespace text) yields NULL cosines
         # (try_divide) — return nothing rather than k arbitrary rows
         top = top.filter(F.col("score").isNotNull())
@@ -134,11 +147,8 @@ def retrieve_hybrid(
             .alias("rank"),
         )
         index = spark.read.parquet(index_path)
-        qdf = spark.createDataFrame([(query_text,)], "q string").select(
-            embed_text_batch(dim)(F.col("q")).alias("embedding")
-        )
         vec = (
-            cosine_topk(index, qdf, k=candidates, id_col=id_col)
+            cosine_topk(index, embed_vector(query_text, dim), k=candidates, id_col=id_col)
             .filter(F.col("score").isNotNull())
             .select(
                 id_col,

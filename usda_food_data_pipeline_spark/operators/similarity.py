@@ -3,11 +3,15 @@
 Reference analog: Pinecone cosine top-k=10 over dim-1024 e5 embeddings
 (utils/upload_data_to_pinecone.py:26-27, usda-food-assistant/app.py:55-70).
 Here the index is a plain embeddings table (`vec_id, embedding
-array<float>, label`) and search is expressed as DataFrame ops:
+array<float|double>, label`) and search is expressed as DataFrame ops:
 
 - exact: per-row dot-product fold (zip_with + aggregate — pure Catalyst
   expressions, JVM-side, no UDF) + TakeOrderedAndProject. One scan, no
-  shuffle. At 100 TB this is the "re-rank" path.
+  shuffle. At 100 TB this is the "re-rank" path. The query is either a
+  vector held on the driver, which becomes a constant ``array<double>``
+  in the projection (no join, no broadcast job: the serving path), or
+  a 1-row DataFrame broadcast into a nested-loop join (a query that is
+  itself a row of some table).
 - IVF (inverted file): assign every vector to its nearest centroid
   (broadcast the centroid set), search only the query's probe cluster.
   The assignment is a one-off batch job (in production: persisted +
@@ -23,8 +27,12 @@ results are oracle-checkable exactly.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 from ..session import own
 
@@ -32,6 +40,15 @@ from ..session import own
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
+
+
+def _double_vec(df: DataFrame, vec_col: str) -> Column:
+    """``df[vec_col]`` as ``array<double>``: the column itself when it
+    already is one, else the elementwise cast."""
+    t = df.schema[vec_col].dataType
+    if isinstance(t, ArrayType) and isinstance(t.elementType, DoubleType):
+        return F.col(vec_col)
+    return as_double_array(vec_col)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -46,30 +63,62 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
+    return cosine_normed(a, b, l2_norm(b))
+
+
+def cosine_normed(a: Column, b: Column, b_norm: Column) -> Column:
+    """:func:`cosine` with ``b``'s norm given, for a ``b`` shared by
+    every row: the same arithmetic, one fold fewer per row."""
     # try_divide: ANSI mode (Spark 4 default) makes /0 THROW; a zero
     # vector should yield NULL score, not kill the job
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    return F.try_divide(dot(a, b), l2_norm(a) * b_norm)
+
+
+def _vector_literal(vec: Sequence[float]) -> tuple[Column, Column]:
+    """A driver-side vector as a constant ``array<double>`` column and
+    its norm as a constant, folded in :func:`l2_norm`'s order so the
+    scores match the DataFrame-query form bit for bit."""
+    xs = [float(x) for x in vec]
+    sq = 0.0
+    for x in xs:
+        sq += x * x
+    # one SQL literal, parsed once on the JVM (repr round-trips a double
+    # exactly); F.lit would cross Py4J once per element
+    elems = ", ".join(f"{x!r}D" for x in xs)
+    return F.expr(f"array({elems})"), F.lit(math.sqrt(sq))
 
 
 def cosine_topk(
     embeddings: DataFrame,
-    query: DataFrame,
+    query: DataFrame | Sequence[float],
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: score every vector against the (1-row) query
-    via a broadcast cross join, then TakeOrderedAndProject.
+    """Exact cosine top-k of ``embeddings[vec_col]`` against one query,
+    then TakeOrderedAndProject (score descending, ties by ``id_col``;
+    a zero vector on either side scores NULL and sorts last).
+
+    ``query`` is either a vector (a sequence of floats, e.g. a query
+    embedded on the driver): it enters the projection as a literal
+    ``array<double>`` with its norm precomputed, so the plan is one scan
+    with no join; or a 1-row DataFrame with ``vec_col``: it is broadcast
+    into a nested-loop join, its norm computed once on that row.
 
     The reference's `index.query(top_k=10)` (app.py:63-68). Scale shape:
     one full scan, k-row heaps per partition, k rows to the driver —
     no shuffle of the data itself.
     """
-    q = F.broadcast(query.select(as_double_array(vec_col).alias("_qvec")))
-    scored = embeddings.crossJoin(q).select(
-        F.col(id_col),
-        cosine(as_double_array(vec_col), F.col("_qvec")).alias("score"),
-    )
+    v = _double_vec(embeddings, vec_col)
+    if isinstance(query, DataFrame):
+        qv = _double_vec(query, vec_col)
+        embeddings = embeddings.crossJoin(
+            F.broadcast(query.select(qv.alias("_qvec"), l2_norm(qv).alias("_qnorm")))
+        )
+        qvec, qnorm = F.col("_qvec"), F.col("_qnorm")
+    else:
+        qvec, qnorm = _vector_literal(query)
+    scored = embeddings.select(F.col(id_col), cosine_normed(v, qvec, qnorm).alias("score"))
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 

@@ -123,8 +123,8 @@ def build_embedding_index(
     """Reference §3.2 made self-contained: embed + write a parquet
     'index' table instead of a network upsert, so correctness is
     checkable offline. The embedder is the deterministic featurizer
-    (functions.embed.embed_text); swap in a model-backed pandas_udf in
-    production."""
+    (functions.embed.embed_vector, applied per row by embed_text_batch);
+    swap in a model-backed pandas_udf in production."""
     from ..functions.embed import embed_text_batch
 
     (
