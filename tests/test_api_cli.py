@@ -4,6 +4,7 @@ index build, retrieval — the three things a reference user does."""
 from __future__ import annotations
 
 import glob
+import gzip
 import shutil
 import tempfile
 
@@ -182,57 +183,37 @@ def test_retrieve_hybrid_fuses_both_sides(spark, sf_dir, workdir):
     assert api.retrieve_hybrid(spark, index_path, docs, "   ", dim=16) == []
 
 
-def test_read_usda_csv_header_probe_cached(spark, workdir):
-    """ADVICE r04: multi-file loads must not re-pay O(files) header
-    probes on every call — results are cached per resolved file list.
-    Proof of use: poisoning the cached probe result with divergent
-    headers flips the second call onto the per-file union path."""
+def test_read_usda_csv_glob_runs_no_job(spark, workdir):
+    """Headers are read on the driver and files listed by the text
+    source, so building the DataFrame of a multi-file glob (one header
+    read per file) starts no Spark job."""
     import os
 
-    from usda_food_data_pipeline_spark.sources.tables import (
-        _HEADER_PROBE_CACHE,
-        read_usda_csv,
-    )
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
 
-    d = f"{workdir}/landing_cache"
+    d = f"{workdir}/landing_nojob"
     os.makedirs(d, exist_ok=True)
     for i in (1, 2):
         with open(f"{d}/part{i}.csv", "w") as f:
             f.write(f"fdc_id,nutrient_id,amount\n{i}1,{i},{i}.5\n")
-    _HEADER_PROBE_CACHE.clear()
-    df1 = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
-    assert df1.count() == 2
-    assert len(_HEADER_PROBE_CACHE) == 1  # one probe set, cached
-    key = next(iter(_HEADER_PROBE_CACHE))  # key = resolved file tuple
-    sig = _HEADER_PROBE_CACHE[key][0]
-    # poison: pretend the files disagree (same stat signature, so no
-    # re-probe); the divergent-path switch proves the cache was used
-    files = list(key)
-    _HEADER_PROBE_CACHE[key] = (
-        sig,
-        {
-            files[0]: ("fdc_id", "nutrient_id", "amount"),
-            files[1]: ("amount", "fdc_id", "nutrient_id"),
-        },
-    )
-    df2 = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
-    # per-file path binds part2 by the poisoned header order
-    rows = {r["fdc_id"]: r["amount"] for r in df2.collect()}
-    assert rows != {11: 1.5, 21: 2.5}
-    _HEADER_PROBE_CACHE.clear()
+    sc = spark.sparkContext
+    sc.setJobGroup("test_read_usda_csv_no_job", "read_usda_csv")
+    try:
+        df = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("test_read_usda_csv_no_job") == []
+    assert {r["fdc_id"]: r["amount"] for r in df.collect()} == {11: 1.5, 21: 2.5}
 
 
-def test_read_usda_csv_header_cache_invalidates_on_rewrite(spark, workdir):
-    """r05 ADVICE: the probe cache is keyed by (path, mtime, size) — a
-    staged CSV rewritten IN PLACE with a different column order must be
-    re-probed, not served stale headers that would transpose values."""
+def test_read_usda_csv_rewrite_in_place_rebinds_by_name(spark, workdir):
+    """A staged CSV rewritten IN PLACE with a different column order is
+    bound by its new header on the next read, not by the one an earlier
+    read saw (which would silently transpose values)."""
     import os
     import time
 
-    from usda_food_data_pipeline_spark.sources.tables import (
-        _HEADER_PROBE_CACHE,
-        read_usda_csv,
-    )
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
 
     d = f"{workdir}/landing_rewrite"
     os.makedirs(d, exist_ok=True)
@@ -240,7 +221,6 @@ def test_read_usda_csv_header_cache_invalidates_on_rewrite(spark, workdir):
         f.write("fdc_id,nutrient_id,amount\n11,1,1.5\n")
     with open(f"{d}/p2.csv", "w") as f:
         f.write("fdc_id,nutrient_id,amount\n21,2,2.5\n")
-    _HEADER_PROBE_CACHE.clear()
     df1 = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
     assert {r["fdc_id"] for r in df1.collect()} == {11, 21}
 
@@ -249,8 +229,66 @@ def test_read_usda_csv_header_cache_invalidates_on_rewrite(spark, workdir):
         f.write("amount,fdc_id,nutrient_id\n2.5,21,2\n")
     df2 = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
     rows = {r["fdc_id"]: r["amount"] for r in df2.collect()}
-    assert rows == {11: 1.5, 21: 2.5}  # re-probed, no transposition
-    # ADVICE r06: the re-probe must REPLACE the superseded entry (cache
-    # indexed by path tuple), not accumulate one entry per re-stage
-    assert len(_HEADER_PROBE_CACHE) == 1
-    _HEADER_PROBE_CACHE.clear()
+    assert rows == {11: 1.5, 21: 2.5}  # no transposition
+
+
+# (file name, bytes): header shapes whose parse read_usda_csv must
+# share with Spark's own header inference
+_HEADER_CASES = {
+    "quoted_comma": ("q.csv", b'"fdc_id,x",amount,"a\\"b"\n1,2,3\n'),
+    "padded": ("p.csv", b" fdc_id , amount ,nutrient_id \n1,2,3\n"),
+    "empty_name": ("e.csv", b'fdc_id,,amount,""\n1,2,3,4\n'),
+    "duplicates": ("d.csv", b"fdc_id,amount,FDC_ID,amount,x\n1,2,3,4,5\n"),
+    "crlf": ("c.csv", b"fdc_id,amount\r\n1,2.5\r\n"),
+    "bom": ("b.csv", b"\xef\xbb\xbffdc_id,amount\n1,2.5\n"),
+    "gzip": ("g.csv.gz", gzip.compress(b"fdc_id,nutrient_id,amount\n1,2,3.5\n")),
+    "zero_bytes": ("z.csv", b""),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_HEADER_CASES))
+def test_read_usda_csv_header_matches_spark(spark, tmp_path, case):
+    """The driver-side header read names columns exactly as
+    ``spark.read.option("header", True).csv(f).columns`` does."""
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
+
+    name, data = _HEADER_CASES[case]
+    f = tmp_path / name
+    f.write_bytes(data)
+    want = spark.read.option("header", True).csv(str(f)).columns
+    assert read_usda_csv(spark, str(f), "food_nutrient").columns == want
+    if case == "gzip":  # decompressed, not two equal misreads
+        assert want == ["fdc_id", "nutrient_id", "amount"]
+
+
+def test_read_usda_csv_missing_path_raises_spark_error(spark, tmp_path):
+    """A path or glob that matches nothing raises the CSV source's own
+    PATH_NOT_FOUND AnalysisException."""
+    from pyspark.errors import AnalysisException
+
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
+
+    for path in (str(tmp_path / "missing.csv"), str(tmp_path / "none*.csv")):
+        with pytest.raises(AnalysisException) as want:
+            spark.read.option("header", True).csv(path)
+        with pytest.raises(AnalysisException) as got:
+            read_usda_csv(spark, path, "food")
+        assert got.value.getCondition() == want.value.getCondition() == "PATH_NOT_FOUND"
+        assert str(got.value) == str(want.value)
+
+
+def test_read_usda_csv_path_with_space(spark, tmp_path):
+    """Directories whose names need URI escaping are read, both as one
+    file and as a glob of files with divergent headers."""
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
+
+    d = tmp_path / "USDA landing 100%"
+    d.mkdir()
+    (d / "part1.csv").write_text("fdc_id,nutrient_id,amount\n11,1,1.5\n")
+    df = read_usda_csv(spark, str(d / "part1.csv"), "food_nutrient")
+    assert [tuple(r) for r in df.collect()] == [(11, 1, 1.5)]
+    (d / "part2.csv").write_text("amount,fdc_id,nutrient_id\n2.5,22,2\n")
+    df = read_usda_csv(spark, f"{d}/*.csv", "food_nutrient")
+    assert {r["fdc_id"]: (r["nutrient_id"], r["amount"]) for r in df.collect()} == {
+        11: (1, 1.5), 22: (2, 2.5),
+    }

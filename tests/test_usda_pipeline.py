@@ -105,3 +105,117 @@ def test_duplicate_nutrient_labels_disambiguated(spark, usda_inputs):
     assert "PROTEIN (G)" in out.columns and "PROTEIN (G) [3]" in out.columns
     r = out.collect()[0]
     assert r["PROTEIN (G)"] == 15.0 and r["PROTEIN (G) [3]"] == 7.0
+
+
+# -- the CSV→CSV path on the benchmark's seeded dirty landing ------------------
+
+
+def _perfbench(module: str):
+    """perfbench's fixture generator or DuckDB twin, imported read-only
+    by path (the benchmark's modules import each other by bare name)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "perfbench", f"{module}.py")
+    spec = importlib.util.spec_from_file_location(f"perfbench_{module}", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+LANDING_SEEDS = (5, 6)
+
+
+@pytest.fixture(scope="module")
+def dirty_landing(tmp_path_factory):
+    """Seeded USDA landings with stray fdc_ids, duplicate UPCs, duplicate
+    measurements averaging off the 2-decimal grid and 2-decimal ties."""
+    fixtures = _perfbench("fixtures")
+    root = tmp_path_factory.mktemp("usda_landing")
+    landings = {}
+    for seed in LANDING_SEEDS:
+        landings[seed] = str(root / f"seed{seed}")
+        fixtures.usda_landing(landings[seed], seed, n_branded=1500,
+                              n_generated_nutrients=8, per_food=6)
+    return landings
+
+
+def test_pipeline_plan_one_branded_scan_no_semi_join(spark, dirty_landing):
+    """The reference's isin filters are left to the inner join chain:
+    no LeftSemi join, one dedup Window, one scan of branded_food (the
+    only input with a gtin_upc column)."""
+    from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
+
+    landing = dirty_landing[LANDING_SEEDS[0]]
+    out = usda_pipeline(*[
+        read_usda_csv(spark, f"{landing}/{n}.csv", n)
+        for n in ("branded_food", "food", "nutrient", "food_nutrient")
+    ])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftSemi" not in plan
+    assert plan.count("Window [") == 1
+    scans = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Relation [")]
+    assert sum("gtin_upc" in ln for ln in scans) == 1
+    assert len(scans) == 3  # branded_food, food, food_nutrient (nutrient is collected)
+
+
+def test_run_pipeline_job_count(spark, dirty_landing, tmp_path):
+    """api.run_pipeline runs the nutrient collect plus one job per query
+    stage of the write: no header-probe jobs, no semi-join stages."""
+    from usda_food_data_pipeline_spark import api
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_run_pipeline_jobs", "api.run_pipeline")
+    try:
+        api.run_pipeline(spark, dirty_landing[LANDING_SEEDS[0]], str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("test_run_pipeline_jobs")) <= 7
+
+
+@pytest.mark.parametrize("seed", LANDING_SEEDS)
+def test_run_pipeline_matches_duckdb_twin(spark, dirty_landing, tmp_path, seed):
+    """Differential check of the whole CSV→CSV path against perfbench's
+    DuckDB twin of the reference (semi-joins before the average, an
+    explicit group-mean then pivot, Spark-style half-even rounding):
+    same row count and order-insensitive value hash."""
+    import duckdb
+
+    from usda_food_data_pipeline_spark import api
+
+    checks = _perfbench("checks")
+    landing = dirty_landing[seed]
+    out = str(tmp_path / "out")
+    api.run_pipeline(spark, landing, out)
+    con = duckdb.connect()
+    try:
+        want = checks.value_hash(*checks.etl_twin(con, landing))
+        got = checks.value_hash(*checks.etl_output(con, out))
+    finally:
+        con.close()
+    assert want["rows"] > 500
+    assert got == want
+
+
+def test_run_pipeline_landing_dir_with_space(spark, dirty_landing, tmp_path):
+    """A landing directory whose name has a space (``%20`` in the URIs
+    Spark lists) is read like any other: same output as the twin."""
+    import shutil
+
+    import duckdb
+
+    from usda_food_data_pipeline_spark import api
+
+    checks = _perfbench("checks")
+    src = dirty_landing[LANDING_SEEDS[0]]
+    landing = shutil.copytree(src, tmp_path / "USDA landing")
+    out = str(tmp_path / "out")
+    api.run_pipeline(spark, str(landing), out)
+    con = duckdb.connect()
+    try:
+        want = checks.value_hash(*checks.etl_twin(con, src))
+        got = checks.value_hash(*checks.etl_output(con, out))
+    finally:
+        con.close()
+    assert got == want

@@ -94,13 +94,14 @@ def threshold_nullout(
     (usda_branded_food_data_pipeline.py:116-123). Threshold resolution is
     plan-time Python (the reference resolves by column name with a
     unit-suffix fallback, :119-120 — see ``resolve_thresholds``); the
-    generated plan is one ``when`` per column, fully codegen'd.
+    generated plan is one ``when`` per column in one projection, fully
+    codegen'd.
     """
-    out = df
-    for c, t in thresholds.items():
+    def nullout(c: str, t: float) -> Column:
         kept = F.when(F.col(c) <= F.lit(t), F.col(c))
-        out = out.withColumn(c, F.bround(kept, scale) if scale is not None else kept)
-    return out
+        return F.bround(kept, scale) if scale is not None else kept
+
+    return df.withColumns({c: nullout(c, t) for c, t in thresholds.items()})
 
 
 def resolve_thresholds(

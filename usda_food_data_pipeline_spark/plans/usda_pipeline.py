@@ -19,11 +19,16 @@ are deliberate and documented:
   (SURVEY §1.4 gotcha 2).
 
 Scale notes: branded_food/food_nutrient are the fact tables — the plan
-shuffles each exactly once (dedup window on gtin_upc; group+pivot on
-fdc_id). ``nutrient`` is a dimension: collected once to the driver
-(~thousands of rows) for pivot values + column names (J4 is a schema
-join, SURVEY §2.4). The final join chain is keyed on FOOD_RECORD_ID on
-both sides; at 100 TB pre-bucket both facts on fdc_id.
+scans each once, and each one's rows cross exactly one shuffle (dedup
+window on gtin_upc; group-mean on (fdc_id, nutrient_id), whose averaged
+rows the pivot then gathers on fdc_id). That holds because the
+reference's two ``isin`` filters (:85, :100) are left to the inner join
+chain that subsumes them, instead of becoming semi-joins that each
+re-scan and re-shuffle ``branded_food``. ``nutrient`` is a dimension:
+collected once to the driver (~thousands of rows) for pivot values +
+column names (J4 is a schema join, SURVEY §2.4). The final join chain
+is keyed on FOOD_RECORD_ID on both sides; at 100 TB pre-bucket both
+facts on fdc_id.
 """
 
 from __future__ import annotations
@@ -91,14 +96,15 @@ def clean_branded_food(branded_food: DataFrame, faithful_nan: bool = False) -> D
     ).orderBy("FOOD_RECORD_ID")  # :80 (cosmetic; joins don't rely on it)
 
 
-def clean_food(food: DataFrame, branded_keys: DataFrame) -> DataFrame:
-    """:82-85 — rename, upper, keep only branded records (semi-join)."""
-    return (
-        food.select(
-            F.col("fdc_id").alias("FOOD_RECORD_ID"),
-            F.upper(F.trim(F.col("description"))).alias("FOOD_NAME"),  # :83-84
-        )
-        .join(branded_keys, "FOOD_RECORD_ID", "left_semi")  # :85 isin → semi
+def clean_food(food: DataFrame) -> DataFrame:
+    """:82-85 — rename, upper. The reference's ``isin`` filter (:85)
+    keeps only branded records; the inner join with the branded table
+    (:108-110) drops exactly the same rows, so it is not repeated here
+    (Catalyst does not remove a semi-join an inner join makes
+    redundant, and each one re-scans and re-shuffles ``branded_food``)."""
+    return food.select(
+        F.col("fdc_id").alias("FOOD_RECORD_ID"),
+        F.upper(F.trim(F.col("description"))).alias("FOOD_NAME"),  # :83-84
     )
 
 
@@ -112,29 +118,29 @@ def clean_nutrient(nutrient: DataFrame) -> DataFrame:
 
 def clean_food_nutrient(
     food_nutrient: DataFrame,
-    branded_keys: DataFrame,
     nutrient_labels: Mapping[int, str],
 ) -> DataFrame:
-    """:94-106 — semi-join, group-mean of duplicate measurements, pivot
-    long→wide, dict-rename of pivot columns.
+    """:94-106 — group-mean of duplicate measurements, pivot long→wide,
+    dict-rename of pivot columns.
+
+    The reference's ``isin`` filter (:100) is subsumed by the inner join
+    chain (:108-110), which drops the same non-branded ``fdc_id``s after
+    the pivot. The trade: stray measurements are averaged and shuffled
+    before the join drops them (about 0.7 MB more shuffle on the
+    benchmark's 130k-row landing), instead of re-scanning and
+    re-shuffling ``branded_food`` to filter them first.
 
     ``nutrient_labels`` (nutrient_id → label) is the collected dimension:
     passing explicit pivot values avoids Spark's extra distinct job and
     pins the output schema at plan time (SURVEY §4 rule 1); the rename
     (:104-106) happens in the same select — a join against the schema.
+    Pivoting with ``avg`` directly (:101-102) plans one partial
+    ``avg`` per (record, nutrient) and one ``pivotfirst``.
     """
-    renamed = food_nutrient.select(
-        F.col("fdc_id").alias("FOOD_RECORD_ID"),
-        F.col("nutrient_id").alias("NUTRIENT_ID"),
-        F.col("amount").alias("NUTRIENT_QUANTITY"),
-    ).join(branded_keys, "FOOD_RECORD_ID", "left_semi")  # :100
-    averaged = renamed.groupBy("FOOD_RECORD_ID", "NUTRIENT_ID").agg(
-        F.avg("NUTRIENT_QUANTITY").alias("NUTRIENT_QUANTITY")  # :101 group-mean
-    )
     ids = sorted(nutrient_labels)
-    piv = averaged.groupBy("FOOD_RECORD_ID").pivot(
-        "NUTRIENT_ID", ids
-    ).agg(F.first("NUTRIENT_QUANTITY"))  # :102 (first == value: unique after A1)
+    piv = food_nutrient.groupBy(F.col("fdc_id").alias("FOOD_RECORD_ID")).pivot(
+        "nutrient_id", ids
+    ).agg(F.avg("amount"))  # :101 group-mean, :102 pivot
     return piv.select(
         "FOOD_RECORD_ID",
         *[F.col(f"`{i}`").alias(nutrient_labels[i]) for i in ids],  # :104-106 rename
@@ -152,9 +158,7 @@ def usda_pipeline(
 ) -> DataFrame:
     """:131-160 — the full DAG, one lazy plan."""
     branded = clean_branded_food(branded_food, faithful_nan)
-    branded_keys = branded.select("FOOD_RECORD_ID")
-
-    foods = clean_food(food, branded_keys)
+    foods = clean_food(food)
     labels_df = clean_nutrient(nutrient)
     # J4: the nutrient dimension is collected once — it is a dimension
     # table (~thousands of rows); this is the one sanctioned collect.
@@ -172,31 +176,29 @@ def usda_pipeline(
             nutrient_labels[nid] = f"{label} [{nid}]"
         else:
             seen[label] = nid
-    nutrients_wide = clean_food_nutrient(food_nutrient, branded_keys, nutrient_labels)
+    nutrients_wide = clean_food_nutrient(food_nutrient, nutrient_labels)
 
-    # :108-110 inner join chain; :111-114 fixed prefix + sorted nutrient cols
+    # :108-110 inner join chain
     merged = branded.join(foods, "FOOD_RECORD_ID", "inner").join(
         nutrients_wide, "FOOD_RECORD_ID", "inner"
     )
-    nutrient_cols = sorted(c for c in merged.columns if c not in FIXED_COLUMNS)
-    merged = merged.select(*FIXED_COLUMNS, *nutrient_cols)
-
-    # :154 dropna(ingredients) — Catalyst pushes this below the joins
-    merged = merged.na.drop(subset=["FOOD_INGREDIENTS"])
-
+    size = F.col("FOOD_SERVING_SIZE")
+    # :154 dropna(ingredients); :127-128 drop "IU" serving sizes, then
+    # null ones — Catalyst pushes the filter below the joins
+    kept = merged.filter(
+        F.col("FOOD_INGREDIENTS").isNotNull() & size.isNotNull() & ~size.contains("IU")
+    )
+    # :111-114 fixed prefix + sorted nutrient cols; :158 id → string
+    nutrient_cols = sorted(nutrient_labels.values())
+    wide = kept.select(
+        F.col("FOOD_RECORD_ID").cast("string").alias("FOOD_RECORD_ID"),
+        *FIXED_COLUMNS[1:],
+        *nutrient_cols,
+    )
     # :116-123 threshold null-out + round(2) on nutrient columns
     resolved = resolve_thresholds(
         nutrient_cols,
         thresholds_by_name or DEFAULT_THRESHOLDS_BY_NAME,
         thresholds_by_unit or DEFAULT_THRESHOLDS_BY_UNIT,
     )
-    merged = threshold_nullout(merged, resolved, scale=2)
-
-    # :127-128 drop "IU" serving sizes (nulls kept by contains→na=False),
-    # then drop null serving sizes
-    merged = merged.filter(
-        (~F.col("FOOD_SERVING_SIZE").contains("IU")) | F.col("FOOD_SERVING_SIZE").isNull()
-    ).na.drop(subset=["FOOD_SERVING_SIZE"])
-
-    # :158 id → string
-    return merged.withColumn("FOOD_RECORD_ID", F.col("FOOD_RECORD_ID").cast("string"))
+    return threshold_nullout(wide, resolved, scale=2)
