@@ -243,20 +243,35 @@ _HEADER_CASES = {
     "bom": ("b.csv", b"\xef\xbb\xbffdc_id,amount\n1,2.5\n"),
     "gzip": ("g.csv.gz", gzip.compress(b"fdc_id,nutrient_id,amount\n1,2,3.5\n")),
     "zero_bytes": ("z.csv", b""),
+    # text after a closing quote: Spark keeps the field as written
+    "quote_then_text": ("t.csv", b'"a,b",c,"d""e"\n1,2,3\n'),
+    "quoted_prefix": ("f.csv", b'"ab"c,d\n1,2\n'),
+    # a backslash outside quotes, and space after a closing quote
+    "bare_backslash": ("s.csv", b'a\\,b,c\n1,2,3\n'),
+    "space_after_quote": ("w.csv", b'"a" ,"b"\t\n1,2\n'),
 }
 
 
 @pytest.mark.parametrize("case", sorted(_HEADER_CASES))
 def test_read_usda_csv_header_matches_spark(spark, tmp_path, case):
     """The driver-side header read names columns exactly as
-    ``spark.read.option("header", True).csv(f).columns`` does."""
+    ``spark.read.option("header", True).csv(f).columns`` does, and
+    starts no Spark job doing so."""
     from usda_food_data_pipeline_spark.sources.tables import read_usda_csv
 
     name, data = _HEADER_CASES[case]
     f = tmp_path / name
     f.write_bytes(data)
     want = spark.read.option("header", True).csv(str(f)).columns
-    assert read_usda_csv(spark, str(f), "food_nutrient").columns == want
+    sc = spark.sparkContext
+    group = f"test_read_usda_csv_header_{case}"
+    sc.setJobGroup(group, "read_usda_csv")
+    try:
+        got = read_usda_csv(spark, str(f), "food_nutrient").columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     if case == "gzip":  # decompressed, not two equal misreads
         assert want == ["fdc_id", "nutrient_id", "amount"]
 

@@ -46,17 +46,26 @@ def test_cosine_topk_scoring_projection(spark):
     """Per row, cosine_topk folds twice (the dot with the query and the
     row's own norm); the query's norm is computed once, on the driver for
     a vector or on the broadcast row for a DataFrame. An array<double>
-    column is scored as is; an array<float> one keeps its cast."""
+    column is scored as is; an array<float> one is cast once per row, in
+    a projection below the scoring one (the query row's likewise), and
+    scores as its array<double> copy does."""
     from usda_food_data_pipeline_spark.operators.similarity import cosine_topk
 
     rows = [(i, [float(i), 1.0, 2.0]) for i in range(20)]
+    results = {}
     for elem in ("double", "float"):
         emb = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
         for query in (emb.filter("vec_id = 3"), [3.0, 1.0, 2.0]):
-            proj = _scoring_projection(cosine_topk(emb, query, k=5))
+            top = cosine_topk(emb, query, k=5)
+            proj = _scoring_projection(top)
             assert proj.count("aggregate(") == 2
             assert "zip_with(_qvec" not in proj
-            assert ("transform(embedding" in proj) == (elem == "float")
+            assert "transform(" not in proj
+            casts = top._jdf.queryExecution().sparkPlan().toString().count("transform(")
+            assert casts == (0 if elem == "double" else 1 if isinstance(query, list) else 2)
+            results.setdefault(isinstance(query, list), []).append(top.collect())
+    for double_rows, float_rows in results.values():
+        assert double_rows == float_rows
 
 
 def test_range_join_is_bucketed_hash_join(spark, sf_dir):
@@ -212,18 +221,36 @@ def test_fuzzy_join_is_blocked_hash_join_not_cartesian(spark, sf_dir):
     assert "Join" in plan
 
 
-def test_triangle_count_no_cartesian(spark, sf_dir):
+def test_triangle_count_no_cartesian(spark, sf_dir, monkeypatch):
+    """The plan triangle_count runs (the one it checkpoints, not the
+    checkpoint's RDD scan): the wedge and probe stages are equi-joins,
+    and the only nested-loop joins are the two that combine the 1-row
+    summaries."""
+    import re
+
     from usda_food_data_pipeline_spark.operators.graph import triangle_count
 
     pairs = spark.createDataFrame(
-        [(a, b) for a in range(20) for b in range(a + 1, 20) if (a + b) % 3], 
+        [(a, b) for a in range(20) for b in range(a + 1, 20) if (a + b) % 3],
         "src long, dst long",
     )
-    df = triangle_count(pairs)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the wedge/probe stages are equi-joins; the only cross joins are the
-    # three 1-row summary combines
-    assert "BroadcastNestedLoopJoin" not in plan
+    df_cls = type(pairs)
+    checkpoint = df_cls.localCheckpoint
+    plans = []
+
+    def spy(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, eager)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+    assert triangle_count(pairs).first()["n_triangles"] > 0
+    [plan] = plans
+    assert "CartesianProduct" not in plan
+    assert plan.count("BroadcastNestedLoopJoin") == 2
+    equi = r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) "
+    # wedge: o1 JOIN o2 ON u; probe: wedges JOIN oriented ON (v, w)
+    assert re.search(equi + r"\[u#\d+L\], \[u#\d+L\], Inner", plan)
+    assert re.search(equi + r"\[v#\d+L, w#\d+L\], \[v#\d+L, w#\d+L\], Inner", plan)
 
 
 def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):

@@ -609,3 +609,99 @@ def test_retrieve_hybrid_output_pinned(spark, tmp_path):
         out = api.retrieve_hybrid(spark, path, docs, q, dim=64, k=5, candidates=10)
         assert [(r["doc_id"], r["rank_lexical"], r["rank_vector"], r["rrf"]) for r in out] == rows
         assert all(r["text"] == desc[r["doc_id"]] for r in out)
+
+
+def _parquet_files(path: str) -> list[str]:
+    import glob
+
+    return glob.glob(f"{path}/*.parquet")
+
+
+@pytest.fixture(scope="module")
+def spread_index(spark, food_index, tmp_path_factory):
+    """The food names' index built from a 1-partition input, and a
+    single-file copy of the same rows."""
+    from usda_food_data_pipeline_spark import api
+
+    names, _ = food_index
+    root = tmp_path_factory.mktemp("spread_index")
+    spread, single = str(root / "spread"), str(root / "single")
+    api.build_index(spark, names.coalesce(1), "description", "fdc_id", spread, dim=64)
+    spark.read.parquet(spread).coalesce(1).write.parquet(single)
+    return spread, single
+
+
+def test_build_index_writes_a_file_per_core(spark, spread_index):
+    spread, single = spread_index
+    assert len(_parquet_files(spread)) >= spark.sparkContext.defaultParallelism
+    assert len(_parquet_files(single)) == 1
+
+
+def test_build_index_keeps_the_layout_of_a_parallel_input(spark, tmp_path):
+    from usda_food_data_pipeline_spark import api
+
+    n = spark.sparkContext.defaultParallelism + 2
+    docs = spark.range(0, 200, 1, n).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("food "), F.col("id") % 13).alias("text")
+    )
+    api.build_index(spark, docs, "text", "doc_id", str(tmp_path / "index"), dim=16)
+    assert len(_parquet_files(str(tmp_path / "index"))) == n
+
+
+def test_retrieve_same_over_spread_and_single_file_index(spark, food_index, spread_index):
+    """Ids, exact scores and order do not depend on the index's file
+    layout, tied scores and k beyond the row count included."""
+    from usda_food_data_pipeline_spark import api
+
+    names, _ = food_index
+    spread, single = spread_index
+    n_rows = spark.read.parquet(single).count()
+    ties = 0
+    for q in ("greek yogurt", "cheddar cheese whole", "apple juice raw", "Milk  MILK\tbread"):
+        for k in (10, n_rows + 5):
+            got, want = (
+                [(h["fdc_id"], h["score"], h.get("description"))
+                 for h in api.retrieve(spark, path, q, metadata_df=names, id_col="fdc_id",
+                                       k=k, dim=64)]
+                for path in (spread, single)
+            )
+            assert got == want, (q, k)
+            ties += sum(a[1] == b[1] for a, b in zip(got, got[1:]))
+    assert ties > 0
+
+
+def test_retrieve_over_index_of_empty_input(spark, food_index, tmp_path):
+    from usda_food_data_pipeline_spark import api
+
+    names, _ = food_index
+    path = str(tmp_path / "index")
+    api.build_index(spark, names.limit(0), "description", "fdc_id", path, dim=64)
+    assert api.retrieve(spark, path, "greek yogurt", metadata_df=names, id_col="fdc_id") == []
+
+
+def test_retrieve_scores_index_in_parallel(spark, food_index, spread_index):
+    """Over an index built from a 1-partition input, with 1-partition
+    metadata, the scoring stage of one call runs more than one task and
+    the call still runs at most 3 jobs."""
+    from usda_food_data_pipeline_spark import api
+
+    sc = spark.sparkContext
+    if sc.defaultParallelism < 2:
+        pytest.skip("needs a session of 2 or more cores")
+    names, _ = food_index
+    spread, _ = spread_index
+    sc.setJobGroup("test_retrieve_parallel", "api.retrieve")
+    try:
+        hits = api.retrieve(spark, spread, "greek yogurt", metadata_df=names.coalesce(1),
+                            id_col="fdc_id", k=10, dim=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(hits) == 10
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("test_retrieve_parallel")
+    assert len(jobs) <= 3
+    tasks = [
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) > 1, tasks
+

@@ -7,11 +7,13 @@ array<float|double>, label`) and search is expressed as DataFrame ops:
 
 - exact: per-row dot-product fold (zip_with + aggregate — pure Catalyst
   expressions, JVM-side, no UDF) + TakeOrderedAndProject. One scan, no
-  shuffle. At 100 TB this is the "re-rank" path. The query is either a
-  vector held on the driver, which becomes a constant ``array<double>``
-  in the projection (no join, no broadcast job: the serving path), or
-  a 1-row DataFrame broadcast into a nested-loop join (a query that is
-  itself a row of some table).
+  shuffle; the scan runs a task per split, and the index build
+  (``sources.sinks.build_embedding_index``) writes a file per core. At
+  100 TB this is the "re-rank" path. The query is either a vector held
+  on the driver, which becomes a constant ``array<double>`` in the
+  projection (no join, no broadcast job: the serving path), or a 1-row
+  DataFrame broadcast into a nested-loop join (a query that is itself a
+  row of some table).
 - IVF (inverted file): assign every vector to its nearest centroid
   (broadcast the centroid set), search only the query's probe cluster.
   The assignment is a one-off batch job (in production: persisted +
@@ -42,13 +44,17 @@ def as_double_array(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _double_vec(df: DataFrame, vec_col: str) -> Column:
-    """``df[vec_col]`` as ``array<double>``: the column itself when it
-    already is one, else the elementwise cast."""
+def _with_double_vec(df: DataFrame, vec_col: str) -> DataFrame:
+    """``df`` with ``vec_col`` as ``array<double>``: ``df`` itself when
+    the column already is one, else the elementwise cast in a projection
+    of its own. A select that folds the column three times (its dot
+    product and its norm) then casts each row once, not once per fold:
+    the optimizer does not inline a non-trivial expression into a
+    projection that reads it more than once."""
     t = df.schema[vec_col].dataType
     if isinstance(t, ArrayType) and isinstance(t.elementType, DoubleType):
-        return F.col(vec_col)
-    return as_double_array(vec_col)
+        return df
+    return df.withColumn(vec_col, as_double_array(vec_col))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -109,12 +115,11 @@ def cosine_topk(
     one full scan, k-row heaps per partition, k rows to the driver —
     no shuffle of the data itself.
     """
-    v = _double_vec(embeddings, vec_col)
+    embeddings = _with_double_vec(embeddings, vec_col)
+    v = F.col(vec_col)
     if isinstance(query, DataFrame):
-        qv = _double_vec(query, vec_col)
-        embeddings = embeddings.crossJoin(
-            F.broadcast(query.select(qv.alias("_qvec"), l2_norm(qv).alias("_qnorm")))
-        )
+        q = _with_double_vec(query, vec_col).select(v.alias("_qvec"), l2_norm(v).alias("_qnorm"))
+        embeddings = embeddings.crossJoin(F.broadcast(q))
         qvec, qnorm = F.col("_qvec"), F.col("_qnorm")
     else:
         qvec, qnorm = _vector_literal(query)

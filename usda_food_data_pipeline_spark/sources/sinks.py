@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tables import spread
+
 
 def write_quoted_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Reference S5: quote all non-numeric fields. Spark's nearest is
@@ -124,11 +126,18 @@ def build_embedding_index(
     'index' table instead of a network upsert, so correctness is
     checkable offline. The embedder is the deterministic featurizer
     (functions.embed.embed_vector, applied per row by embed_text_batch);
-    swap in a model-backed pandas_udf in production."""
+    swap in a model-backed pandas_udf in production.
+
+    The index is written as at least one file per core: an input that
+    :func:`.tables.spread` finds less parallel than
+    ``defaultParallelism`` is spread first, so the embedding UDF runs
+    on every core and each later top-k scan of the index scores in
+    ``defaultParallelism`` tasks instead of one. An input that is
+    already that parallel keeps its own layout."""
     from ..functions.embed import embed_text_batch
 
     (
-        df.select(
+        spread(df).select(
             F.col(id_col),
             embed_text_batch(dim)(F.col(text_col)).alias("embedding"),
         )
