@@ -69,7 +69,8 @@ def _warm_batches(batches):
 
 
 # Fixed cross-round comparison basis (r11 verdict task 9): the 158
-# queries registered at the round-10 close (`git 35a9751`), BY NAME.
+# queries registered at the round-10 close (`git 35a9751`), BY NAME,
+# less one since-deleted diagnostic query (157).
 # The suite grows most rounds and the artifact-derived carried set
 # drifts with it, so the driver's prev/now total diff never compares
 # the same work twice; this list is frozen — never add to it — and
@@ -100,7 +101,7 @@ FIXED_CARRIED: frozenset[str] = frozenset((
     "merge_upsert", "metadata_documents", "mix_sampling",
     "multimodal_decode", "multimodal_meta", "multimodal_resize",
     "nb_classifier", "pagerank_parts", "percentile_quantity", "pii_scrub",
-    "pivot_avg_returnflag", "pmi_phrases", "portable_chain_probe",
+    "pivot_avg_returnflag", "pmi_phrases",
     "posexplode_tokens", "pq_adc_topk", "pq_quantize", "profile_orders",
     "project_rename_normalize", "quality_bins", "quantize_embeddings",
     "range_join_bands", "regexp_extract_unit", "repetition_signals",

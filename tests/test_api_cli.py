@@ -249,6 +249,8 @@ _HEADER_CASES = {
     # a backslash outside quotes, and space after a closing quote
     "bare_backslash": ("s.csv", b'a\\,b,c\n1,2,3\n'),
     "space_after_quote": ("w.csv", b'"a" ,"b"\t\n1,2\n'),
+    "blank_first_lines": ("l.csv", b"\n  \n\nfdc_id,amount\n1,2.5\n"),
+    "duplicates_case_sensitive": ("k.csv", b"fdc_id,amount,FDC_ID,amount,x\n1,2,3,4,5\n"),
 }
 
 
@@ -262,18 +264,23 @@ def test_read_usda_csv_header_matches_spark(spark, tmp_path, case):
     name, data = _HEADER_CASES[case]
     f = tmp_path / name
     f.write_bytes(data)
-    want = spark.read.option("header", True).csv(str(f)).columns
     sc = spark.sparkContext
     group = f"test_read_usda_csv_header_{case}"
-    sc.setJobGroup(group, "read_usda_csv")
     try:
+        if case == "duplicates_case_sensitive":
+            spark.conf.set("spark.sql.caseSensitive", "true")
+        want = spark.read.option("header", True).csv(str(f)).columns
+        sc.setJobGroup(group, "read_usda_csv")
         got = read_usda_csv(spark, str(f), "food_nutrient").columns
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.unset("spark.sql.caseSensitive")
     assert got == want
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     if case == "gzip":  # decompressed, not two equal misreads
         assert want == ["fdc_id", "nutrient_id", "amount"]
+    if case == "duplicates_case_sensitive":  # only exact repeats renamed
+        assert want == ["fdc_id", "amount1", "FDC_ID", "amount3", "x"]
 
 
 def test_read_usda_csv_missing_path_raises_spark_error(spark, tmp_path):

@@ -319,7 +319,9 @@ def test_bpe_train_matches_python_reference(spark, sf_dir):
 
 
 def test_bpe_encode_applies_merges_greedily(spark):
-    from usda_food_data_pipeline_spark.functions.bpe import bpe_encode, bpe_train
+    from bpe_reference import bpe_encode
+
+    from usda_food_data_pipeline_spark.functions.bpe import bpe_train
 
     df = spark.createDataFrame(
         [("the thermal theory there",), ("the other theme thе",)], "text string"

@@ -170,10 +170,9 @@ def test_bpe_encode_arrow_matches_expression(spark):
     including cascading merges (a rule whose output feeds a later
     rule), repeated pairs, empty/whitespace-only texts, and NULL text
     (NULL out, not an empty piece list)."""
-    from usda_food_data_pipeline_spark.functions.bpe import (
-        bpe_encode,
-        bpe_encode_arrow,
-    )
+    from bpe_reference import bpe_encode
+
+    from usda_food_data_pipeline_spark.functions.bpe import bpe_encode_arrow
     from usda_food_data_pipeline_spark.operators.dedup import tokenize
 
     rules = [

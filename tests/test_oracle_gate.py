@@ -7,7 +7,7 @@ over EVERY ``queries()`` entry — in-window and beyond — at the smoke
 scale, making the local checker a required check rather than an
 optional tool.
 
-Marked ``slow`` (r11 verdict task 2): the full 194-query sweep runs
+Marked ``slow`` (r11 verdict task 2): the full 192-query sweep runs
 ~700s and duplicates the gate the DRIVER itself runs over the window;
 the default pytest selection must fit the driver's verify window.  It
 still runs on every `pytest -m ""` (the round-close full run) and via

@@ -150,3 +150,29 @@ def test_literal_table_ceiling():
         pln.literal_table(
             _FakeSpark(), [(i,) for i in range(pln.MAX_LITERAL_ROWS + 1)], "n bigint"
         )
+
+
+def test_token_entropy_hand_values(spark):
+    """H = ln n - (sum c*ln c)/n on the nano grid, hand-recomputed with
+    the same portable chain + integer division."""
+    from usda_food_data_pipeline_spark.functions.textstats import token_entropy
+
+    df = spark.createDataFrame(
+        [
+            (1, "a a a a"),          # one token repeated: H = 0
+            (2, "a b c d"),          # uniform over 4: H = ln 4
+            (3, "a a b"),            # 2/3, 1/3 mix
+            (4, ""),                 # zero tokens: excluded
+        ],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: (r["n_tokens"], r["entropy_nanos"])
+           for r in token_entropy(df, "doc_id", "text").collect()}
+    n = lambda x: pln.py_grid_nanos(pln.py_ln_int(x))  # noqa: E731
+    assert set(got) == {1, 2, 3}
+    # doc 1: c=4 for 'a'; H = n(4) - (4*n(4)) DIV 4 = 0
+    assert got[1] == (4, 0)
+    # doc 2: four tokens with c=1; ln 1 = 0 => H = n(4)
+    assert got[2] == (4, n(4))
+    # doc 3: c_a=2, c_b=1; H = n(3) - (2*n(2) + 1*0) DIV 3
+    assert got[3] == (3, n(3) - (2 * n(2)) // 3)

@@ -6,7 +6,19 @@ column names, and an order-insensitive exact value comparison (floats
 must match bit-for-bit after the in-query rounding — the same bar the
 driver's value-hash sets).
 
-Usage: python tools/check_correctness.py [--sf-dir /root/testdata/sf0.01] [--only name,...]
+Usage:
+  python tools/check_correctness.py [--sf-dir DIR] [--only name,...]
+  # the same gate at several scales, siblings of --sf-dir's directory,
+  # with every per-query row collected into one JSON file
+  python tools/check_correctness.py --scales sf0.001,sf0.01,sf0.1 --out FILE
+  # the driver's window: the first N queries on a bare local[8] session
+  # (none of the engine's session configs), to catch configs the engine
+  # assumed but the driver does not set
+  python tools/check_correctness.py --vanilla --n 50
+
+Prints one JSON line per query and ``{"total_failures": n}`` per scale;
+with ``--scales`` also a per-scale count line, with ``--vanilla`` a
+window summary line.
 """
 
 from __future__ import annotations
@@ -153,42 +165,93 @@ def compare(name, spark_df, sql, con):
     return res
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    ap.add_argument("--only", default=None)
-    args = ap.parse_args()
-
-    import __spark_entry__ as e
-    from usda_food_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("correctness-check")
+def run_gate(spark, sf_dir: str, names: list[str], qs, oracles) -> list[dict]:
+    """Compare each named query against its oracle at ``sf_dir``,
+    printing one JSON row per query."""
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single-file tables; local scale fixtures
         # (tools/make_scale.py) are Spark-written part-file directories
-        src = f"{args.sf_dir}/{t}.parquet"
+        src = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(src):
             src = f"{src}/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-
-    qs = e.queries()
-    oracles = e.oracle_sql()
-    only = set(args.only.split(",")) if args.only else None
-
-    n_fail = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    rows = []
+    for name in names:
         try:
-            res = compare(name, fn(spark, args.sf_dir), oracles.get(name), con)
+            res = compare(name, qs[name](spark, sf_dir), oracles.get(name), con)
         except Exception as ex:  # noqa: BLE001
             res = {"query": name, "status": "error", "error": str(ex)[:500], "ok": False}
-        if not res.get("ok"):
-            n_fail += 1
-        print(json.dumps(res))
-    print(json.dumps({"total_failures": n_fail}))
-    return 1 if n_fail else 0
+        print(json.dumps(res), flush=True)
+        rows.append(res)
+    return rows
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    ap.add_argument("--only", default=None)
+    ap.add_argument("--scales", default=None,
+                    help="comma list of scale directories next to --sf-dir's, e.g. sf0.001,sf0.1")
+    ap.add_argument("--out", default=None, help="write every scale's rows to this JSON file")
+    ap.add_argument("--vanilla", action="store_true",
+                    help="bare local[8] SparkSession instead of the engine's session")
+    ap.add_argument("--n", type=int, default=None, help="check only the first N queries")
+    args = ap.parse_args()
+
+    import __spark_entry__ as e
+
+    if args.vanilla:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.master("local[8]").getOrCreate()
+    else:
+        from usda_food_data_pipeline_spark.session import get_spark
+
+        spark = get_spark("correctness-check")
+    qs = e.queries()
+    oracles = e.oracle_sql()
+    names = list(qs)[: args.n]
+    if args.only:
+        only = set(args.only.split(","))
+        names = [n for n in names if n in only]
+    if args.scales:
+        root = os.path.dirname(os.path.abspath(args.sf_dir))
+        sf_dirs = [os.path.join(root, sf) for sf in args.scales.split(",")]
+    else:
+        sf_dirs = [args.sf_dir]
+
+    result = {}
+    n_fail_all = 0
+    for sf_dir in sf_dirs:
+        rows = run_gate(spark, sf_dir, names, qs, oracles)
+        failures = [r["query"] for r in rows if not r.get("ok")]
+        n_fail_all += len(failures)
+        print(json.dumps({"total_failures": len(failures)}))
+        sf = os.path.basename(sf_dir.rstrip("/"))
+        result[sf] = {
+            "total_failures": len(failures),
+            "n_queries": len(rows),
+            "n_match": sum(1 for r in rows if r.get("status") == "match"),
+            "n_rows_only": sum(1 for r in rows if r.get("status") == "rows_only"),
+            "queries": {r["query"]: r for r in rows},
+        }
+        if args.scales:
+            print(json.dumps({sf: {k: v for k, v in result[sf].items() if k != "queries"}}),
+                  flush=True)
+        if args.vanilla:
+            print(json.dumps({
+                "window": len(rows),
+                "green": len(rows) - len(failures),
+                "failures": failures,
+                "vanilla_session": True,
+                "sf_dir": sf_dir,
+            }))
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(result, f, indent=1)
+        print("wrote", args.out)
+    return 1 if n_fail_all else 0
 
 
 if __name__ == "__main__":

@@ -119,40 +119,15 @@ def bpe_rules_df(spark, rules: list[tuple[int, str, str, str, int]]) -> DataFram
     )
 
 
-def bpe_encode(text: Column, rules: list[tuple[int, str, str, str, int]]) -> Column:
-    """Apply a trained merge table to text: per word, split to chars
-    and fold every rule in training order. Expression-only — the merge
-    table is compiled into the plan (a broadcast-free 'tiny dim'), so
-    encoding is embarrassingly parallel over documents.
-
-    Prefer :func:`bpe_encode_arrow` on a hot path: the n_merges
-    ``F.aggregate`` folds here are interpreted per element with
-    array-copy accumulation, and the Arrow twin measured 0.75× on the
-    full encode query (r12 opt; equality pinned by
-    tests/test_opt_r12b.py on cascading/tie/empty cases and by the
-    oracle gate). This form stays as the plan-only reference the
-    oracle SQL mirrors."""
-
-    def encode_word(w: Column) -> Column:
-        syms = F.split(w, "")
-        for _, left, right, _, _ in rules:
-            syms = merge_pair(syms, left, right)
-        return syms
-
-    from ..operators.dedup import tokenize
-
-    return F.flatten(F.transform(tokenize(text), encode_word))
-
-
 def bpe_encode_arrow(tokens: Column, rules: list[tuple[int, str, str, str, int]]) -> Column:
-    """Arrow-batched twin of :func:`bpe_encode` over an already-token-
-    ized array column: one pandas_udf pass applies the whole merge
-    table per word with plain-list greedy merges and a per-batch word
-    cache (guide §4.2 — per-batch native beats n_merges interpreted
-    expression folds; same-session A/B 0.75× on bpe_encode_stats).
-    Arithmetic contract is IDENTICAL to the expression form: greedy
+    """Apply a trained merge table to an already-tokenized array column:
+    one pandas_udf pass applies the whole merge table per word with
+    plain-list greedy merges and a per-batch word cache (guide §4.2 —
+    per-batch native beats n_merges interpreted expression folds;
+    same-session A/B 0.75× on bpe_encode_stats). Semantics: greedy
     left-to-right non-overlapping replacement per rule, rules in
-    training order (pinned against :func:`bpe_encode` by
+    training order — the same fold as :func:`merge_pair` applied rule
+    by rule (pinned against that expression form in
     tests/test_opt_r12b.py)."""
     from pyspark.sql.types import ArrayType, StringType
 

@@ -143,10 +143,9 @@ def dsir_select(
     # combine left-associated ENTIRELY in exact integer arithmetic —
     #   ((n(ct+1) + n(nq+B)) - n(cq+1)) - n(nt+B), n(x) = snap(ln x).
     # Cross-engine agreement rests only on the four single-ln snaps
-    # per bucket (what the portable_chain_probe driver row measures),
-    # never on a combine of doubles, and the former BIGINT×DECIMAL
-    # product whose promotion rules vary across DuckDB versions is
-    # gone — scoring is BIGINT·BIGINT throughout.
+    # per bucket, never on a combine of doubles, and the former
+    # BIGINT×DECIMAL product whose promotion rules vary across DuckDB
+    # versions is gone — scoring is BIGINT·BIGINT throughout.
     def _lr_nanos(b: int, c: int) -> int:
         n = lambda x: py_grid_nanos(py_ln_int(x))  # noqa: E731
         return ((n(ct_rows.get(b, 0) + 1) + n(nq + n_buckets)) - n(c + 1)) - n(

@@ -31,17 +31,14 @@ Shape (all linear, no pair generation):
   the backoff ratio 0.4·c/N decomposes to integers as
   ln(2c) − ln(5N)), per-doc sums are BIGINT sums, and the keep
   threshold is a BIGINT cross-multiplication — cross-engine agreement
-  rests ONLY on the per-distinct-count single-ln snaps (measured
-  directly by the portable_chain_probe driver row), never on
+  rests ONLY on the per-distinct-count single-ln snaps, never on
   per-occurrence double combines (rounds 6-8 each lost an ULP
   somewhere in a combine-then-snap of doubles on SOME DuckDB build).
 
-``sum_lp_nanos`` ships AS the exact BIGINT nano sum (r11 verdict task
-1: the portable_chain_probe driver row came back rows/schema-green but
-hash-red EXACTLY on its DECIMAL(38,9) columns with every BIGINT nano
-column green — the int→DECIMAL(38,9) output conversion is the one
-driver-environment-divergent link left, so it is gone from the
-driver-compared surface entirely; consumers scale by 1e-9).
+``sum_lp_nanos`` ships AS the exact BIGINT nano sum: an
+int→DECIMAL(38,9) output conversion diverged between DuckDB builds
+while every BIGINT nano value agreed, so no DECIMAL(38,9) reaches the
+compared surface; consumers scale by 1e-9.
 
 Reference analog: none (the reference pipeline has no quality model);
 this extends SURVEY.md §2's text-analysis family per the LLM-pipeline
@@ -177,8 +174,7 @@ def lm_score_stupid_backoff(
     # count's ln is snapped to integer grid nanos HERE, once per
     # distinct value, and every downstream combine/sum/threshold runs
     # in exact integer space.  Cross-engine agreement then rests only
-    # on these per-distinct-value single-ln snaps (what the
-    # portable_chain_probe driver row measures) — not on thousands of
+    # on these per-distinct-value single-ln snaps — not on thousands of
     # per-occurrence double combines (~1000× less ULP exposure than
     # the after-combine snap this replaces).
     ln_bg = literal_table(

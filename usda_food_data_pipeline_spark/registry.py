@@ -52,432 +52,165 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
     return wrap
 
 
-# The driver's CORRECTNESS gate verifies the FIRST 50 registered queries
-# (observed: CORRECTNESS_r01.json = exactly the first 50 of 66). Ordering is
-# therefore explicit, not import-order: one query per distinct operator goes
-# inside the window; redundant TPC-H shape variants and the two rows-only
-# sketch queries go after it (still bench-run and locally oracle-verified by
-# tools/check_correctness.py, and ordered by value in case the window grows).
+# The driver's correctness gate checks the FIRST 50 queries in this
+# order, so the order is explicit, not import order. Every window slot
+# holds a query with an exact DuckDB oracle and no transcendental on
+# either side (tests/test_rotation_gate.py), one query per operator
+# family; everything past slot 50 is still bench-run and oracle-checked
+# locally by tools/check_correctness.py. Rotation history lives in git.
+#
+# slot  query                     why it holds a window slot
+#   1   flagship                  the reference pipeline: star-schema join chain
+#   2   dedup_latest_order        keep-latest dedup (row_number window)
+#   3   semi_join_orders          semi-join (the reference's isin filter)
+#   4   doc_repetition            Gopher per-doc repetition ratios
+#   5   project_rename_normalize  projection + rename + trim/upper normalize
+#   6   lm_doc_scores             bigram LM scores as exact BIGINT ln-nano sums
+#   7   group_mean                group-mean collapse of duplicate measurements
+#   8   pivot_avg_returnflag      group-avg pivot, long to wide
+#   9   dsir_select               DSIR importance resampling, BIGINT ln-nano sums
+#  10   densest_rows              per-row null count + top-k (TakeOrdered)
+#  11   seeded_sample             deterministic sampling by content hash
+#  12   scalar_functions          string/number scalars, try_cast, bround, regexp
+#  13   metadata_documents        row to key-value metadata document
+#  14   tpch_q1                   TPC-H Q1 pricing summary aggregate
+#  15   ivf_adc_topk              compressed-domain ANN (IVF prune + ADC scoring)
+#  16   pagerank_parts            iterative graph mass propagation
+#  17   cosine_topk               exact vector top-k
+#  18   merge_upsert              CDC MERGE
+#  19   semantic_dedup            blocked cosine self-join dedup
+#  20   boilerplate_scrub         corpus-level boilerplate removal
+#  21   nb_classifier             trainable text classifier
+#  22   dedup_ngram_jaccard       exact n-gram Jaccard dedup
+#  23   dedup_minhash_lsh         MinHash-LSH dedup
+#  24   dedup_simhash             SimHash fingerprints
+#  25   cms_heavy_hitters         count-min sketch (frequency sketch table)
+#  26   text_signals              per-doc language + quality signals
+#  27   containment_pairs         set-containment join (oracle models the L1
+#                                 path: guard drops must stay 0 at the driver's sf)
+#  28   bm25_retrieval            lexical retrieval
+#  29   fuzzy_name_join           record linkage (blocked edit-distance join)
+#  30   multimodal_decode         mapInPandas binary decode (WAV/BMP)
+#  31   text_embed                hashing featurizer embeddings
+#  32   dedup_clusters            connected components over dedup pairs
+#  33   training_pipeline         composite curation pipeline
+#  34   window_tumbling_sliding   tumbling + sliding event-time windows
+#  35   interval_overlap          interval-overlap temporal join
+#  36   funnel_conversion         ordered funnel
+#  37   asof_join_events          as-of join
+#  38   label_propagation         community detection (label propagation)
+#  39   data_expectations         declarative data-quality gate
+#  40   scd2_history              SCD-2 validity-interval history
+#  41   sessionize_gaps           batch sessionization (lag + running flag sum)
+#  42   weighted_sample           weighted sampling; the in-plan portable ln
+#  43   ann_recall_eval           ANN recall@10 harness
+#  44   decontaminate             n-gram benchmark decontamination
+#  45   dup_substring_spans       substring-level dedup
+#  46   kmeans_embeddings         exact-integer Lloyd clustering loop
+#  47   skew_salted_sum           skew salting
+#  48   hll_distinct              HyperLogLog (cardinality sketch)
+#  49   kcore_nodes               bounded-round k-core peel
+#  50   filter_not_contains       negated-contains filter + null drop
+#
+# Beyond the window, in order; each group's families are attested by an
+# in-window query above:
+# - threshold_nullout: first to re-enter if the window grows;
+# - gap_fill_daily .. rolling_anomaly: rotated out with long green
+#   histories to make room for new families;
+# - gopher_rules .. vector_stats: operators added after their family
+#   already had a window slot;
+# - sequence_packing .. hamming_topk: the same, the rows-only bpe_train
+#   among them;
+# - text_tokens .. events_twap: earlier operators whose shape an
+#   in-window query already covers (TPC-H variants included), and the
+#   two rows-only approximate sketches.
 _ORDER: list[str] = [
-    # -------- inside the 50-entry driver window --------
     "flagship",
     "dedup_latest_order",
     "semi_join_orders",
-    # round-10 rotation (r09 verdict task 2, rotation backlog):
-    # doc_repetition takes mix_sampling's slot. mix_sampling holds
-    # driver-green rows r02-r09 (eight consecutive rounds); the
-    # deterministic-sampling family stays in-window via seeded_sample,
-    # the anti-join shape via semi_join_orders' complement +
-    # anti_join_customers' local+CI row, and mix_sampling keeps its
-    # local+CI row. Gopher-style per-doc repetition ratios (dup-line /
-    # dup-paragraph / top-ngram mass) are the curation-signal family's
-    # repetition axis and had no driver row.
-    # (former slot note, retained for the audit trail)
-    # mix_sampling takes the complement-join slot: left_anti is the shape
-    # complement of the in-window semi-join (anti keeps local+CI rows);
-    # training-mix sampling is a distinct operator family that needs a
-    # driver row (r02 verdict: new ops locally-attested-only is the gap)
     "doc_repetition",
     "project_rename_normalize",
-    # round-12 rotation (r11 verdict task 1 — the bisect RESOLVED):
-    # lm_doc_scores re-enters in filter_not_contains' slot.  The r11
-    # driver evidence localized the four-round divergence to the one
-    # remaining driver-compared link: portable_chain_probe came back
-    # rows/schema-green + hash-RED exactly on its DECIMAL(38,9) bisect
-    # columns while every BIGINT nano column stayed green, and
-    # ln_domain_census (every single-ln argument lm/dsir evaluate at
-    # the driver's sf, BIGINT nanos) was GREEN.  Per the probe's
-    # decision table (functions/chain_probe.py docstring), lm_doc_scores
-    # now ships its per-doc sum as exact BIGINT nanos (sum_lp_nanos) —
-    # the int→DECIMAL(38,9) output conversion is gone engine-wide from
-    # the driver-compared surface.  filter_not_contains holds
-    # driver-green rows r01-r11 (eleven consecutive rounds); the scan
-    # filter family stays attested in-window by flagship /
-    # decontaminate / semi_join_orders' predicates and it keeps its
-    # local+CI row.
     "lm_doc_scores",
     "group_mean",
     "pivot_avg_returnflag",
-    # round-12 rotation (r11 verdict task 1, same resolution as
-    # lm_doc_scores above): dsir_select re-enters in threshold_nullout's
-    # slot shipping exact BIGINT nano sums (sum_lw_nanos).
-    # threshold_nullout holds driver-green rows r01-r11; the conditional
-    # projection family stays attested in-window by
-    # project_rename_normalize + scalar_functions and it keeps its
-    # local+CI row.
     "dsir_select",
     "densest_rows",
     "seeded_sample",
     "scalar_functions",
     "metadata_documents",
     "tpch_q1",
-    # round-11 rotation (r10 verdict tasks 1-2, first commit): the
-    # lm_doc_scores re-entry failed the driver hash a FOURTH time in
-    # r10 despite the probe-certified per-term BIGINT restructure, so
-    # it rotates OUT unconditionally (established r09 procedure) and
-    # stays out until the two newly-probed links (full-domain ln
-    # census + DECIMAL(38,9) conversion columns, this round's rows)
-    # come back green. It keeps its local+CI gate (exact vs local
-    # DuckDB at 3 scales, every round since r08). Its slot goes to
-    # ivf_adc_topk: the compressed-domain ANN read path (coarse-cell
-    # prune + ADC LUT scoring, operators/kmeans.py:481) — a distinct
-    # serving family from the in-window exact cosine_topk and the
-    # ann_recall_eval harness, with a 3-scale exact oracle since r10
-    # and a 30x sf3 probe (PLANS.md item 13).
-    # (former slot note, retained for the audit trail)
-    # lm_doc_scores re-entered in grouping_sets' slot r10 after the
-    # portable_chain_probe driver row came back green; grouping_sets
-    # (driver-green r01-r09) keeps its local+CI row and the Expand
-    # family stays attested via flagship/group_mean/tpch_q1
     "ivf_adc_topk",
-    # pagerank_parts takes distinct_agg's slot: the Expand-based
-    # distinct-aggregate shape stays attested by grouping_sets' 9-round
-    # driver-green history + local+CI row (grouping_sets displaced r10,
-    # see above; distinct_agg keeps its local+CI row); the
-    # iterative graph operator is a new family that needs a driver row
     "pagerank_parts",
     "cosine_topk",
-    # merge_upsert takes ivf_topk's slot: the ANN family stays attested
-    # by cosine_topk + hamming_topk (ivf_topk keeps its local+CI row and
-    # its partition-pruning plan pin in test_layout.py); CDC MERGE is a
-    # new operator family that needs a driver row
     "merge_upsert",
-    # semantic_dedup subsumes embedding_neardup's attestation (round 5):
-    # same blocked cosine self-join shape, plus the sign-bit bucket
-    # blocking and keep-lowest-id survivor selection on top; neardup
-    # keeps its local+CI row beyond the window
     "semantic_dedup",
-    # boilerplate_scrub takes knn_join's slot: V2 ANN stays attested by
-    # cosine_topk + ivf_topk; corpus-level boilerplate removal is a new
-    # operator family that needs a driver row
     "boilerplate_scrub",
-    # nb_classifier takes dedup_exact's slot: the md5-groupBy exact-dedup
-    # stage is attested inside training_pipeline's composite oracle (and
-    # dedup_exact keeps its local+CI row); the trainable classifier is a
-    # new operator family
     "nb_classifier",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    # round-11 rotation (r10 verdict task 1): ln_domain_census takes
-    # cms_heavy_hitters' slot FOR THE BISECT ROUND. The census is the
-    # second of the two probe rows the r10 verdict requires in-window
-    # (the extended portable_chain_probe keeps slot 50): it evaluates
-    # the portable chain over the ACTUAL data-dependent ln argument
-    # domain lm/dsir use at the driver's sf — the link the fixed
-    # literals cannot cover. cms_heavy_hitters holds driver-green rows
-    # r08-r10 (three consecutive rounds); the mergeable-sketch TABLE
-    # shape (fixed-width integer sketch + broadcast estimation join)
-    # stays attested in-window by hll_distinct (cardinality member of
-    # the same family; cms is the frequency member and keeps its
-    # local+CI row). Once the bisect resolves, the census rotates back
-    # out and cms re-enters.
-    # (former slot note, retained for the audit trail)
-    # cms_heavy_hitters took gap_fill_daily's slot (round 8, r07
-    # verdict task 4): gap-fill got its driver-green row in r07 and its
-    # family stays attested in-window — the sequence()-explode Generate
-    # shape by decontaminate's n-gram explode, the
-    # last-observation-carried-forward window by dedup_latest_order /
-    # sessionize_gaps' analytic windows; gap_fill keeps its local+CI
-    # row. The mergeable-sketch family (fixed-width counter table,
-    # broadcast-join estimation, exactly-twinnable approximate
-    # structure) had NO driver row
-    "ln_domain_census",
-    # (former slot note, retained for the audit trail)
-    # gap_fill_daily took text_tokens' slot (round 5 rotation): the
-    # per-doc tokenize-and-derive projection family stays attested by
-    # text_signals (same two-stage tokenize + regex-scan shape; the
-    # mean-token-length formula runs inside its quality term) and
-    # text_tokens keeps its local+CI row; calendar gap-fill (sequence()
-    # explode + last-observation-carried-forward window) is a distinct
-    # warehouse operator family that needs a driver row
-    # text_signals = text_langid + text_quality merged (round 4): one
-    # per-doc row attests both formulas, freeing a slot for bm25_retrieval
+    "cms_heavy_hitters",
     "text_signals",
-    # round-10 rotation (r09 verdict task 2, rotation backlog):
-    # containment_pairs takes rolling_anomaly's slot. rolling_anomaly
-    # holds driver-green rows r05-r09; the analytic-window family stays
-    # in-window via sessionize_gaps (lag + cumulative sum) and
-    # dedup_latest_order (row_number), and rolling_anomaly keeps its
-    # local+CI row. The asymmetric set-containment join carries the L2
-    # super-shingle escalation since r09; ELIGIBILITY NOTE (standing):
-    # its oracle twin models the L1 path only, so the window requires
-    # guard-drops=0 at the driver's sf — verified this round at sf0.01
-    # (and holding through sf0.1); the cap first engages at sf3.
-    # (former slot note, retained for the audit trail)
-    # rolling_anomaly takes text_fingerprint's slot (round 5 rotation):
-    # the md5-derived per-doc integer-fold family stays attested by
-    # dedup_simhash (token-hash array + bit folds) and text_embed
-    # (hashing featurizer); fingerprint keeps its local+CI row. The
-    # rows-between rolling mean/std z-score screen is the time-series
-    # quality-gate family with no in-window twin
     "containment_pairs",
-    # round-4 operator families: lexical retrieval + binary-sketch ANN
     "bm25_retrieval",
-    # fuzzy_name_join takes hamming_topk's slot (round 6): the ANN
-    # family stays attested by cosine_topk (hamming keeps its local+CI
-    # row and bit-level unit tests); record linkage (symmetric-delete
-    # blocked edit-distance join) is a new operator family that needs a
-    # driver row
     "fuzzy_name_join",
-    # decode subsumes meta's attestation: real mapInPandas binary plumbing
-    # (synthesize + decode stages) plus the WAV/BMP codecs; meta is
-    # expression-only metadata and keeps its local row beyond the window
     "multimodal_decode",
     "text_embed",
     "dedup_clusters",
     "training_pipeline",
-    # window_tumbling_sliding = tumbling + sliding merged (round 4):
-    # one unioned attestation, freeing a slot for hamming_topk
     "window_tumbling_sliding",
-    # interval_overlap takes window_session's slot (round 5 rotation):
-    # session-window semantics stay attested in-window by
-    # sessionize_gaps (the batch twin assembles the same sessions via
-    # lag + cumulative flag sum) and the streaming-window family by
-    # window_tumbling_sliding + funnel_conversion; window_session keeps
-    # its local+CI row and its readStream twin in test_streaming.py.
-    # The canonical-bucket interval-overlap join is a temporal join
-    # family distinct from as-of (backward-only) and band range joins
     "interval_overlap",
     "funnel_conversion",
     "asof_join_events",
-    # label_propagation takes dedup_stats' slot (round 8, r07 verdict
-    # task 4): dedup_stats got its driver-green row in r07 and its
-    # two-level agg shape stays attested by group_mean + the four
-    # in-window dedup queries (its own r07 rotation note); it keeps its
-    # local+CI row. Deterministic community detection (synchronous LPA
-    # — iterative label joins, the second graph family after pagerank's
-    # mass iteration) had no driver row
     "label_propagation",
-    # (former slot note, retained for the audit trail)
-    # dedup_stats took range_join_bands' slot (round 7, r06 verdict
-    # task 5): the banded range join's explode-bucket + equi-join +
-    # exact-predicate shape stays attested in-window by
-    # interval_overlap (same canonical-bucket plan family) next to
-    # asof_join_events; range_join_bands keeps its local+CI row and
-    # its no-NLJ plan pin. The dedup observability rollup (cluster-size
-    # histogram over the exact-dedup groups table) is the reporting
-    # family a curation run publishes and had no driver row
-    # data_expectations takes set_ops' slot: union/except/intersect keep
-    # their local+CI row (the union shape also runs inside
-    # data_expectations' result assembly); the declarative quality gate
-    # is a new operator family that needs a driver row
     "data_expectations",
-    # scd2_history takes unpivot_orders' slot (round 4 rotation): the
-    # unpivot/stack Expand shape stays attested by grouping_sets (same
-    # Expand plan family; unpivot keeps its local+CI row); SCD-2
-    # validity-interval history is a warehouse operator family distinct
-    # from merge_upsert and needs its own driver row
     "scd2_history",
-    # sessionize_gaps takes window_running's slot: the analytic-window
-    # family stays attested by dedup_latest_order (row_number) and
-    # percentile_quantity (rank windows); window_running keeps its
-    # local+CI row. Batch sessionization (lag + cumulative flag sum) is
-    # the batch twin of the streaming session window and needs a driver
-    # row of its own
     "sessionize_gaps",
-    # (former slot note, retained for the audit trail)
-    # bm25_batch took doc_novelty's slot in round 8 and went
-    # driver-green; round 9 hands that slot to portable_chain_probe
-    # (see the end of the window) — bm25_batch keeps its r08
-    # driver-green history, its local+CI row, and its family stays
-    # attested by bm25_retrieval
-    # doc_novelty took triangle_count's slot (round 7, r06 verdict
-    # task 5): the graph family stays attested in-window by
-    # pagerank_parts, and triangle_count keeps its local+CI row plus
-    # its degree-orientation/no-NLJ plan-pin tests. Per-doc novelty
-    # (corpus-unique shingle fraction + mean shingle df) is the
-    # keep-fresh-content curation signal and had no driver row; its
-    # inverted-index df shape is shared with the dedup prefix filter
-    # round-6 rotation (r05 verdict task 7): the four round-5 operators
-    # with exact oracles move into the window; each displaced query's
-    # family keeps an in-window twin and its own local+CI row.
-    # round-11 rotation (r10 verdict tasks 1-2): dsir_select rotates
-    # OUT with lm_doc_scores (fourth consecutive driver hash-mismatch
-    # on re-entry; see the lm slot note above — same probe-backed
-    # re-entry condition applies). It keeps its 3-scale local+CI gate.
-    # Its slot goes to weighted_sample: Efraimidis-Spirakis weighted
-    # sampling without replacement (operators/topk.py:198) — the
-    # quality-weighted member of the sampling family (seeded_sample
-    # attests the uniform member in-window) and the only query
-    # exercising the per-row in-plan portable ln primitive
-    # (ln_int_col), which no other window row covers.
-    # (former r10 slot note, retained for the audit trail)
-    # dsir_select re-entered in snapshot_read's slot r10 (probe-backed,
-    # per-term BIGINT snapping); snapshot_read holds driver-green rows
-    # r06-r09, keeps its local+CI row, and the warehouse family stays
-    # in-window via merge_upsert + scd2_history
     "weighted_sample",
-    # ann_recall_eval takes table_diff's slot (round 8, r07 verdict
-    # task 4): table_diff got its driver-green row in rounds 6-7 and
-    # its full-outer reconciliation shape stays attested by
-    # merge_upsert (CDC family); it keeps its local+CI row. The
-    # ANN-quality eval harness (IVF nprobe=1 vs brute-force recall@10
-    # in one plan — the measurement every ANN deployment ships with)
-    # had no driver row
     "ann_recall_eval",
-    # (former slot note, retained for the audit trail)
-    # table_diff took topk_avg_retrieved's slot (retrieval attested by
-    # cosine_topk + bm25_retrieval; the avg-over-topk agg ⊂ group_mean):
-    # version reconciliation (CDC capture's batch twin)
     "decontaminate",
-    # dup_substring_spans takes dedup_stats' slot (the cluster-size
-    # histogram's two-level agg ⊂ group_mean + the four in-window
-    # dedup queries): SUBSTRING-level dedup is the one dedup granularity
-    # the doc-level family cannot attest
     "dup_substring_spans",
-    # round-6 second-session rotation: kmeans_embeddings takes
-    # quantize_embeddings' slot (scan-local vector projections stay
-    # attested by text_embed + cosine_topk; quantize keeps its local+CI
-    # row): exact-integer Lloyd is the engine's only oracle-checked
-    # ITERATIVE clustering loop — no in-window twin
     "kmeans_embeddings",
     "skew_salted_sum",
-    # round-9 rotation (r08 verdict task 1, unconditional): lm_doc_scores
-    # and dsir_select are OUT of the window after three consecutive
-    # driver hash-mismatches. Both rows are exact against local DuckDB
-    # at sf0.001/0.01/0.1 (CORRECTNESS_LOCAL_r12) and a vanilla-session
-    # driver-gate simulation passed 50/50, so the divergence is
-    # driver-environment-resident and cannot be validated away locally.
-    # They keep their local+CI gates beyond the window; re-entry waits
-    # for a green portable_chain_probe driver row (see below) plus the
-    # per-term BIGINT snapping restructure. Their slots go to the two
-    # round-8 operators with 3-scale exact oracles:
-    # hll_distinct — mergeable-sketch distinct count (256-register HLL
-    # built via one 256-row max-aggregate, exact integer harmonic sum);
-    # no in-window sketch twin (cms_heavy_hitters is frequency, not
-    # cardinality)
     "hll_distinct",
-    # kcore_nodes — bounded-round k-core peel; the graph family stays
-    # multiply attested (pagerank_parts, label_propagation) and the
-    # subgraph-peeling iteration shape has no in-window twin
     "kcore_nodes",
-    # portable_chain_probe takes bm25_batch's slot (bm25_batch is
-    # driver-green in r08 and its batch-retrieval shape stays attested
-    # by bm25_retrieval; it keeps its local+CI row): a fixed-literal
-    # diagnostic that evaluates the portable ln/exp chain over
-    # adversarial grid-boundary inputs and emits per-input BIGINT nanos
-    # plus 2- and 4-term combines snapped per-term and after-combine.
-    # Its driver row bisects the lm/dsir driver-env divergence: green ⇒
-    # the chain is fine in the driver's DuckDB and the defect was in
-    # lm/dsir's DECIMAL arithmetic; red ⇒ the chain itself diverges and
-    # the mismatching inputs are identifiable by row (r08 verdict task 2)
-    "portable_chain_probe",
-    # -------- beyond the window: shape variants of already-attested ops --------
-    # (try_cast_round / regexp_extract_unit fold into scalar_functions'
-    # coerced_price / unit_extracted columns; global_sort_topk and tpch_q3 are
-    # the same TakeOrdered / join-chain shapes as densest_rows and flagship)
-    # displaced round 8 (r07 verdict task 4 rotation) — all four hold
-    # driver-green rows from earlier rounds and in-window family twins
-    # (see the in-window slot notes above)
+    "filter_not_contains",
+    # -------- beyond the window --------
+    "threshold_nullout",
     "gap_fill_daily",
     "dedup_stats",
     "doc_novelty",
     "table_diff",
-    # (round-9 note, retained for the audit trail) lm_doc_scores and
-    # dsir_select sat here rounds 9 only: three consecutive driver
-    # hash-mismatches, exact against local DuckDB at all three scales.
-    # Round 10 re-rotated both in-window after the portable_chain_probe
-    # driver row came back GREEN and the per-term BIGINT restructure
-    # removed the implicated DECIMAL promotion (see the in-window notes).
-    # displaced round 9 to free a slot for portable_chain_probe;
-    # driver-green in r08, family attested by bm25_retrieval
     "bm25_batch",
-    # displaced round 10 (r09 verdict tasks 1-2 rotation — see the
-    # in-window slot notes): all four hold multi-round driver-green
-    # histories and in-window family twins
     "grouping_sets",
     "snapshot_read",
     "mix_sampling",
     "rolling_anomaly",
-    # round-9 operators (exact oracles; 3-scale local rows per the
-    # round-end collect): Gopher rule-table filter, PMI collocation
-    # mining on the per-term-snapped portable chain, product
-    # quantization over the exact-integer Lloyd codebooks
     "gopher_rules",
     "pmi_phrases",
     "pq_quantize",
-    # round-10 ADC operators beyond the window (ivf_adc_topk moved
-    # in-window round 11 — see the window notes): recall harness and
-    # two-stage rerank read; family attested in-window by cosine_topk +
-    # ann_recall_eval + ivf_adc_topk
     "adc_recall_eval",
     "adc_rerank_topk",
-    # round-11 operator: MinHash-LSH candidate recall vs exact-Jaccard
-    # truth per similarity decile — the dedup-family recall harness
-    # (family attested in-window by dedup_minhash_lsh +
-    # dedup_ngram_jaccard, whose verified pair values are its inputs)
     "lsh_recall_eval",
-    # round-11 operator: Morton clustering key — the oracle row for the
-    # data-skipping layout family (write_zorder/compact_parquet were
-    # tests-only; the projection family is attested in-window by
-    # scalar_functions)
     "zorder_key_map",
-    # round-11 operator: classifier reliability bands (top1-top2 margin
-    # vs accuracy) — the calibration read a pipeline does before using
-    # classifier confidence as a filter knob; family attested in-window
-    # by nb_classifier
     "nb_calibration",
-    # round-11 operator: Manku pigeonhole-banded SimHash near-dup JOIN
-    # (completeness is a theorem, not an S-curve) — closes the gap
-    # between the in-window dedup_simhash fingerprint table and an
-    # actual dedup decision; 8-bytes-per-doc state
     "simhash_neardup",
-    # round-11 operator: per-doc token-distribution Shannon entropy in
-    # exact integer ln-nanos — second consumer of the in-plan portable
-    # ln (per-row arguments, zero collects); quality-signal family
-    # attested in-window by text_signals
     "token_entropy",
-    # round-11 operator: D4/SemDeDup topic-balanced selection (k-means
-    # clusters + per-cluster content-hash cap, WindowGroupLimit-bounded
-    # exchange); clustering attested in-window by kmeans_embeddings
     "cluster_balanced_sample",
-    # round-11 operator: per-dimension embedding datacard (index health
-    # / quantization calibration); dimensionality-bounded exchange,
-    # exact dyadic-grid component sums
     "vector_stats",
-    # (round-11 note, retained for the audit trail) lm_doc_scores and
-    # dsir_select sat here round 11 while the bisect rows ran; the r11
-    # driver evidence named the broken link (the int→DECIMAL(38,9)
-    # output conversion — probe hash-red on exactly those columns,
-    # census green) and both re-entered the window round 12 shipping
-    # BIGINT nano sums (see the in-window slot notes).
-    # displaced round 12 for their slots (driver-green r01-r11 each;
-    # filter family attested by flagship/decontaminate/semi_join_orders,
-    # conditional projection by project_rename_normalize +
-    # scalar_functions; both keep local+CI rows):
-    "filter_not_contains",
-    "threshold_nullout",
-    # displaced round 11 for the census's bisect slot (driver-green
-    # r08-r10; sketch-table family attested in-window by hll_distinct;
-    # re-enters when the census rotates out)
-    "cms_heavy_hitters",
-    # round-6 operators whose families are already driver-attested
     "sequence_packing",
     "quantize_embeddings",
     "skew_salted_join",
     "bpe_train",
-    # round-11: bpe_encode_stats gives the BPE family its exact-oracle
-    # row (the 6 training rounds unroll in SQL; the greedy merge fold
-    # replays via list_reduce with a leading-separator invariant) —
-    # bpe_train itself stays rows-only (driver-loop argmax)
     "bpe_encode_stats",
     "quality_bins",
     "hamming_topk",
-    # displaced from the window round 5 (family attested by an in-window
-    # twin: text_tokens' tokenize projection ⊂ text_signals,
-    # text_fingerprint's md5 folds ⊂ dedup_simhash, window_session ⊂
-    # window_tumbling_sliding/sessionize_gaps)
     "text_tokens",
     "text_fingerprint",
     "window_session",
-    # displaced from the window round 4 (family attested by an in-window
-    # twin: events_agg ⊂ window_tumbling_sliding, unpivot's Expand ⊂
-    # grouping_sets, percentile's rank window ⊂ dedup_latest_order)
     "events_agg",
     "unpivot_orders",
     "percentile_quantity",
-    # displaced from the window round 6 (family attested by an in-window twin)
     "ivf_topk",
     "set_ops",
     "distinct_agg",
@@ -516,18 +249,8 @@ _ORDER: list[str] = [
     "multimodal_resize",
     "profile_orders",
     "dataset_split",
-    # displaced from the window round 7 (family attested by an
-    # in-window twin — see the rotation comments inside the window):
-    # range_join_bands ⊂ interval_overlap's canonical-bucket join,
-    # triangle_count's graph family ⊂ pagerank_parts
     "range_join_bands",
     "triangle_count",
-    # displaced from the window round 6 (family attested by an
-    # in-window twin — see the rotation comments inside the window):
-    # chunk_documents ⊂ decontaminate's Generate shape,
-    # topk_avg_retrieved ⊂ cosine_topk + group_mean, pii_scrub ⊂
-    # text_signals/boilerplate_scrub regex projections, events_twap ⊂
-    # the six-member in-window temporal family
     "chunk_documents",
     "topk_avg_retrieved",
     "pii_scrub",

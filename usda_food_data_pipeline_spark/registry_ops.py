@@ -1021,7 +1021,7 @@ def q_zorder_key_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE encode (functions/bpe.bpe_encode): apply the trained merge table
+# BPE encode (functions/bpe.bpe_encode_arrow): apply the trained merge table
 # to the corpus — upgrades the BPE family from rows-only (bpe_train's
 # iterative argmax) to an exact-oracle row by UNROLLING the 6 training
 # rounds in SQL and replaying the greedy merge fold per word with

@@ -2797,122 +2797,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Portable-chain diagnostic probe (functions/chain_probe.py): fixed
-# adversarial literals through the exact lm/dsir arithmetic — the
-# driver-row bisect for the 3-round lm/dsir driver-env divergence
-# (r08 verdict task 2)
-# ---------------------------------------------------------------------------
-
-def _chain_probe_oracle() -> str:
-    from .functions.chain_probe import chain_probe_oracle_sql
-
-    return chain_probe_oracle_sql()
-
-
-@register(
-    "portable_chain_probe",
-    _chain_probe_oracle(),
-    "portable ln chain over fixed grid-boundary-adjacent integers: per-term "
-    "nano snaps plus 2- and 4-term combines snapped per-term and after-combine",
-)
-def q_portable_chain_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.chain_probe import chain_probe
-
-    return chain_probe(spark, sf_dir)
-
-
-# ---------------------------------------------------------------------------
-# Full-domain ln census (functions/chain_probe.py::ln_domain_census):
-# every ln argument lm_doc_scores/dsir_select evaluate at this sf, one
-# (family, arg, nanos) row each — the r10 verdict task 1(b) bisect link
-# the fixed-literal probe cannot cover
-# ---------------------------------------------------------------------------
-
-
-def _ln_census_oracle() -> str:
-    b = _DSIR_BUCKETS
-    # dsir's bucketing exactly (position variable `g`; md5 lambda uses `i`)
-    bgx = "toks[g] || ' ' || toks[g+1]"
-    bucket = f"{oracle_md5_int_sql(bgx, 31, 8)} % {b}"
-    census_sel = _sql_ln_select(
-        "all_args",
-        ["family", "arg"],
-        {"a": "arg"},
-        [("nanos", _sql_grid_nanos("_ln_a"))],
-    )
-    return f"""
-    WITH {_POWS_CTE},
-    train AS (
-        SELECT {TOKS_SQL} AS toks FROM documents WHERE source = '{_LM_TRAIN_SRC}'
-    ),
-    uni AS (
-        SELECT w, count(*) AS c
-        FROM (SELECT unnest(toks) AS w FROM train) GROUP BY w
-    ),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_total FROM uni),
-    bg AS (
-        SELECT prev, cur, count(*) AS c FROM (
-            SELECT toks[i] AS prev, toks[i+1] AS cur
-            FROM (SELECT toks, unnest(range(1, greatest(len(toks)-1, 0)+1)) AS i
-                  FROM train)
-        ) GROUP BY prev, cur
-    ),
-    raw_occ AS (
-        SELECT {bucket} AS bk
-        FROM (SELECT toks, unnest(range(1, greatest(len(toks)-1, 0)+1)) AS g
-              FROM (SELECT {TOKS_SQL} AS toks FROM documents
-                    WHERE source != '{_DSIR_TARGET}'))
-    ),
-    cq AS (SELECT bk, count(*) AS cq FROM raw_occ GROUP BY bk),
-    tgt_occ AS (
-        SELECT {bucket} AS bk
-        FROM (SELECT toks, unnest(range(1, greatest(len(toks)-1, 0)+1)) AS g
-              FROM (SELECT {TOKS_SQL} AS toks FROM documents
-                    WHERE source = '{_DSIR_TARGET}'))
-    ),
-    ct AS (SELECT bk, count(*) AS ct FROM tgt_occ GROUP BY bk),
-    dtot AS (
-        SELECT CAST((SELECT COALESCE(sum(cq), 0) FROM cq) AS BIGINT) AS nq,
-               CAST(COALESCE((SELECT sum(ct) FROM ct), 0) AS BIGINT) AS nt
-    ),
-    all_args AS (
-        SELECT DISTINCT family, CAST(arg AS BIGINT) AS arg FROM (
-            SELECT 'lm_bg' AS family, c AS arg FROM bg
-            UNION ALL SELECT 'lm_prev', c FROM uni
-            UNION ALL SELECT 'lm_back', 2 * c
-                FROM (SELECT c FROM uni UNION SELECT CAST(1 AS BIGINT) AS c)
-            UNION ALL SELECT 'lm_5n', 5 * greatest(COALESCE(n_total, 0), 1) FROM tot
-            UNION ALL SELECT 'dsir_ct1', COALESCE(ct.ct, 0) + 1
-                FROM cq LEFT JOIN ct ON ct.bk = cq.bk
-            UNION ALL SELECT 'dsir_cq1', cq + 1 FROM cq
-            UNION ALL SELECT 'dsir_nqB', nq + {b} FROM dtot
-            UNION ALL SELECT 'dsir_ntB', nt + {b} FROM dtot
-        )
-    )
-    {census_sel}
-    """
-
-
-@register(
-    "ln_domain_census",
-    _ln_census_oracle(),
-    "every ln argument the lm/dsir queries evaluate at this sf (distinct "
-    "uni/bigram counts, backoff set, 5N; per-bucket ct+1/cq+1, smoothed "
-    "totals), snapped to BIGINT nanos through the portable chain",
-)
-def q_ln_domain_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.chain_probe import ln_domain_census
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ln_domain_census(
-        docs,
-        train_source=_LM_TRAIN_SRC,
-        target_source=_DSIR_TARGET,
-        n_buckets=_DSIR_BUCKETS,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Duplicated-substring spans (functions/spans.py): Lee et al. 2022 exact
 # substring dedup, relationally — k-gram df marks positions, islands merge
 # ---------------------------------------------------------------------------

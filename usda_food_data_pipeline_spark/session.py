@@ -15,23 +15,18 @@ from contextvars import ContextVar
 from pyspark.sql import DataFrame, SparkSession
 
 
-def get_spark(
-    app_name: str = "usda-food-data-pipeline-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "usda-food-data-pipeline-spark") -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``spark.sql.shuffle.partitions`` defaults to the local core count —
-    the 200 default over-parallelizes small local runs; on a real cluster
-    AQE coalescing makes the static number mostly irrelevant.
+    ``spark.sql.shuffle.partitions`` is the local core count — the 200
+    default over-parallelizes small local runs; on a real cluster AQE
+    coalescing makes the static number mostly irrelevant.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -51,17 +46,10 @@ def get_spark(
         # (3 sessions per GC, alternating): ParallelGC totals
         # 43.8/52.6/72.4s vs G1 59.3/59.7/62.0s; per-query min-of-3
         # ratios 0.67-1.01, geomean 0.83 (AB_NOTES round12_opt_gc_ab).
-        # Parameterised so a latency-sensitive deployment (or a G1
-        # re-measure) can flip it without code: SPARK_GRAFT_GC=g1
-        # keeps the JVM default.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
-            + (
-                " -XX:+UseParallelGC"
-                if os.environ.get("SPARK_GRAFT_GC", "parallel") == "parallel"
-                else ""
-            ),
+            " -XX:+UseParallelGC",
         )
         .config("spark.ui.enabled", "false")
         # 256 MB: executors here (and the 100 TB design point) carry

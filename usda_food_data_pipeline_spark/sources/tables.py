@@ -9,8 +9,6 @@ lacked (SURVEY §4).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -191,68 +189,25 @@ USDA_CSV_TYPES: dict[str, dict[str, str]] = {
 }
 
 
-# A CSV line whose every field is either plain (no quote, no backslash)
-# or wholly quoted, escaping only ``"`` and ``\`` with ``\`` and closed
-# right before a comma or the line's end. Python's ``csv`` splits such a
-# line exactly as Spark's CSV parser does; on other lines they can differ
-# (Spark keeps ``"ab"c`` as written, ``csv`` reads ``abc``).
-_CSV_FIELD = r'(?:[^",\\]*|"(?:[^"\\]|\\["\\])*")'
-_SIMPLE_CSV_LINE = re.compile(rf"{_CSV_FIELD}(?:,{_CSV_FIELD})*")
-
-
-def _csv_header(spark: SparkSession, conf, file) -> tuple[str, ...]:
+def _csv_header(jvm, opts, conf, case_sensitive: bool, file) -> tuple[str, ...]:
     """One staged CSV's column names as Spark's CSV source infers them
-    with ``header=true``, read on the driver: no Spark job.
+    with ``header=true``, read on the driver by the source's own helpers:
+    no Spark job.
 
-    The first non-blank line of the Hadoop path ``file`` comes through
-    the ``FileSystem`` and ``LineReader`` the source's line reader uses
-    (``\\n``, ``\\r`` and ``\\r\\n`` endings), behind the file's
-    compression codec when it has one; a leading UTF-8 BOM is dropped,
-    as Hadoop drops it. A line of plain and wholly quoted fields
-    (:data:`_SIMPLE_CSV_LINE`) is split with Python's ``csv`` under
-    Spark's CSV defaults (quote ``"``, escape ``\\``), then named by
-    Spark's safe-header rule: an empty name becomes ``_c<i>`` and names
-    that repeat (case-insensitively unless ``spark.sql.caseSensitive``)
-    get their index appended. Any other line (text after a closing
-    quote, a backslash outside quotes, ...) is named by Spark's own CSV
-    reader over the line as a one-row local relation: no job either,
-    but ~0.1 s a file to plan against ~0.04 s for this whole function
-    on the ``csv`` path (traced ``usda_etl``, 4 cores).
+    ``CSVUtils.readHeaderLine`` reads the first non-blank line of the
+    Hadoop path ``file`` (behind its compression codec, if any), the
+    parser ``opts`` configures splits it, and ``CSVUtils.makeSafeHeader``
+    names the fields (``_c<i>`` for an empty name, the index appended to
+    names that repeat). These are internal Spark API;
+    ``tests/test_api_cli.py::test_read_usda_csv_header_matches_spark``
+    pins them against ``spark.read.csv``.
     """
-    import csv
-    from collections import Counter
-
-    jvm = spark._jvm
-    stream = file.getFileSystem(conf).open(file)
-    try:
-        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(file)
-        if codec is not None:  # closing it returns its pooled decompressor
-            stream = codec.createInputStream(stream)
-        reader = jvm.org.apache.hadoop.util.LineReader(stream)
-        text = jvm.org.apache.hadoop.io.Text()
-        reader.readLine(text)
-        line = text.toString().removeprefix("\ufeff")
-        # lines of spaces only are skipped, as SQL trim() sees them
-        while not line.strip(" ") and reader.readLine(text) > 0:
-            line = text.toString()
-    finally:
-        stream.close()
-    if not line.strip(" "):
+    csv_utils = jvm.org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    line = csv_utils.readHeaderLine(file, opts, conf)
+    if line.isEmpty():
         return ()
-    if not _SIMPLE_CSV_LINE.fullmatch(line):
-        one_line = spark._jsparkSession.createDataset(
-            jvm.java.util.Collections.singletonList(line),
-            jvm.org.apache.spark.sql.Encoders.STRING(),
-        )
-        csv_reader = spark._jsparkSession.read().option("header", "true")
-        return tuple(csv_reader.csv(one_line).columns())
-    names = next(csv.reader([line], escapechar="\\", doublequote=False))
-    fold = str if spark.conf.get("spark.sql.caseSensitive") == "true" else str.lower
-    counts = Counter(fold(n) for n in names if n)
-    return tuple(
-        f"_c{i}" if not n else f"{n}{i}" if counts[fold(n)] > 1 else n
-        for i, n in enumerate(names)
-    )
+    row = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings()).parseLine(line.get())
+    return tuple(csv_utils.makeSafeHeader(row, case_sensitive, opts))
 
 
 def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
@@ -273,11 +228,21 @@ def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
     files = sorted(set(spark.read.text(path).inputFiles()))
     if not files:  # an empty directory: let the CSV source say so
         return spark.read.option("header", True).csv(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    opts = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
+        jvm.PythonUtils.toScalaMap({"header": "true"}),
+        True,
+        sql_conf.sessionLocalTimeZone(),
+        sql_conf.columnNameOfCorruptRecord(),
+    )
+    conf = state.newHadoopConf()
+    case_sensitive = sql_conf.caseSensitiveAnalysis()
     # inputFiles() are URI strings (a space reads "%20"); the Hadoop path
     # of the URI prints as the unescaped file path
-    paths = [spark._jvm.org.apache.hadoop.fs.Path(spark._jvm.java.net.URI(f)) for f in files]
-    headers = {str(p): _csv_header(spark, conf, p) for p in paths}
+    paths = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)) for f in files]
+    headers = {str(p): _csv_header(jvm, opts, conf, case_sensitive, p) for p in paths}
     if len(set(headers.values())) == 1:
         schema = schema_for(headers[str(paths[0])])
         return spark.read.option("header", True).schema(schema).csv(path)
