@@ -36,6 +36,12 @@ def run_query(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs holding storage blocks: persisted caches and
+    localCheckpoint generations alike."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def warmup(spark, sf_dir: str) -> None:
     """JIT/codegen + file-footer warmup so per-query timings measure the
     queries, not one-time session costs."""
@@ -263,12 +269,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: list[str] = []
     guards: dict[str, dict] = {}
+    leaked: list[str] = []
     for name, fn in registry.queries().items():
         best = -1.0
+        before = persistent_rdd_ids(spark)
         try:
             for _ in range(repeats):
-                # each repeat owns (and on exit releases) every cache the
-                # query persists, so every repeat is measured standalone
+                # each repeat owns (and on exit releases) every cache and
+                # checkpoint the query makes, so every repeat is measured
+                # standalone
                 with QueryRun() as run:
                     t0 = time.time()
                     run_query(fn(spark, sf_dir))
@@ -279,6 +288,9 @@ def main() -> None:
             errors.append(name)
             print(f"bench error in {name}: {ex}", file=sys.stderr)
         timings[name] = best
+        # untimed: blocks the query's runs left without an owner
+        if persistent_rdd_ids(spark) - before:
+            leaked.append(name)
         # read guard counters OUTSIDE the timed window (r05 verdict
         # task 5): guarded queries registered a GuardStats with their
         # run at plan build; .get runs one keys-only aggregate action
@@ -323,6 +335,7 @@ def main() -> None:
         "repeats": repeats,
         "errors": sorted(errors),
         "guards": guards,
+        "leaked_blocks": leaked,
         "same_session_ab": ab,
     }
     if split:

@@ -184,10 +184,9 @@ def test_query_run_frees_owned_caches_at_exit(spark):
     output still reads them — and all of them are released when the run
     exits, so a session running the whole dedup registry holds no
     blocks between queries."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        persistent_rdd_ids,
-    )
+    from rdd_blocks import persistent_rdd_ids
+
+    from usda_food_data_pipeline_spark.operators.dedup import minhash_lsh_pairs
     from usda_food_data_pipeline_spark.session import QueryRun
 
     spark.catalog.clearCache()

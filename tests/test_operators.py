@@ -243,41 +243,50 @@ def test_connected_components_star_long_chain_few_rounds(spark):
     assert comps == {0}
 
 
-def test_checkpoint_release_keeps_storage_flat(spark):
+def test_checkpoint_release_keeps_storage_flat(spark, monkeypatch):
     """r03 verdict item 5: superseded localCheckpoint generations must be
-    freed each round, not left for ContextCleaner. After a multi-round
-    star contraction on the 1000-chain (≥10 checkpoint generations), at
-    most ONE checkpoint generation may still hold blocks."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        persistent_rdd_ids,
-    )
+    freed each round, not left for ContextCleaner. Over a multi-round
+    star contraction on the 1000-chain, at most ONE checkpoint
+    generation holds blocks at any time, and none once the query run
+    that owns the last one exits."""
+    from rdd_blocks import persistent_rdd_ids, spy_live_generations
 
-    before = persistent_rdd_ids(spark, checkpointed_only=True)
+    from usda_food_data_pipeline_spark.operators.dedup import connected_components
+    from usda_food_data_pipeline_spark.session import QueryRun
+
+    before = persistent_rdd_ids(spark)
+    live = spy_live_generations(spark, monkeypatch)
     n = 1000
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
-    out = connected_components(edges, nodes, algorithm="star", max_iter=12)
-    assert out.count() == n
-    leftover = persistent_rdd_ids(spark, checkpointed_only=True) - before
-    # the final generation is legitimately still referenced by `out`;
-    # every superseded one must be gone
-    assert len(leftover) <= 1, leftover
+    with QueryRun():
+        out = connected_components(edges, nodes, algorithm="star", max_iter=12)
+        assert out.count() == n
+        # the final generation is still read by `out`; every superseded
+        # one must be gone
+        assert len(persistent_rdd_ids(spark) - before) <= 1
+    assert len(live) >= 5 and max(live) <= 1, live
+    assert not (persistent_rdd_ids(spark) - before)
 
 
-def test_pagerank_checkpoint_release(spark):
-    from usda_food_data_pipeline_spark.operators.dedup import persistent_rdd_ids
+def test_pagerank_checkpoint_release(spark, monkeypatch):
+    from rdd_blocks import persistent_rdd_ids, spy_live_generations
+
     from usda_food_data_pipeline_spark.operators.graph import pagerank
+    from usda_food_data_pipeline_spark.session import QueryRun
 
-    before = persistent_rdd_ids(spark, checkpointed_only=True)
+    before = persistent_rdd_ids(spark)
+    live = spy_live_generations(spark, monkeypatch)
     edges = spark.createDataFrame(
         [(i, (i + 1) % 50) for i in range(50)] + [((i + 1) % 50, i) for i in range(50)],
         "src long, dst long",
     )
-    ranks = pagerank(edges, iters=10, symmetric=True)
-    assert ranks.count() == 50
-    leftover = persistent_rdd_ids(spark, checkpointed_only=True) - before
-    assert len(leftover) <= 1, leftover
+    with QueryRun():
+        ranks = pagerank(edges, iters=10, symmetric=True)
+        assert ranks.count() == 50
+        assert len(persistent_rdd_ids(spark) - before) <= 1
+    assert len(live) == 10 and max(live) <= 1, live
+    assert not (persistent_rdd_ids(spark) - before)
 
 
 def test_redact_pii_patterns_and_duckdb_parity(spark):

@@ -48,8 +48,13 @@ def test_cosine_topk_scoring_projection(spark):
     a vector or on the broadcast row for a DataFrame. An array<double>
     column is scored as is; an array<float> one is cast once per row, in
     a projection below the scoring one (the query row's likewise), and
-    scores as its array<double> copy does."""
-    from usda_food_data_pipeline_spark.operators.similarity import cosine_topk
+    scores as its array<double> copy does. The same holds for the
+    pairwise scorers ivf_assign and knn_join."""
+    from usda_food_data_pipeline_spark.operators.similarity import (
+        cosine_topk,
+        ivf_assign,
+        knn_join,
+    )
 
     rows = [(i, [float(i), 1.0, 2.0]) for i in range(20)]
     results = {}
@@ -65,6 +70,24 @@ def test_cosine_topk_scoring_projection(spark):
             assert casts == (0 if elem == "double" else 1 if isinstance(query, list) else 2)
             results.setdefault(isinstance(query, list), []).append(top.collect())
     for double_rows, float_rows in results.values():
+        assert double_rows == float_rows
+
+    # the pairwise scorers cast once per input row on each side of the
+    # cross join, never per scored pair
+    pairwise = {}
+    for elem in ("double", "float"):
+        emb = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+        few = emb.filter("vec_id < 3")
+        for name, out in (
+            ("ivf_assign", ivf_assign(emb, few.withColumnRenamed("vec_id", "centroid_id"))),
+            ("knn_join", knn_join(few, emb)),
+        ):
+            casts = out._jdf.queryExecution().sparkPlan().toString().count("transform(")
+            assert casts == (0 if elem == "double" else 2), (name, elem, casts)
+            pairwise.setdefault(name, []).append(
+                sorted(out.drop("embedding").collect())
+            )
+    for double_rows, float_rows in pairwise.values():
         assert double_rows == float_rows
 
 
@@ -253,7 +276,7 @@ def test_triangle_count_no_cartesian(spark, sf_dir, monkeypatch):
     assert re.search(equi + r"\[v#\d+L, w#\d+L\], \[v#\d+L, w#\d+L\], Inner", plan)
 
 
-def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):
+def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark, monkeypatch):
     """r04 verdict task 7: the n > broadcast_nodes_limit branch — edges
     are hash-partitioned once and every iteration's share join streams
     the cached layout (shuffled hash join, shares build side): no
@@ -261,6 +284,7 @@ def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):
     ranks match the broadcast path exactly."""
     import re
 
+    from usda_food_data_pipeline_spark.operators import graph
     from usda_food_data_pipeline_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -268,10 +292,10 @@ def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):
         "src long, dst long",
     ).filter("src != dst")
 
-    # checkpoint=False keeps the full 2-iteration lineage visible
-    shuffled = pagerank(
-        edges, iters=2, checkpoint=False, broadcast_nodes_limit=0
-    )
+    # no checkpoints: the full 2-iteration lineage stays visible
+    monkeypatch.setattr(graph, "checkpoint", lambda df, eager=True: df)
+    monkeypatch.setattr(graph, "release", lambda df: None)
+    shuffled = pagerank(edges, iters=2, broadcast_nodes_limit=0)
     shuffled.write.format("noop").mode("overwrite").save()
     plan = shuffled._jdf.queryExecution().executedPlan().toString()
     # the share⋈edges join is a shuffled hash join (shares build side),
@@ -287,7 +311,7 @@ def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):
             above = lines[max(0, i - 2):i]
             assert not any("Exchange" in l for l in above), plan
 
-    broadcasted = pagerank(edges, iters=2, checkpoint=False)
+    broadcasted = pagerank(edges, iters=2)
     got = {r.node: r.rank for r in shuffled.collect()}
     want = {r.node: r.rank for r in broadcasted.collect()}
     assert got == want  # dyadic-grid sums → exactly equal, not approx

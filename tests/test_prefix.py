@@ -1,5 +1,6 @@
 """Distributed global prefix sum: exactness + no single-partition window."""
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -43,24 +44,26 @@ def test_prefix_sum_output_reads_the_collected_partitioning(spark):
     collected from one execution of the range exchange; the returned
     DataFrame must read the SAME materialized partitioning.  Since r08
     that pin is a ``localCheckpoint`` (LogicalRDD scan, lineage CUT —
-    re-executing repartitionByRange is impossible by construction),
-    with its OWN lifetime: exiting the query run that built it must not
-    be able to unpersist it (the r07 failure mode: stale offsets against
-    a re-sampled exchange)."""
+    re-executing repartitionByRange is impossible by construction).
+    The query run owns it: every read inside the run sees the collected
+    partitioning, and once the run has freed it a read raises rather
+    than re-running the exchange (the r07 failure mode: stale offsets
+    against a re-sampled exchange)."""
     from usda_food_data_pipeline_spark.session import QueryRun
 
     df = spark.createDataFrame([(i, i % 3) for i in range(100)], ["id", "v"])
+    want = {i: sum(j % 3 for j in range(i + 1)) for i in range(100)}
     with QueryRun():
         out = global_prefix_sum(df, [F.col("id")], "v", num_partitions=4)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # lineage is cut: the plan bottoms out in a checkpointed RDD scan,
-    # with no Exchange / repartitionByRange left to re-execute
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
-    assert "RepartitionByExpression" not in plan, plan
-    # own lifetime: the run has exited, and the output still reads the
-    # checkpoint the offsets were collected from
-    got = {r["id"]: r["cum"] for r in out.collect()}
-    assert got == {i: sum(j % 3 for j in range(i + 1)) for i in range(100)}
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        # lineage is cut: the plan bottoms out in a checkpointed RDD scan,
+        # with no Exchange / repartitionByRange left to re-execute
+        assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
+        assert "RepartitionByExpression" not in plan, plan
+        for _ in range(2):
+            assert {r["id"]: r["cum"] for r in out.collect()} == want
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        out.collect()
 
 
 def test_token_budget_boundary(spark):

@@ -1,7 +1,10 @@
-"""Persist ownership (session.QueryRun): every cache a query persists is
-released by exactly one owner — the run around the call that
-materializes the result, an eager operator's own ``finally``, or, for
-the ``__spark_entry__`` contract, the next query's start."""
+"""Block ownership (session.QueryRun): every cache a query persists and
+every ``localCheckpoint`` it makes is released by exactly one owner —
+the run around the call that materializes the result, an eager
+operator's own ``finally``, or, for the ``__spark_entry__`` contract,
+the next query's start. A query leaves nothing in the cache manager
+(``_cache_empty``) nor in the JVM's persistent-RDD registry, which
+also holds checkpoint blocks (``rdd_blocks.persistent_rdd_ids``)."""
 
 from __future__ import annotations
 
@@ -23,6 +26,7 @@ sys.path.insert(
 )
 
 from check_correctness import compare  # noqa: E402
+from rdd_blocks import persistent_rdd_ids  # noqa: E402
 
 
 def _cache_empty(spark) -> bool:
@@ -69,6 +73,56 @@ def test_raise_mid_query_releases_persists(spark, sf_dir, monkeypatch):
     with pytest.raises(RuntimeError, match="checkpoint failed"), QueryRun():
         registry.queries()["training_pipeline"](spark, sf_dir)
     assert _cache_empty(spark)
+
+
+# every registered query that makes a localCheckpoint
+CHECKPOINTING = [
+    "triangle_count",
+    "pagerank_parts",
+    "label_propagation",
+    "kcore_nodes",
+    "training_pipeline",
+    "snapshot_read",
+    "bpe_train",
+]
+
+
+@pytest.mark.parametrize("name", CHECKPOINTING)
+def test_checkpointing_query_leaves_no_blocks(spark, sf_dir, monkeypatch, name):
+    """The run frees every checkpoint the query made, when it finishes
+    and when it raises at its last checkpoint (a loop's earlier
+    generations are then still live)."""
+    spark.catalog.clearCache()
+    before = persistent_rdd_ids(spark)
+    df_cls = type(spark.range(0))
+    real = df_cls.localCheckpoint
+    calls = []
+
+    def counting(self, eager=True):
+        calls.append(self)
+        return real(self, eager)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", counting)
+    with QueryRun():
+        registry.queries()[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert calls
+    assert _cache_empty(spark)
+    assert not (persistent_rdd_ids(spark) - before)
+
+    last = len(calls)
+    calls.clear()
+
+    def failing(self, eager=True):
+        calls.append(self)
+        if len(calls) == last:
+            raise RuntimeError("checkpoint failed")
+        return real(self, eager)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", failing)
+    with pytest.raises(RuntimeError, match="checkpoint failed"), QueryRun():
+        registry.queries()[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert _cache_empty(spark)
+    assert not (persistent_rdd_ids(spark) - before)
 
 
 def test_interleaved_runs_keep_each_others_caches(spark):

@@ -209,26 +209,29 @@ def test_kcore_peel_keeps_clique_drops_chain(spark):
     assert got1[11] == 1  # superset-from-above: not yet converged
 
 
-def test_kcore_peel_releases_checkpoint_generations(spark):
+def test_kcore_peel_releases_checkpoint_generations(spark, monkeypatch):
     """r08 ADVICE (medium): unpersist() is a no-op on localCheckpoint
-    blocks, so the peel loop must retire superseded survivor-set
-    generations through CheckpointJanitor (the pagerank discipline) —
-    only the final result's checkpoint generation may stay alive."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        persistent_rdd_ids,
-        release_rdd_blocks,
-    )
+    blocks, so the peel loop must free each superseded survivor-set
+    generation itself (the pagerank discipline): at most one
+    generation holds blocks at a time, only the result's is left once
+    the loop ends, and the query run frees that one."""
+    from rdd_blocks import persistent_rdd_ids, spy_live_generations
+
     from usda_food_data_pipeline_spark.operators.graph import kcore_peel
+    from usda_food_data_pipeline_spark.session import QueryRun
 
     spark.catalog.clearCache()
     before = persistent_rdd_ids(spark)
+    live = spy_live_generations(spark, monkeypatch)
     clique = [(a, b) for a in range(4) for b in range(4) if a < b]
     chain = [(3, 10), (10, 11), (11, 12)]
     edges = spark.createDataFrame(clique + chain, ["src", "dst"])
-    out = kcore_peel(edges, k=2, rounds=5)
-    out.count()
-    live = persistent_rdd_ids(spark) - before
-    # 5 rounds + final = 6 checkpoints created; all but the final one
-    # (1-2 RDD ids) must have been released by the janitor
-    assert len(live) <= 2, f"stranded checkpoint generations: {live}"
-    release_rdd_blocks(spark, live)
+    with QueryRun():
+        out = kcore_peel(edges, k=2, rounds=5)
+        out.count()
+        # 5 rounds + final = 6 checkpoints created; all but the final
+        # one must have been released by the loop
+        stranded = persistent_rdd_ids(spark) - before
+        assert len(stranded) <= 1, f"stranded checkpoint generations: {stranded}"
+    assert len(live) == 6 and max(live) <= 1, live
+    assert not (persistent_rdd_ids(spark) - before)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint, release
+
 
 def word_frequency(df: DataFrame, text_col: str) -> DataFrame:
     """Corpus → (word, weight) distinct-word table. The ONLY
@@ -89,7 +91,9 @@ def bpe_train(
     vocab = word_frequency(df, text_col).withColumn(
         "symbols", F.split(F.col("word"), "")
     )
-    vocab = vocab.select("symbols", "weight").localCheckpoint(eager=True)
+    # each generation is freed once the next supersedes it, the last one
+    # on return: the rules are all the caller gets
+    vocab = checkpoint(vocab.select("symbols", "weight"))
 
     rules: list[tuple[int, str, str, str, int]] = []
     for step in range(1, n_merges + 1):
@@ -107,9 +111,12 @@ def bpe_train(
             break
         left, right, n = best[0]["left"], best[0]["right"], int(best[0]["n"])
         rules.append((step, left, right, left + right, n))
-        vocab = vocab.select(
-            merge_pair(F.col("symbols"), left, right).alias("symbols"), "weight"
-        ).localCheckpoint(eager=True)
+        merged = checkpoint(
+            vocab.select(merge_pair(F.col("symbols"), left, right).alias("symbols"), "weight")
+        )
+        release(vocab)
+        vocab = merged
+    release(vocab)
     return rules
 
 

@@ -19,7 +19,7 @@ import pandas  # noqa: F401 — resolves pandas_udf postponed type hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import own
+from ..session import checkpoint, own, release
 
 
 def dedup_latest(
@@ -227,89 +227,6 @@ def cap_bucket_size(
 def cap_bucket_qualify_sql(keys: str, max_rows: int) -> str:
     """DuckDB twin of :func:`cap_bucket_size` as a QUALIFY clause."""
     return f"QUALIFY count(*) OVER (PARTITION BY {keys}) <= {max_rows}"
-
-
-# --- iterative-loop checkpoint hygiene -------------------------------------
-# DataFrame.unpersist() is a documented no-op on localCheckpoint blocks,
-# and waiting for ContextCleaner ties release to DRIVER GC pressure —
-# executor storage grows across rounds of an iterative algorithm until a
-# driver-side collection happens to trigger GC (r03 verdict item 5). The
-# persistent-RDD registry exposes the block-holding handles directly, so
-# superseded generations are released the moment the next one lands.
-
-
-def persistent_rdd_ids(spark, checkpointed_only: bool = False) -> set[int]:
-    """Ids of every currently block-holding RDD (persisted OR checkpointed).
-
-    ``checkpointed_only`` restricts to localCheckpoint blocks — the
-    filter that lets the janitor release checkpoint generations without
-    ever touching a persist()'d cache that happened to materialize
-    during the same action (e.g. the CC loop's edge table on round 1).
-    """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = set(jmap.keySet().toArray())
-    if not checkpointed_only:
-        return ids
-    out = set()
-    for rid in ids:
-        handle = jmap.get(rid)
-        if handle is not None and handle.rdd().isLocallyCheckpointed():
-            out.add(rid)
-    return out
-
-
-def release_rdd_blocks(spark, ids: set[int]) -> None:
-    """Explicitly free the storage blocks behind ``ids`` (non-blocking)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-
-
-class CheckpointJanitor:
-    """Tracks the localCheckpoint generation of an iterative loop and
-    frees the previous generation's blocks when a new one supersedes it.
-
-    Usage per round::
-
-        df = janitor.checkpoint(df)   # localCheckpoints df itself
-
-    ``checkpoint`` brackets the eager localCheckpoint with two registry
-    snapshots, so the new generation is identified from the 1-2 DIFF
-    ids alone — the per-id ``isLocallyCheckpointed`` filter (a py4j
-    round trip each) never scans the whole registry, keeping the
-    janitor's per-round cost at ~4 py4j calls (an unbracketed
-    full-registry scan measured ~10% of the whole CC query). The
-    checkpointed-only filter on the diff guarantees a persist()'d cache
-    that happens to materialize during the same action (e.g. the CC
-    loop's edge table on round 1) is never touched. Call ``close()``
-    only once the final result is materialized (leave it to GC while
-    the returned DataFrame is still lazy).
-    """
-
-    def __init__(self, spark):
-        self._spark = spark
-        self._gen: set[int] = set()
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        before = set(jmap.keySet().toArray())
-        out = df.localCheckpoint(eager=True)
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        new_gen = set()
-        for rid in jmap.keySet().toArray():
-            if rid in before:
-                continue
-            handle = jmap.get(rid)
-            if handle is not None and handle.rdd().isLocallyCheckpointed():
-                new_gen.add(rid)
-        release_rdd_blocks(self._spark, self._gen)
-        self._gen = new_gen
-        return out
-
-    def close(self) -> None:
-        release_rdd_blocks(self._spark, self._gen)
-        self._gen = set()
 
 
 def tokenize(col: Column) -> Column:
@@ -1115,16 +1032,18 @@ def connected_components(
     # localCheckpoint: propagate() references the previous labels
     # twice, so plain persist still doubles the logical plan per
     # round and Catalyst re-optimization cost compounds; truncating
-    # lineage keeps every round O(1) planning work. Superseded
-    # generations are freed EXPLICITLY each round (CheckpointJanitor)
-    # — unpersist() is a no-op on checkpoint blocks and ContextCleaner
-    # only runs on driver GC, so storage otherwise grows with rounds.
-    janitor = CheckpointJanitor(labels.sparkSession)
+    # lineage keeps every round O(1) planning work. Each round frees
+    # the generation it supersedes, so storage stays one generation
+    # flat; the last one belongs to the query run.
+    gen = None
     try:
         for _ in range(max_iter):
-            new_labels = janitor.checkpoint(propagate(labels))
-            changed = new_labels.filter(F.col("_changed")).limit(1).count()
-            labels = new_labels.drop("_changed")
+            new_gen = checkpoint(propagate(labels))
+            if gen is not None:
+                release(gen)
+            gen = new_gen
+            changed = gen.filter(F.col("_changed")).limit(1).count()
+            labels = gen.drop("_changed")
             if changed == 0:
                 converged = True
                 break
@@ -1207,10 +1126,6 @@ def _connected_components_star(
         return row["n"], row["h"]
 
     converged = False
-    # CheckpointJanitor frees the superseded generation's blocks each
-    # round — executor storage stays one-generation flat however many
-    # rounds the contraction takes (see test_checkpoint_release)
-    janitor = CheckpointJanitor(e.sparkSession)
     try:
         prev_fp = fingerprint(e)
         for _ in range(max_iter):
@@ -1219,12 +1134,16 @@ def _connected_components_star(
             # doubles every round and Catalyst re-optimization comes to
             # dominate wall-clock (~70s/round by round 3 on a 999-edge
             # chain); checkpointing truncates lineage so each round
-            # plans O(1) work
-            new_e = janitor.checkpoint(_small_star(_large_star(e)))
-            fp = fingerprint(new_e)
+            # plans O(1) work. Each round frees the generation it
+            # supersedes, so storage stays one generation flat however
+            # many rounds the contraction takes.
+            new_e = checkpoint(_small_star(_large_star(e)))
             if e is first_gen:
-                first_gen.unpersist()  # real persist() → real release
+                first_gen.unpersist()
+            else:
+                release(e)
             e = new_e
+            fp = fingerprint(e)
             if fp == prev_fp:
                 converged = True
                 break
@@ -1236,8 +1155,7 @@ def _connected_components_star(
             f"star connected_components did not converge within {max_iter} rounds"
         )
     # fixpoint edges are (child, center) stars; centers/singletons → self
-    # (the final checkpoint generation is released the same way once this
-    # frame returns and the last reference drops)
+    # (the final checkpoint generation belongs to the query run)
     labels = e.select(
         F.greatest("src", "dst").alias("node"), F.least("src", "dst").alias("component")
     ).distinct()

@@ -12,8 +12,9 @@ on src (edges pre-partitioned once and reused via persist), then an
 aggregation on dst. Ranks is a nodes-sized table (≪ edges); AQE
 broadcasts it when it fits, degenerating the iteration to a map-side
 join + one aggregation shuffle. Lineage is truncated per iteration with
-``localCheckpoint`` exactly as in the CC loops (dedup.py:448) so K
-iterations never build a 2^K plan.
+``localCheckpoint`` exactly as in the CC loops
+(``dedup.connected_components``) so K iterations never build a 2^K
+plan.
 
 Determinism for the oracle gate: per-node contributions are quantized
 to a dyadic 2^-40 grid (``floor(share·2^40)`` — ×2^40 and floor are
@@ -30,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint, release
+
 # dyadic quantization grid for cross-engine-exact mass sums (2^40)
 MASS_GRID = 1099511627776.0
 
@@ -45,7 +48,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint: bool = True,
     symmetric: bool = False,
     broadcast_nodes_limit: int = 5_000_000,
 ) -> DataFrame:
@@ -73,7 +75,8 @@ def pagerank(
     ``symmetric=True`` the node set is read
     off the degree table instead of a union-distinct over both endpoint
     columns. Lineage truncates per round with ``localCheckpoint`` (same
-    pattern as the CC loops, dedup.py:448).
+    pattern as the CC loops); each round frees the rank generation it
+    supersedes, and the last one belongs to the query run.
     """
     ed = edges.select("src", "dst").persist()
     outdeg = (
@@ -110,10 +113,7 @@ def pagerank(
             ed.unpersist()
 
         ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        from .dedup import CheckpointJanitor
-
-        janitor = CheckpointJanitor(edges.sparkSession)
-        for _ in range(iters):
+        for i in range(iters):
             # per-source share on the SMALL table; sinks (no out-edges)
             # drop out of the inner join and correctly contribute nothing
             shares = ranks.join(outdeg, "node").select(
@@ -135,21 +135,17 @@ def pagerank(
             # symmetric graph ⇒ every node receives mass; keep the left
             # join anyway so directed graphs with sink-only nodes stay
             # correct
-            ranks = (
-                nodes.join(summed, "node", "left")
-                .select(
+            new_ranks = checkpoint(
+                nodes.join(summed, "node", "left").select(
                     "node",
                     (F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))).alias(
                         "rank"
                     ),
                 )
             )
-            if checkpoint:
-                # superseded rank generations freed explicitly each
-                # round (unpersist is a no-op on checkpoint blocks;
-                # ContextCleaner waits for driver GC) — storage stays
-                # one-generation flat
-                ranks = janitor.checkpoint(ranks)
+            if i:
+                release(ranks)
+            ranks = new_ranks
         return ranks
     finally:
         ed.unpersist()
@@ -181,6 +177,7 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     # the full fan-out here, unlike the 2-arm LPA/kcore unions where a
     # matching persist measured flat and was not landed); released
     # once the 1-row result is eagerly checkpointed, or the query raises
+    # (the checkpoint itself belongs to the query run)
     e = pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).distinct().persist()
     und = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
     deg = und.groupBy(F.col("x").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
@@ -218,7 +215,7 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
         .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
     )
     try:
-        return out.localCheckpoint(eager=True)
+        return checkpoint(out)
     finally:
         oriented.unpersist()
         e.unpersist()
@@ -320,7 +317,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     # sever the unrolled lineage so downstream consumers don't replay
     # three join rounds per action, then release the edge cache
     try:
-        return labels.select("n", "label").localCheckpoint(eager=True)
+        return checkpoint(labels.select("n", "label"))
     finally:
         und.unpersist()
 
@@ -370,30 +367,27 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
         )
         .persist()
     )
-    # DataFrame.unpersist() is a no-op on localCheckpoint blocks (see
-    # the module note at connected-components and the CheckpointJanitor
-    # docstring; r08 ADVICE): the janitor frees each superseded
-    # survivor-set generation's RDD blocks, keeping exactly one
-    # generation alive per round instead of stranding rounds+1 of them
-    # until driver GC.
-    from .dedup import CheckpointJanitor
-
-    janitor = CheckpointJanitor(edges.sparkSession)
-    surv = und.select("n").distinct()
-    try:
-        for _ in range(rounds):
-            deg = (
-                und.join(surv, "n")
-                .join(surv.select(F.col("n").alias("m")), "m")
-                .groupBy("n")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
-            surv = janitor.checkpoint(deg.filter(F.col("deg") >= k).select("n"))
-        return janitor.checkpoint(
+    # each round frees the survivor-set generation it supersedes, so
+    # exactly one generation holds blocks at a time; the result's
+    # belongs to the query run
+    def degrees(surv: DataFrame) -> DataFrame:
+        return (
             und.join(surv, "n")
             .join(surv.select(F.col("n").alias("m")), "m")
             .groupBy("n")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+            .agg(F.count(F.lit(1)).alias("deg"))
         )
+
+    surv = und.select("n").distinct()
+    try:
+        for i in range(rounds):
+            new_surv = checkpoint(degrees(surv).filter(F.col("deg") >= k).select("n"))
+            if i:
+                release(surv)
+            surv = new_surv
+        out = checkpoint(degrees(surv))
+        if rounds:
+            release(surv)
+        return out
     finally:
         und.unpersist()

@@ -29,12 +29,10 @@ per-partition stage is therefore ``localCheckpoint``-ed (lineage CUT,
 not just cached): the totals collect materializes the checkpoint
 blocks, and the returned plan reads those same blocks — re-execution
 of the exchange is impossible by construction, not merely unlikely.
-The checkpoint is deliberately NOT owned by the query run (ADVICE r07:
-releasing a correctness-load-bearing persist() before the caller
-consumed the output would re-run the exchange under a new sampling seed
-against the stale offset map).  The blocks release when the returned
-DataFrame is garbage-collected, like label_propagation's checkpoint
-generations.
+The checkpoint belongs to the query run, which frees it once the caller
+has materialized the output; a read after that raises instead of
+re-running the exchange under a new sampling seed against the stale
+offset map.
 
 ``token_budget_select`` applies this to the selection step most
 training-data pipelines end with: order the corpus by a quality score
@@ -53,6 +51,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
+from ..session import checkpoint
 
 SCORE_GRID = 10**6
 
@@ -81,13 +80,11 @@ def global_prefix_sum(
     # localCheckpoint BEFORE the totals collect: the collect (the first
     # action) materializes the checkpoint blocks, cutting lineage — the
     # offsets and the returned output can only ever read ONE physical
-    # partitioning (see module docstring).  Own lifetime, deliberately
-    # NOT run-owned (ADVICE r07 medium): this block is
-    # correctness-load-bearing for the returned plan, so it must outlive
-    # the run that built it; it releases with the DataFrame reference.
-    local = ranged.withColumn("_lcum", F.sum(value_col).over(w)).localCheckpoint(
-        eager=False
-    )
+    # partitioning (see module docstring).  The query run owns the
+    # blocks like any other checkpoint: they outlive every read of the
+    # output inside the run, and once the run frees them a read fails
+    # loudly rather than re-sampling the range exchange.
+    local = checkpoint(ranged.withColumn("_lcum", F.sum(value_col).over(w)), eager=False)
 
     totals = sorted(
         local.groupBy("_pid").agg(F.sum(value_col).alias("_t")).collect(),

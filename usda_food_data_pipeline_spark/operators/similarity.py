@@ -139,16 +139,18 @@ def ivf_assign(
     the vector id only if the input isn't already unique per row (it
     is — so in practice this is shuffle-free with the broadcast)."""
     cent = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("_cid"),
-            as_double_array(vec_col).alias("_cvec"),
+        _with_double_vec(centroids, vec_col).select(
+            F.col(centroid_id_col).alias("_cid"), F.col(vec_col).alias("_cvec")
         )
     )
-    scored = embeddings.crossJoin(cent).select(
+    # score a double copy, cast once per row below the join; the output
+    # keeps the input's vector type
+    emb = _with_double_vec(embeddings.withColumn("_v", F.col(vec_col)), "_v")
+    scored = emb.crossJoin(cent).select(
         F.col(id_col),
         F.col(vec_col),
         F.col("_cid"),
-        cosine(as_double_array(vec_col), F.col("_cvec")).alias("_cscore"),
+        cosine(F.col("_v"), F.col("_cvec")).alias("_cscore"),
     )
     # argmax via max_by over a (score, -cid) struct → deterministic ties
     return scored.groupBy(id_col).agg(
@@ -266,17 +268,17 @@ def knn_join(
     from pyspark.sql import Window
 
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
+        _with_double_vec(queries, vec_col).select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
         )
     )
     from ..sources.tables import spread
 
-    embeddings = spread(embeddings)
+    embeddings = _with_double_vec(spread(embeddings), vec_col)
     scored = embeddings.crossJoin(q).filter(F.col(id_col) != F.col("query_id")).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        cosine(as_double_array(vec_col), F.col("_qv")).alias("score"),
+        cosine(F.col(vec_col), F.col("_qv")).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
@@ -410,8 +412,10 @@ def ivf_search_index(
     so unprobed clusters contribute zero input files."""
     # rank ALL centroids for the query, take nprobe best (C is small —
     # this collect is the sanctioned dimension collect)
-    cent = centroids.select(F.col("centroid_id").alias("_cid"), as_double_array(vec_col).alias("_cv"))
-    qv = query.select(as_double_array(vec_col).alias("_qv"))
+    cent = _with_double_vec(centroids, vec_col).select(
+        F.col("centroid_id").alias("_cid"), F.col(vec_col).alias("_cv")
+    )
+    qv = _with_double_vec(query, vec_col).select(F.col(vec_col).alias("_qv"))
     scored = cent.crossJoin(F.broadcast(qv)).select(
         "_cid", cosine(F.col("_cv"), F.col("_qv")).alias("_cs")
     )
@@ -762,14 +766,19 @@ def ann_recall_eval(
 
     exact = knn_join(queries, embeddings, k=k, id_col=id_col, vec_col=vec_col)
 
-    assigned = ivf_assign(
-        spread(embeddings), centroids, id_col, vec_col, centroid_id_col
-    ).select(F.col(id_col).alias("_nid"), F.col("centroid_id").alias("_cid"), vec_col)
+    assigned = _with_double_vec(
+        ivf_assign(spread(embeddings), centroids, id_col, vec_col, centroid_id_col).select(
+            F.col(id_col).alias("_nid"), F.col("centroid_id").alias("_cid"), vec_col
+        ),
+        vec_col,
+    )
     probes = F.broadcast(
-        ivf_assign(queries, centroids, id_col, vec_col, centroid_id_col).select(
+        _with_double_vec(
+            ivf_assign(queries, centroids, id_col, vec_col, centroid_id_col), vec_col
+        ).select(
             F.col(id_col).alias("query_id"),
             F.col("centroid_id").alias("_probe"),
-            as_double_array(vec_col).alias("_qv"),
+            F.col(vec_col).alias("_qv"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -781,7 +790,7 @@ def ann_recall_eval(
         .select(
             "query_id",
             "_nid",
-            cosine(as_double_array(vec_col), F.col("_qv")).alias("score"),
+            cosine(F.col(vec_col), F.col("_qv")).alias("score"),
         )
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)

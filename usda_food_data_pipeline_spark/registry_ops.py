@@ -591,6 +591,7 @@ def q_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.dedup import md5_int
+    from .session import checkpoint
     from .sources.snapshots import read_snapshot, write_snapshot
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -620,7 +621,7 @@ def q_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(version).cast("int").alias("version"), "n_rows", "content_sum"
             )
 
-        out = summary(v0).unionByName(summary(v1)).localCheckpoint(eager=True)
+        out = checkpoint(summary(v0).unionByName(summary(v1)))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

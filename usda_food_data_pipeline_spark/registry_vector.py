@@ -677,24 +677,25 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from .operators.similarity import as_double_array, cosine
+    from .operators.similarity import _with_double_vec, cosine
     from .sources.tables import spread
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    # cast once per row, below the join, not once per scored pair
+    emb = _with_double_vec(spread(load_table(spark, sf_dir, "embeddings")), "embedding")
     anchors = F.broadcast(
         # the anchor set must be SIZE-bounded, not rate-bounded: a pure
         # modulus grows with the corpus and turns the scan quadratic
         # (sf1 smoke measured 30x at 10x data before the cap)
         emb.filter((F.col("vec_id") % 20 == 0) & (F.col("vec_id") < 20 * 128)).select(
             F.col("vec_id").alias("anchor_id"),
-            as_double_array("embedding").alias("av"),
+            F.col("embedding").alias("av"),
             F.col("label").alias("al"),
         )
     )
     scored = emb.join(anchors, F.col("label") != F.col("al")).select(
         "anchor_id",
         F.col("vec_id").alias("negative_id"),
-        cosine(as_double_array("embedding"), F.col("av")).alias("score"),
+        cosine(F.col("embedding"), F.col("av")).alias("score"),
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("score").desc(), F.col("negative_id")

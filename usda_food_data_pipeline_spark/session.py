@@ -88,14 +88,15 @@ def configure_session(spark: SparkSession) -> SparkSession:
 
 
 class QueryRun:
-    """Owner of every cache one query persists.
+    """Owner of every cache and checkpoint one query makes.
 
-    Operators return lazy plans that read ``persist()``-ed intermediates,
-    so only the caller that materializes the result knows when those
-    caches are dead. That caller opens a run around building and
-    materializing the query; :func:`own` registers each persist with the
+    Operators return lazy plans that read ``persist()``-ed or
+    ``localCheckpoint``-ed intermediates, so only the caller that
+    materializes the result knows when those blocks are dead. That
+    caller opens a run around building and materializing the query;
+    :func:`own` and :func:`checkpoint` register each block with the
     active run, and leaving the ``with`` block (normally or by an
-    exception) unpersists all of them. The run also holds the query's
+    exception) frees all of them. The run also holds the query's
     :class:`~.operators.dedup.GuardStats` by name (:func:`guard`).
 
     Runs nest and interleave safely: the active run lives in a
@@ -104,6 +105,7 @@ class QueryRun:
 
     def __init__(self) -> None:
         self._owned: list[DataFrame] = []
+        self._checkpoints: list[DataFrame] = []
         self.guards: dict[str, object] = {}
 
     def __enter__(self) -> QueryRun:
@@ -127,7 +129,9 @@ class QueryRun:
     def release(self) -> None:
         for df in self._owned:
             df.unpersist(False)
-        self._owned = []
+        for df in self._checkpoints:
+            _free_checkpoint(df)
+        self._owned, self._checkpoints = [], []
 
 
 _ACTIVE: ContextVar[QueryRun | None] = ContextVar("query_run", default=None)
@@ -143,11 +147,40 @@ def own(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` for the life of the active run, as
+    :func:`own` is for a persist. With no run active nothing owns the
+    blocks: they go when the driver garbage-collects the frame, or by
+    :func:`release`."""
+    out = df.localCheckpoint(eager=eager)
+    run = _ACTIVE.get()
+    if run is not None:
+        run._checkpoints.append(out)
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a frame :func:`checkpoint` returned,
+    now: an iterative loop's superseded generation, with or without an
+    active run. A later read of ``df`` raises."""
+    run = _ACTIVE.get()
+    if run is not None:
+        run._checkpoints = [c for c in run._checkpoints if c is not df]
+    _free_checkpoint(df)
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    # DataFrame.unpersist() is a no-op on checkpoint blocks; they belong
+    # to the RDD under the frame's LogicalRDD
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def own_materialized(build: Callable[[], DataFrame]) -> DataFrame:
-    """``own(build())``, counted inside a nested run: the caches that
-    ``build`` persists are freed once the result is materialized, so a
-    composite query's first side does not hold its build caches while
-    the next side runs. The result belongs to the active run."""
+    """``own(build())``, counted inside a nested run: the caches and
+    checkpoints that ``build`` makes are freed once the result is
+    materialized, so a composite query's first side does not hold its
+    build blocks while the next side runs. The result belongs to the
+    active run."""
     inner = QueryRun()
     try:
         df = own(inner.build(build))
