@@ -28,7 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from usda_food_data_pipeline_spark import registry
+from usda_food_data_pipeline_spark import class_archive, registry
 from usda_food_data_pipeline_spark.session import QueryRun, get_spark
 
 
@@ -262,7 +262,9 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
     except ValueError:
         sf = -1.0  # unknown scale dir name; still run the benchmark
+    t0 = time.perf_counter()
     spark = get_spark("bench")
+    session_s = round(time.perf_counter() - t0, 3)
     warmup(spark, sf_dir)
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2")))
@@ -336,6 +338,10 @@ def main() -> None:
         "errors": sorted(errors),
         "guards": guards,
         "leaked_blocks": leaked,
+        # untimed: the session's launch, and whether its JVM mapped the
+        # class-data archive, recorded one, or ran without
+        "session_s": session_s,
+        "class_archive": class_archive.state(spark),
         "same_session_ab": ab,
     }
     if split:

@@ -250,6 +250,13 @@ _HEADER_CASES = {
     "bare_backslash": ("s.csv", b'a\\,b,c\n1,2,3\n'),
     "space_after_quote": ("w.csv", b'"a" ,"b"\t\n1,2\n'),
     "blank_first_lines": ("l.csv", b"\n  \n\nfdc_id,amount\n1,2.5\n"),
+    # Spark skips only the lines that SQL trim (spaces) empties, after
+    # dropping the BOM that opens a file
+    "tab_only_first_line": ("n.csv", b"\t\nfdc_id,amount\n1,2.5\n"),
+    "bom_only_first_line": ("o.csv", b"\xef\xbb\xbf\nfdc_id,amount\n1,2.5\n"),
+    # the header starts past the first read chunk, after a CR LF split
+    # across the chunk boundary
+    "blank_lines_past_a_chunk": ("m.csv", b" " + b"\r\n" * 40000 + b"fdc_id,amount\r\n1,2\r\n"),
     "duplicates_case_sensitive": ("k.csv", b"fdc_id,amount,FDC_ID,amount,x\n1,2,3,4,5\n"),
 }
 
@@ -281,6 +288,10 @@ def test_read_usda_csv_header_matches_spark(spark, tmp_path, case):
         assert want == ["fdc_id", "nutrient_id", "amount"]
     if case == "duplicates_case_sensitive":  # only exact repeats renamed
         assert want == ["fdc_id", "amount1", "FDC_ID", "amount3", "x"]
+    if case == "tab_only_first_line":  # a tab is not blank to SQL trim
+        assert want == ["\t"]
+    if case == "bom_only_first_line":
+        assert want == ["fdc_id", "amount"]
 
 
 def test_read_usda_csv_missing_path_raises_spark_error(spark, tmp_path):

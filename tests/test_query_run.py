@@ -125,6 +125,30 @@ def test_checkpointing_query_leaves_no_blocks(spark, sf_dir, monkeypatch, name):
     assert not (persistent_rdd_ids(spark) - before)
 
 
+def test_checkpoint_whose_job_raises_leaves_no_blocks(spark):
+    """A checkpoint's blocks are the run's before the job that writes
+    them runs: when that job raises, the run still frees them. On the
+    good path the result is checkpointed and read without its shuffle."""
+    from pyspark.errors import PySparkException
+
+    from usda_food_data_pipeline_spark.session import checkpoint
+
+    before = persistent_rdd_ids(spark)
+    bad = spark.range(100).select(
+        F.when(F.col("id") == 57, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(PySparkException, match="boom"), QueryRun():
+        checkpoint(bad)
+    assert not (persistent_rdd_ids(spark) - before)
+
+    with QueryRun():
+        out = checkpoint(spark.range(100).repartition(4, "id"))
+        assert out._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+    assert not (persistent_rdd_ids(spark) - before)
+
+
 def test_interleaved_runs_keep_each_others_caches(spark):
     spark.catalog.clearCache()
     first, second = QueryRun(), QueryRun()

@@ -14,15 +14,20 @@ from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import class_archive
+
 
 def get_spark(app_name: str = "usda-food-data-pipeline-spark") -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``spark.sql.shuffle.partitions`` is the local core count — the 200
     default over-parallelizes small local runs; on a real cluster AQE
-    coalescing makes the static number mostly irrelevant.
+    coalescing makes the static number mostly irrelevant. A call that
+    launches the driver JVM maps (or records) its class-data archive
+    (:mod:`.class_archive`).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -32,25 +37,7 @@ def get_spark(app_name: str = "usda-food-data-pipeline-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # 32 concurrent task threads doing compressed spill reads sit in
-        # JNI critical sections; G1's GCLocker then starves the other
-        # threads' 1 MB read-buffer allocations (observed: "Retried
-        # waiting for GCLocker too often" -> spurious task OOM under an
-        # undersized heap, multi-second allocation stalls otherwise).
-        # More retries is strictly safer than failing the task.
-        #
-        # GC regime (r12 opt, measured): this process is a BATCH driver
-        # — throughput matters, pause latency does not. Interleaved
-        # fresh-session A/B of a 10-query medium subset at sf0.1
-        # (3 sessions per GC, alternating): ParallelGC totals
-        # 43.8/52.6/72.4s vs G1 59.3/59.7/62.0s; per-query min-of-3
-        # ratios 0.67-1.01, geomean 0.83 (AB_NOTES round12_opt_gc_ab).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
-            " -XX:+UseParallelGC",
-        )
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         # 256 MB: executors here (and the 100 TB design point) carry
         # 100+ GiB of memory, so a quarter-GB build side is cheap; under
@@ -71,7 +58,24 @@ def get_spark(app_name: str = "usda-food-data-pipeline-spark") -> SparkSession:
         # array_agg_quantities at sf1 (6M rows, 1.5M groups).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", str(128 * 1024))
     )
-    spark = builder.getOrCreate()
+    # 32 concurrent task threads doing compressed spill reads sit in
+    # JNI critical sections; G1's GCLocker then starves the other
+    # threads' 1 MB read-buffer allocations (observed: "Retried
+    # waiting for GCLocker too often" -> spurious task OOM under an
+    # undersized heap, multi-second allocation stalls otherwise).
+    # More retries is strictly safer than failing the task.
+    #
+    # GC regime (r12 opt, measured): this process is a BATCH driver
+    # — throughput matters, pause latency does not. Interleaved
+    # fresh-session A/B of a 10-query medium subset at sf0.1
+    # (3 sessions per GC, alternating): ParallelGC totals
+    # 43.8/52.6/72.4s vs G1 59.3/59.7/62.0s; per-query min-of-3
+    # ratios 0.67-1.01, geomean 0.83 (AB_NOTES round12_opt_gc_ab).
+    java_opts = (
+        "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
+        " -XX:+UseParallelGC"
+    )
+    spark = class_archive.get_or_create(builder, memory, java_opts)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -151,11 +155,18 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` for the life of the active run, as
     :func:`own` is for a persist. With no run active nothing owns the
     blocks: they go when the driver garbage-collects the frame, or by
-    :func:`release`."""
-    out = df.localCheckpoint(eager=eager)
+    :func:`release`.
+
+    The blocks are registered before the job that writes them runs, so
+    a run frees them even when that job raises: the lazy checkpoint
+    marks the RDD under the frame, the run takes the frame, and the RDD
+    is then counted as Spark's eager path would."""
+    out = df.localCheckpoint(eager=False)
     run = _ACTIVE.get()
     if run is not None:
         run._checkpoints.append(out)
+    if eager:
+        out._jdf.queryExecution().analyzed().rdd().count()
     return out
 
 

@@ -9,6 +9,8 @@ lacked (SURVEY §4).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -189,25 +191,54 @@ USDA_CSV_TYPES: dict[str, dict[str, str]] = {
 }
 
 
+# bytes per read while looking for a staged CSV's header line
+_HEADER_CHUNK = 1 << 16
+
+
 def _csv_header(jvm, opts, conf, case_sensitive: bool, file) -> tuple[str, ...]:
     """One staged CSV's column names as Spark's CSV source infers them
-    with ``header=true``, read on the driver by the source's own helpers:
-    no Spark job.
+    with ``header=true``, read on the driver: no Spark job.
 
-    ``CSVUtils.readHeaderLine`` reads the first non-blank line of the
-    Hadoop path ``file`` (behind its compression codec, if any), the
-    parser ``opts`` configures splits it, and ``CSVUtils.makeSafeHeader``
+    The header is the line :func:`_first_line` picks; the parser
+    ``opts`` configures splits it, and ``CSVUtils.makeSafeHeader``
     names the fields (``_c<i>`` for an empty name, the index appended to
     names that repeat). These are internal Spark API;
     ``tests/test_api_cli.py::test_read_usda_csv_header_matches_spark``
     pins them against ``spark.read.csv``.
     """
-    csv_utils = jvm.org.apache.spark.sql.execution.datasources.csv.CSVUtils
-    line = csv_utils.readHeaderLine(file, opts, conf)
-    if line.isEmpty():
+    line = _first_line(jvm, conf, file)
+    if line is None:
         return ()
-    row = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings()).parseLine(line.get())
+    row = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings()).parseLine(line)
+    csv_utils = jvm.org.apache.spark.sql.execution.datasources.csv.CSVUtils
     return tuple(csv_utils.makeSafeHeader(row, case_sensitive, opts))
+
+
+def _first_line(jvm, conf, file) -> str | None:
+    """The line Spark's CSV file read takes as the header of the Hadoop
+    path ``file`` (behind its compression codec, if any): Hadoop's line
+    reader drops a UTF-8 BOM that opens the file and ends lines at
+    ``\\n``, ``\\r`` or ``\\r\\n``, and the first line that SQL ``trim``
+    (spaces only) leaves non-empty is the header."""
+    stream = jvm.org.apache.spark.sql.execution.datasources.CodecStreams.createInputStream(
+        conf, file
+    )
+    try:
+        data = b""
+        while True:
+            chunk = bytes(stream.readNBytes(_HEADER_CHUNK))
+            data += chunk
+            eof = len(chunk) < _HEADER_CHUNK
+            lines = re.split(rb"\r\n|\r|\n", data.removeprefix(b"\xef\xbb\xbf"))
+            if not eof:
+                lines.pop()  # it may go on in the next chunk
+            for line in lines:
+                if line.strip(b" "):
+                    return line.decode("utf-8", "replace")
+            if eof:
+                return None
+    finally:
+        stream.close()
 
 
 def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
