@@ -4,6 +4,8 @@ top-k)."""
 
 from __future__ import annotations
 
+import pytest
+
 from usda_food_data_pipeline_spark.registry import queries
 
 
@@ -338,3 +340,94 @@ def test_jaccard_pair_aggregate_is_exchange_free(spark, sf_dir):
     for line in plan.splitlines():
         if re.search(r"Exchange hashpartitioning\(id_a#", line):
             assert "REPARTITION_BY_COL" in line, line
+
+
+_MAX_SPLIT = "spark.sql.files.maxPartitionBytes"
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def _spread_input(spark, sf_dir, tmp_path, case):
+    """(input frame, whether spread must return that same frame) for one
+    case; every read-time job runs here, before the job group opens."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    target = spark.sparkContext.defaultParallelism
+    if case == "small_parquet_files":
+        # one row group each; Spark packs small files into fewer splits
+        # than files (6 files plan 3 splits on 4 cores)
+        for i in range(6):
+            pq.write_table(pa.table({"x": list(range(i * 100, i * 100 + 100))}),
+                           tmp_path / f"part{i}.parquet")
+        return spark.read.parquet(str(tmp_path)), False
+    if case == "multi_row_group_file":
+        # ~100 KB in 10 row groups plans as one split
+        rows = pa.table({"x": list(range(10_000)), "s": [f"{i:010d}" for i in range(10_000)]})
+        pq.write_table(rows, tmp_path / "multi.parquet", row_group_size=1_000)
+        return spark.read.parquet(str(tmp_path / "multi.parquet")), False
+    if case == "csv_with_enough_splits":
+        # a CSV splits freely: with 64 KB splits, ~128 KB a core plans
+        # about two splits a core
+        spark.conf.set(_MAX_SPLIT, str(64 * 1024))
+        path = tmp_path / "rows.csv"
+        path.write_text("".join(f"{i:09d},{i % 997:09d}\n" for i in range(6_400 * target)))
+        df = spark.read.schema("a int, b int").csv(str(path))
+        assert df.rdd.getNumPartitions() >= target
+        return df, True
+    if case == "literal":
+        return spark.createDataFrame([(i,) for i in range(10 * target)], "x int"), True
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    if case.endswith("_without_aqe"):
+        # without AQE the plan is not wrapped: the exchange or the
+        # subquery must be found in the tree
+        spark.conf.set(_AQE, "false")
+    if case == "aggregate":
+        return lineitem.groupBy("l_orderkey").agg(F.sum("l_quantity")), True
+    if case == "subquery_without_aqe":
+        five = spark.range(1).select(F.lit(5)).scalar()
+        return lineitem.filter(F.col("l_quantity") > five), True
+    if case.startswith("join"):
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        return lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey")), True
+    assert case == "persisted_scan"
+    return lineitem.select("l_orderkey", "l_quantity").persist(), False
+
+
+@pytest.fixture
+def restore_confs(spark):
+    before = {key: spark.conf.get(key, None) for key in (_MAX_SPLIT, _AQE)}
+    yield
+    for key, value in before.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("case", ["small_parquet_files", "multi_row_group_file",
+                                  "csv_with_enough_splits", "literal", "aggregate", "join",
+                                  "persisted_scan", "join_without_aqe",
+                                  "subquery_without_aqe"])
+def test_spread_decision(spark, sf_dir, tmp_path, restore_confs, case):
+    """spread() keeps a frame whose plan shuffles or holds a subquery, or
+    whose planned scan already has defaultParallelism splits; it spreads
+    every other frame to defaultParallelism partitions, and it never runs
+    a Spark job to decide (inputs are built before the job group opens:
+    reads may run jobs)."""
+    from usda_food_data_pipeline_spark.sources.tables import spread
+
+    sc = spark.sparkContext
+    df, kept = _spread_input(spark, sf_dir, tmp_path, case)
+    group = f"test_spread_decision_{case}"
+    try:
+        sc.setJobGroup(group, "spread")
+        out = spread(df)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        if kept:
+            assert out is df
+        else:
+            assert out.rdd.getNumPartitions() >= sc.defaultParallelism
+    finally:
+        sc.setJobGroup("", "")
+        df.unpersist()

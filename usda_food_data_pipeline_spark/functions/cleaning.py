@@ -72,19 +72,6 @@ def concat_label_with_unit(name: Column | str, unit: Column | str) -> Column:
     return F.concat(F.upper(F.trim(n)), F.lit(" ("), F.upper(F.trim(u)), F.lit(")"))
 
 
-def concat_value_with_unit(value: Column | str, unit: Column | str) -> Column:
-    """``"12.5 G"`` value+unit composite (null-propagating).
-
-    Reference F3 (usda_branded_food_data_pipeline.py:77-79). The
-    reference's pandas version turns a null value into the literal string
-    ``'nan G'`` (SURVEY §1.4 gotcha 1); this is the *sane mode* — null
-    value or null unit yields null.
-    """
-    v = F.col(value) if isinstance(value, str) else value
-    u = F.col(unit) if isinstance(unit, str) else unit
-    return F.concat(v.cast("string"), F.lit(" "), F.upper(F.trim(u)))
-
-
 def threshold_nullout(
     df: DataFrame, thresholds: Mapping[str, float], scale: int | None = 2
 ) -> DataFrame:
@@ -165,8 +152,3 @@ def deterministic_avg(col: Column | str, precision: int = 30, scale: int = 6) ->
 def oracle_sum_sql(expr: str, scale: int = 6) -> str:
     """DuckDB-side twin of :func:`deterministic_sum`."""
     return f"CAST(sum(CAST(({expr}) AS DECIMAL(30,{scale}))) AS DOUBLE)"
-
-
-def oracle_avg_sql(expr: str, scale: int = 6) -> str:
-    """DuckDB-side twin of :func:`deterministic_avg`."""
-    return f"({oracle_sum_sql(expr, scale)} / count({expr}))"

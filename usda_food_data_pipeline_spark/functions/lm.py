@@ -70,27 +70,6 @@ def _adjacent_pairs(toks: Column) -> Column:
     )
 
 
-def lm_train_counts(
-    train_docs: DataFrame, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """(unigram counts ``w, c``, bigram counts ``prev, cur, c``) over the
-    reference corpus.  Both are plain aggregations whose exchanges carry
-    count rows only (vocab- / bigram-bounded, never corpus-bounded)."""
-    toks = train_docs.select(tokenize(F.col(text_col)).alias("toks"))
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
-    bg = (
-        toks.select(F.explode(_adjacent_pairs(F.col("toks"))).alias("p"))
-        .select(F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
-        .groupBy("prev", "cur")
-        .agg(F.count("*").alias("c"))
-    )
-    return uni, bg
-
-
 def lm_score_stupid_backoff(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -844,13 +844,6 @@ def simhash_from_hashes(hashes: Column, bits: int = 16) -> Column:
     return _fold(hashes)
 
 
-def simhash(tokens: Column, bits: int = 16) -> Column:
-    """Single-expression SimHash (compat wrapper). Prefer
-    :func:`simhash_fingerprints`, which shares the token-hash array
-    across the bit folds via a projection."""
-    return simhash_from_hashes(simhash_token_hashes(tokens), bits)
-
-
 def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
     """Per-document SimHash fingerprint table (near-dup docs get close
     fingerprints; pair generation = group by fingerprint bands)."""
@@ -1269,11 +1262,16 @@ def incremental_dedup(
     100 TB: signatures of the accumulated corpus persist as a table and
     each ingest batch runs this plan against them.
     """
+    from ..sources.tables import spread
+
     ex_hashes = existing.select(
         F.md5(F.encode(F.col(text_col), "UTF-8")).alias("_h")
     ).distinct()
+    # spread before the anti-join: AQE turns it into a broadcast join,
+    # which keeps incoming's partitioning, and the spread() in the cross
+    # join keeps a shuffled plan as it is
     no_exact = (
-        incoming.withColumn("_h", F.md5(F.encode(F.col(text_col), "UTF-8")))
+        spread(incoming).withColumn("_h", F.md5(F.encode(F.col(text_col), "UTF-8")))
         .join(ex_hashes, "_h", "left_anti")
         .drop("_h")
     )
