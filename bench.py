@@ -42,6 +42,14 @@ def persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``); a warm repeat that adds to it recompiles
+    generated code its first repeat already compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def warmup(spark, sf_dir: str) -> None:
     """JIT/codegen + file-footer warmup so per-query timings measure the
     queries, not one-time session costs."""
@@ -272,9 +280,14 @@ def main() -> None:
     errors: list[str] = []
     guards: dict[str, dict] = {}
     leaked: list[str] = []
+    compiles: dict[str, int] = {}
+    warm_compiles: dict[str, int] = {}
     for name, fn in registry.queries().items():
         best = -1.0
         before = persistent_rdd_ids(spark)
+        # untimed: the compile count before the first repeat and after
+        # each one
+        compiled = [codegen_compiles(spark)]
         try:
             for _ in range(repeats):
                 # each repeat owns (and on exit releases) every cache and
@@ -285,12 +298,17 @@ def main() -> None:
                     run_query(fn(spark, sf_dir))
                     sec = round(time.time() - t0, 3)
                 best = sec if best < 0 else min(best, sec)
+                compiled.append(codegen_compiles(spark))
         except Exception as ex:  # noqa: BLE001
             best = -1.0
             errors.append(name)
             print(f"bench error in {name}: {ex}", file=sys.stderr)
         timings[name] = best
-        # untimed: blocks the query's runs left without an owner
+        # untimed: classes compiled over all repeats and over the warm
+        # ones, and blocks the query's runs left without an owner
+        compiles[name] = codegen_compiles(spark) - compiled[0]
+        if len(compiled) > 2 and compiled[-1] > compiled[1]:
+            warm_compiles[name] = compiled[-1] - compiled[1]
         if persistent_rdd_ids(spark) - before:
             leaked.append(name)
         # read guard counters OUTSIDE the timed window (r05 verdict
@@ -338,6 +356,9 @@ def main() -> None:
         "errors": sorted(errors),
         "guards": guards,
         "leaked_blocks": leaked,
+        "codegen_compiles": compiles,
+        "codegen_compiles_total": sum(compiles.values()),
+        "codegen_compiles_warm": warm_compiles,
         # untimed: the session's launch, and whether its JVM mapped the
         # class-data archive, recorded one, or ran without
         "session_s": session_s,

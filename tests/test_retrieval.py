@@ -549,7 +549,7 @@ def test_retrieve_rejects_metadata_score_column(spark, food_index):
 
 
 def test_retrieve_cost_no_python_worker_no_broadcast_join(spark, food_index, monkeypatch):
-    """api.retrieve with file-backed metadata runs at most 3 Spark jobs
+    """api.retrieve with file-backed metadata runs at most 2 Spark jobs
     and scores the index against a literal query vector: no Python
     evaluation, no nested-loop join."""
     from usda_food_data_pipeline_spark import api
@@ -573,7 +573,7 @@ def test_retrieve_cost_no_python_worker_no_broadcast_join(spark, food_index, mon
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(hits) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup("test_retrieve_cost")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("test_retrieve_cost")) <= 2
     [plan] = plans
     for node in ("ArrowEvalPython", "BatchEvalPython", "BroadcastNestedLoopJoin"):
         assert node not in plan

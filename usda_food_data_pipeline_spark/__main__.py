@@ -14,6 +14,7 @@ import json
 import sys
 
 from .session import QueryRun, get_spark
+from .sources.tables import read_parquet
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -54,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
         api.run_pipeline(spark, args.landing_dir, args.output, args.format)
         print(json.dumps({"status": "ok", "output": args.output}))
     elif args.cmd == "index":
-        df = spark.read.parquet(args.input)
+        df = read_parquet(spark, args.input)
         api.build_index(spark, df, args.text_col, args.id_col, args.output, args.dim)
         print(json.dumps({"status": "ok", "output": args.output}))
     elif args.cmd == "retrieve":

@@ -29,7 +29,7 @@ from .operators.similarity import cosine_topk
 from .plans.usda_pipeline import usda_pipeline
 from .session import QueryRun
 from .sources.sinks import build_embedding_index, write_quoted_csv
-from .sources.tables import read_usda_csv
+from .sources.tables import read_parquet, read_usda_csv
 
 
 def run_pipeline(
@@ -99,7 +99,7 @@ def retrieve(
             )
     qvec = embed_vector(query_text, dim)
     with QueryRun():
-        index = spark.read.parquet(index_path)
+        index = read_parquet(spark, index_path)
         top = cosine_topk(index, qvec, k=k, id_col=id_col)
         # a zero-vector query (empty/whitespace text) yields NULL cosines
         # (try_divide) — return nothing rather than k arbitrary rows
@@ -146,7 +146,7 @@ def retrieve_hybrid(
             .over(Window.orderBy(F.col("bm25").desc(), F.col(id_col)))
             .alias("rank"),
         )
-        index = spark.read.parquet(index_path)
+        index = read_parquet(spark, index_path)
         vec = (
             cosine_topk(index, embed_vector(query_text, dim), k=candidates, id_col=id_col)
             .filter(F.col("score").isNotNull())

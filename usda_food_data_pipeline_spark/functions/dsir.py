@@ -49,7 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import md5_int, tokenize
-from ..session import own
+from ..session import concurrently, own
 
 HASH_SEED = 31
 LP_SCALE = 9
@@ -130,12 +130,11 @@ def dsir_select(
     # the two count collects are independent jobs (pool buckets read the
     # dc cache, target buckets tokenize the eval slice) — run them
     # concurrently (r07 verdict task 6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        f_cq = pool.submit(lambda: {int(r["b"]): int(r["cq"]) for r in cq.collect()})
-        f_ct = pool.submit(lambda: {int(r["b"]): int(r["ct"]) for r in ct.collect()})
-        cq_rows, ct_rows = f_cq.result(), f_ct.result()
+    cq_rows, ct_rows = concurrently(
+        spark,
+        lambda: {int(r["b"]): int(r["cq"]) for r in cq.collect()},
+        lambda: {int(r["b"]): int(r["ct"]) for r in ct.collect()},
+    )
     nq = sum(cq_rows.values())
     nt = sum(ct_rows.values())
     # Per-term BIGINT snapping (r08 verdict task 3): snap EACH of the

@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
-from ..session import own
+from ..session import concurrently, own
 
 # Brants et al.'s backoff constant. Encoded in the scoring path as the
 # exact integer ratio 2/5 (ln(0.4·c/N) = ln(2c) - ln(5N)) — changing it
@@ -131,19 +131,14 @@ def lm_score_stupid_backoff(
     # lands first).  The collected value domains are count-value
     # cardinalities (heavy-tailed counts ⇒ tiny), never vocab- or
     # corpus-sized.
-    from concurrent.futures import ThreadPoolExecutor
-
     try:
-        with ThreadPoolExecutor(2) as pool:
-            f_bg = pool.submit(
-                lambda: sorted(int(r["c"]) for r in bg.select("c").distinct().collect())
-            )
-            f_uni = pool.submit(
-                lambda: uni.agg(
-                    F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
-                ).collect()[0]
-            )
-            bg_vals, st = f_bg.result(), f_uni.result()
+        bg_vals, st = concurrently(
+            spark,
+            lambda: sorted(int(r["c"]) for r in bg.select("c").distinct().collect()),
+            lambda: uni.agg(
+                F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
+            ).collect()[0],
+        )
     finally:
         toks.unpersist()
     n_total = int(st["_n"] or 0)

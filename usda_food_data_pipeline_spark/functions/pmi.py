@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import tokenize
-from ..session import own
+from ..session import concurrently, own
 
 PMI_SCALE = 9
 _PMI_TYPE = f"decimal(18,{PMI_SCALE})"
@@ -83,21 +83,14 @@ def pmi_phrases(
 
     # bounded driver jobs: totals + distinct count VALUES (heavy-tailed
     # counts ⇒ tiny domains), run concurrently like lm's model build
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        f_u = pool.submit(
-            lambda: uni.agg(
-                F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
-            ).collect()[0]
-        )
-        f_b = pool.submit(
-            lambda: bg.agg(
-                F.sum("c_xy").alias("_nb_kept"),
-                F.collect_set("c_xy").alias("_vals"),
-            ).collect()[0]
-        )
-        u_row, b_row = f_u.result(), f_b.result()
+    u_row, b_row = concurrently(
+        spark,
+        lambda: uni.agg(F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")).collect()[0],
+        lambda: bg.agg(
+            F.sum("c_xy").alias("_nb_kept"),
+            F.collect_set("c_xy").alias("_vals"),
+        ).collect()[0],
+    )
     n_total = int(u_row["_n"] or 0)
     # N_b counts ALL bigram occurrences (the PMI denominator), not just
     # kept ones: derive exactly from the unigram pass — every doc emits

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import md5_int, tokenize
+from ..session import concurrently
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -191,17 +192,12 @@ def hll_distinct(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from .portable_ln import py_grid_nanos, py_ln_int
 
     spark = docs.sparkSession
-    from concurrent.futures import ThreadPoolExecutor
-
     toks = docs.select(F.explode(tokenize(F.col(text_col))).alias("w"))
-    with ThreadPoolExecutor(2) as pool:
-        f_regs = pool.submit(hll_registers(docs, text_col).collect)
-        f_true = pool.submit(
-            lambda: int(
-                toks.agg(F.count_distinct("w").alias("d")).collect()[0]["d"]
-            )
-        )
-        regs, true_d = f_regs.result(), f_true.result()
+    regs, true_d = concurrently(
+        spark,
+        hll_registers(docs, text_col).collect,
+        lambda: int(toks.agg(F.count_distinct("w").alias("d")).collect()[0]["d"]),
+    )
 
     mjs = {int(r["j"]): int(r["mj"]) for r in regs}
     s41 = sum(1 << (41 - mj) for mj in mjs.values()) + (HLL_M - len(mjs)) * (

@@ -410,6 +410,8 @@ def ivf_search_index(
     the query (tiny: C rows, collected), then scan ONLY the nprobe
     matching partitions — the centroid_id filter is a partition filter,
     so unprobed clusters contribute zero input files."""
+    from ..sources.tables import read_parquet
+
     # rank ALL centroids for the query, take nprobe best (C is small —
     # this collect is the sanctioned dimension collect)
     cent = _with_double_vec(centroids, vec_col).select(
@@ -423,7 +425,7 @@ def ivf_search_index(
         r["_cid"]
         for r in scored.orderBy(F.col("_cs").desc(), F.col("_cid")).limit(nprobe).collect()
     ]
-    cluster = spark.read.parquet(path).where(F.col("centroid_id").isin(probe_ids))
+    cluster = read_parquet(spark, path).where(F.col("centroid_id").isin(probe_ids))
     return cosine_topk(cluster, query, k, id_col, vec_col)
 
 

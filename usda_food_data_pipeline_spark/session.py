@@ -57,6 +57,15 @@ def get_spark(app_name: str = "usda-food-data-pipeline-spark") -> SparkSession:
         # genuinely huge-group case beyond that. Measured 25% off
         # array_agg_quantities at sf1 (6M rows, 1.5M groups).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", str(128 * 1024))
+        # Janino-compiled classes, keyed by generated source (a static
+        # conf: it must be set before the session starts). The default
+        # 100 thrashes: one pass of triangle_count, tpch_q18_big_orders
+        # and flagship needs ~116 classes, so every warm pass recompiled
+        # ~89 of them. One registry pass at sf0.001 compiles 2,441
+        # distinct classes (counted with an unbounded cache; metaspace
+        # ~80 MB after it). Guava's cache evicts per segment before it
+        # reaches the cap, so the cap leaves headroom over that count.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # 32 concurrent task threads doing compressed spill reads sit in
     # JNI critical sections; G1's GCLocker then starves the other
@@ -199,6 +208,24 @@ def own_materialized(build: Callable[[], DataFrame]) -> DataFrame:
     finally:
         inner.release()
     return df
+
+
+def concurrently(spark: SparkSession, *fns: Callable[[], object]) -> list:
+    """``[fn() for fn in fns]``, each ``fn`` on its own thread so that
+    their Spark jobs run at once. The threads carry the caller's job
+    group, job tags and other local properties
+    (``inheritable_thread_target``), so their jobs count in the caller's
+    profile and a ``cancelJobGroup`` reaches them. The active
+    :class:`QueryRun` does not cross into the threads: ``fns`` must not
+    call :func:`own` or :func:`checkpoint`."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    carry = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(len(fns)) as pool:
+        futures = [pool.submit(carry(fn)) for fn in fns]
+        return [f.result() for f in futures]
 
 
 def guard(name: str):

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import spread
+from .tables import read_parquet, spread
 
 
 def write_quoted_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -283,7 +283,7 @@ def compact_parquet(
         for f in glob.glob(os.path.join(src_path, "**", "*.parquet"), recursive=True)
     )
     n = max(1, -(-total // (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     cur = df.rdd.getNumPartitions()
     df = df.coalesce(n) if cur >= n else df.repartition(n)
     df.write.mode("overwrite").parquet(out_path)

@@ -32,6 +32,10 @@ import os
 import socket
 import threading
 
+from pyspark.sql import DataFrame, SparkSession
+
+from .tables import read_parquet
+
 # writer identity must be unique across hosts (shared FS), processes AND
 # threads — pid alone collides for same-driver threads and cross-host pids
 _WRITER_SEQ = itertools.count()
@@ -42,8 +46,6 @@ def _writer_token() -> str:
     with _WRITER_LOCK:
         seq = next(_WRITER_SEQ)
     return f"{socket.gethostname()}-{os.getpid()}-{threading.get_ident()}-{seq}"
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -127,4 +129,4 @@ def read_snapshot(
     files = _read_manifest(table_dir, v)
     if not files:
         raise ValueError(f"version {v} is empty")
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)

@@ -26,10 +26,86 @@ TABLES = (
     "embeddings",
 )
 
+
+def _listed_files(spark: SparkSession, *paths: str) -> list:
+    """The files Spark's file index lists under ``paths`` (globs
+    expanded; names starting ``_`` or ``.`` skipped, parquet's summary
+    files kept), as Hadoop paths sorted by their string. The text source
+    lists them without inferring anything (no job) and raises the file
+    sources' own ``PATH_NOT_FOUND`` for a path that matches nothing."""
+    uri, path = spark._jvm.java.net.URI, spark._jvm.org.apache.hadoop.fs.Path
+    # inputFiles() are URI strings (a space reads "%20"); the Hadoop path
+    # of the URI prints as the unescaped file path
+    files = set(spark.read.text(list(paths)).inputFiles())
+    return sorted((path(uri(f)) for f in files), key=str)
+
+
+# parquet summary files, in the order Spark's schema inference prefers them
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` opened with the schema Spark would
+    infer, read on the driver: no Spark job (Spark's inference runs one
+    to read a footer).
+
+    Mirrors ``ParquetUtils.inferSchema`` with ``mergeSchema`` off: the
+    footer of ``_common_metadata``, else ``_metadata``, else the first
+    data file by path string, converted by
+    ``ParquetFileFormat.readSchemaFromFooter`` (a schema Spark wrote
+    into the footer wins) with the session's parquet confs as Spark's
+    inference sets them. Partition discovery still appends ``key=value``
+    columns. With no files, or with ``spark.sql.parquet.mergeSchema``
+    on, Spark reads (and merges, or raises) itself. These are internal
+    API of the pinned Spark 4.1.2; ``tests/test_fixed_cost.py::
+    test_read_parquet_schema_matches_spark`` pins them against
+    ``spark.read.parquet``.
+    """
+    import json
+
+    from pyspark.sql import types as T
+
+    files = _listed_files(spark, *paths)
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    if not files or sql_conf.isParquetSchemaMergingEnabled():
+        return spark.read.parquet(*paths)
+    names = [p.getName() for p in files]
+    picks = [files[names.index(n)] for n in _SUMMARY_FILES if n in names]
+    file = (picks + [p for p, n in zip(files, names) if n not in _SUMMARY_FILES])[0]
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            file, state.newHadoopConf()
+        ),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    # the arguments ParquetFileFormat.mergeSchemasInParallel passes: five
+    # session confs, and the defaults (all off) of caseSensitive,
+    # fieldId.read.enabled and ignoreVariantAnnotation
+    converter = parquet.ParquetToSparkSchemaConverter(
+        sql_conf.isParquetBinaryAsString(),
+        sql_conf.isParquetINT96AsTimestamp(),
+        False,
+        sql_conf.parquetInferTimestampNTZEnabled(),
+        sql_conf.legacyParquetNanosAsLong(),
+        False,
+        False,
+        sql_conf.parquetReaderRespectUnknownTypeAnnotation(),
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(file, footer), converter
+    )
+    return spark.read.schema(T.StructType.fromJson(json.loads(schema.json()))).parquet(
+        *paths
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,7 +118,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(raw.dtypes)["ts"]
     if ts_type == "bigint":
         # integer DIV, not double division: ns values ~1.7e18 exceed
@@ -200,10 +276,8 @@ def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
             [T.StructField(c, dtypes[types.get(c, "string")], True) for c in cols]
         )
 
-    # the text source lists the files without inferring anything (no
-    # job) and raises the CSV source's PATH_NOT_FOUND for a bad path
-    files = sorted(set(spark.read.text(path).inputFiles()))
-    if not files:  # an empty directory: let the CSV source say so
+    paths = _listed_files(spark, path)
+    if not paths:  # an empty directory: let the CSV source say so
         return spark.read.option("header", True).csv(path)
     jvm = spark._jvm
     state = spark._jsparkSession.sessionState()
@@ -216,9 +290,6 @@ def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
     )
     conf = state.newHadoopConf()
     case_sensitive = sql_conf.caseSensitiveAnalysis()
-    # inputFiles() are URI strings (a space reads "%20"); the Hadoop path
-    # of the URI prints as the unescaped file path
-    paths = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)) for f in files]
     headers = {str(p): _csv_header(jvm, opts, conf, case_sensitive, p) for p in paths}
     if len(set(headers.values())) == 1:
         schema = schema_for(headers[str(paths[0])])

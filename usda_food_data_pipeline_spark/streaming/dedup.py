@@ -145,6 +145,7 @@ def make_incremental_dedup_batch_processor(
     """
     from ..operators.dedup import incremental_dedup
     from ..session import QueryRun
+    from ..sources.tables import read_parquet
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -170,7 +171,7 @@ def make_incremental_dedup_batch_processor(
             if seeded:
                 # partition discovery adds the epoch column; drop it
                 # before handing the corpus to the dedup operator
-                existing = spark.read.parquet(corpus_dir).drop("epoch")
+                existing = read_parquet(spark, corpus_dir).drop("epoch")
                 survivors = incremental_dedup(
                     existing, batch_df, id_col, text_col,
                     jaccard_threshold=jaccard_threshold,
