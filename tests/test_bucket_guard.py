@@ -17,11 +17,7 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from usda_food_data_pipeline_spark.operators.dedup import (
-    GuardStats,
-    cap_bucket_size,
-    ngram_jaccard_pairs,
-)
+from usda_food_data_pipeline_spark.operators.dedup import GuardStats, cap_bucket_size
 from usda_food_data_pipeline_spark.operators.similarity import (
     embedding_neardup_pairs,
     semantic_dedup,
@@ -95,32 +91,6 @@ def _docs(spark, hot_n: int, cold_texts: list[str]):
     hot = [(i, "the same boilerplate template text repeated here") for i in range(hot_n)]
     cold = [(1000 + i, t) for i, t in enumerate(cold_texts)]
     return spark.createDataFrame(hot + cold, "doc_id bigint, text string")
-
-
-def test_ngram_guard_drops_hot_block_keeps_cold(spark):
-    docs = _docs(
-        spark,
-        hot_n=10,
-        cold_texts=[
-            "alpha beta gamma delta epsilon zeta",
-            "alpha beta gamma delta epsilon eta",
-        ],
-    ).withColumn("blk", F.length("text") % 2)
-    # hot docs share one block (identical text → same length parity);
-    # force cold docs into their own block value
-    docs = docs.withColumn(
-        "blk", F.when(F.col("doc_id") >= 1000, F.lit(99)).otherwise(F.lit(1))
-    )
-    obs = Observation()
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", F.col("blk"), threshold=0.2, shingle_n=2,
-        max_block=4, observation=obs,
-    ).collect()
-    ids = {(r.id_a, r.id_b) for r in pairs}
-    assert ids == {(1000, 1001)}  # cold pair survives, hot block gone
-    m = obs.get
-    assert m["guard_dropped_rows"] == 10
-    assert m["guard_dropped_buckets"] == 1
 
 
 def test_neardup_guard(spark):

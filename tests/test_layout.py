@@ -112,127 +112,6 @@ def test_orc_and_json_roundtrip(spark, sf_dir, warehouse):
     assert got_json == want
 
 
-def test_ivf_partitioned_index_prunes_and_matches(spark, sf_dir, warehouse):
-    """The IVF serving layout: index partitioned by centroid_id, probe
-    reads ONLY the matching partition (PartitionFilters, 1/C of files)
-    and returns exactly what the in-memory IVF path returns."""
-    from pyspark.sql import functions as F
-
-    from usda_food_data_pipeline_spark.operators.similarity import (
-        ivf_search_index,
-        ivf_topk,
-        write_ivf_index,
-    )
-    from usda_food_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    query = emb.filter(F.col("vec_id") == 0).select("embedding")
-    path = f"{warehouse}/ivf_index"
-    write_ivf_index(emb, centroids, path)
-
-    got = ivf_search_index(spark, path, centroids, query, k=10, nprobe=1)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "centroid_id" in plan.split("PartitionFilters")[1][:200]
-
-    want = [
-        (r["vec_id"], r["score"])
-        for r in ivf_topk(emb, centroids, query, k=10).collect()
-    ]
-    assert [(r["vec_id"], r["score"]) for r in got.collect()] == want
-
-
-def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path_factory):
-    """Co-located join via bucketing: both sides bucketed by the join
-    key into the same bucket count -> SortMergeJoin with no Exchange on
-    either side (the 100 TB repeated-join layout)."""
-    from pyspark.sql import functions as F
-
-    from usda_food_data_pipeline_spark.sources.sinks import write_bucketed_table
-    from usda_food_data_pipeline_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    write_bucketed_table(orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-                         "orders_b", "o_custkey")
-    write_bucketed_table(customer.select("c_custkey", "c_name"), "customer_b", "c_custkey")
-    try:
-        ob, cb = spark.table("orders_b"), spark.table("customer_b")
-        joined = ob.join(
-            cb.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-        ).groupBy("o_custkey").agg(F.sum("o_totalprice").alias("total"))
-        # broadcast would hide the bucketing property — force SMJ
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined.write.format("noop").mode("overwrite").save()
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert "SortMergeJoin" in plan
-        # the join itself needs no shuffle; the only exchange permitted
-        # is the final single-partition collect-side agg (none keyed on
-        # the bucket column's join)
-        assert plan.count("Exchange hashpartitioning") == 0
-        # sanity: same result as the plain-parquet join
-        expect = (
-            orders.join(
-                customer.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-            ).groupBy("o_custkey").count().count()
-        )
-        assert joined.count() == expect
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS customer_b")
-
-
-def test_zorder_write_skips_on_both_columns(spark, sf_dir, tmp_path):
-    """Z-order clustering bounds every output file to a tight
-    hyper-rectangle: per-file min/max spans on BOTH clustered columns
-    shrink far below the unclustered layout's, which is exactly what
-    parquet footer-stats pruning consumes at scan time."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from usda_food_data_pipeline_spark.sources.sinks import write_zorder
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    zpath, rpath = str(tmp_path / "z"), str(tmp_path / "r")
-    cols = ["o_custkey", "o_totalprice"]
-    write_zorder(orders, zpath, cols, n_files=16)
-    orders.repartition(16).write.parquet(rpath)
-
-    bounds = {
-        c: (v0, v1)
-        for c, v0, v1 in (
-            (c, *orders.agg(F.min(c), F.max(c)).first()) for c in cols
-        )
-    }
-
-    def mean_span(path, col):
-        spans = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-            g0, g1 = bounds[col]
-            spans.append((hi - lo) / (g1 - g0))
-        return sum(spans) / len(spans)
-
-    for c in cols:
-        z, r = mean_span(zpath, c), mean_span(rpath, c)
-        # random layout: every file spans ~the full domain (~1.0);
-        # z-ordered: 16 files over a 2-D morton curve -> each axis
-        # span should at least halve
-        assert r > 0.9, f"{c}: baseline unexpectedly clustered ({r})"
-        assert z < 0.55, f"{c}: z-order span {z} not clustered"
-
-
 def test_zorder_requires_two_columns(spark):
     from usda_food_data_pipeline_spark.sources.sinks import zorder_key
 
@@ -356,3 +235,61 @@ def test_no_module_level_mutable_state_in_operators_or_functions():
             if mutable:
                 bad.append(f"{rel}:{stmt.lineno} {ast.unparse(targets[0])}")
     assert not bad, f"module-level mutable state: {bad}"
+
+
+def _names(node: ast.AST):
+    """Every name a node uses: loads, attribute names and import aliases."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield from n.name.split(".")
+
+
+def test_every_package_def_is_reached_from_a_user_surface():
+    """Every top-level package ``def``/``class`` is reached, transitively
+    by name, from a user surface: a ``@register`` query, a public
+    ``api`` function, ``__main__.main``, a module-level statement, or
+    ``__spark_entry__.py``, ``bench.py``, ``tools/`` and ``perfbench/``.
+    A function only tests call is a second surface with no traffic."""
+    repo = os.path.dirname(_PKG)
+    defs: dict[str, list] = {}
+    roots: set[str] = set()
+    for rel, tree in _package_modules():
+        for stmt in tree.body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                roots.update(_names(stmt))
+                continue
+            defs.setdefault(stmt.name, []).append((rel, stmt))
+            for d in stmt.decorator_list:
+                roots.update(_names(d))
+                if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register":
+                    roots.add(stmt.name)
+            if (rel == "api.py" and not stmt.name.startswith("_")) or (
+                rel == "__main__.py" and stmt.name == "main"
+            ):
+                roots.add(stmt.name)
+    scripts = [os.path.join(repo, f) for f in ("__spark_entry__.py", "bench.py")]
+    for d in ("tools", "perfbench"):
+        scripts += sorted(
+            os.path.join(repo, d, f) for f in os.listdir(os.path.join(repo, d)) if f.endswith(".py")
+        )
+    for path in scripts:
+        with open(path) as fh:
+            roots.update(_names(ast.parse(fh.read())))
+
+    reached, todo = set(), [n for n in roots if n in defs]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += [m for _, node in defs[name] for m in _names(node) if m in defs]
+    unreached = sorted(
+        f"{rel}:{node.lineno} {name}"
+        for name, found in defs.items()
+        if name not in reached
+        for rel, node in found
+    )
+    assert not unreached, f"package defs no user surface reaches: {unreached}"

@@ -118,41 +118,6 @@ def test_connected_components_known_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 8: 1, 9: 1, 5: 5, 6: 5, 42: 42}
 
 
-def test_kmeans_lloyd_improves_objective(spark):
-    """Lloyd iterations must not decrease the mean max-cosine objective,
-    and trained centroids must beat the first-k init."""
-    from pyspark.sql import functions as FF
-
-    from usda_food_data_pipeline_spark.operators.similarity import (
-        as_double_array,
-        cosine,
-        ivf_assign,
-        kmeans_lloyd,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-
-    def objective(centroids):
-        cent = FF.broadcast(
-            centroids.select(FF.col("centroid_id"), as_double_array("embedding").alias("cv"))
-        )
-        scored = emb.crossJoin(cent).select(
-            "vec_id", cosine(as_double_array("embedding"), FF.col("cv")).alias("s")
-        )
-        best = scored.groupBy("vec_id").agg(FF.max("s").alias("best"))
-        return best.agg(FF.avg("best")).collect()[0][0]
-
-    init = emb.orderBy("vec_id").limit(8).selectExpr(
-        "vec_id AS centroid_id", "embedding"
-    )
-    trained = kmeans_lloyd(emb, k=8, iters=2)
-    assert trained.count() == 8
-    assert objective(trained) >= objective(init) - 1e-9
-    # assignments cover every vector exactly once
-    assigned = ivf_assign(emb, trained)
-    assert assigned.count() == emb.count()
-
-
 def test_text_stats_tolerate_empty_documents(spark):
     """Empty/whitespace-only docs must yield NULL stats, not a
     DIVIDE_BY_ZERO job abort (Spark 4 ANSI default)."""
@@ -346,30 +311,8 @@ def test_decontaminate_flags_overlap(spark):
     assert out == {(1, 100): 3, (3, 100): 2}
 
 
-def test_repetition_stats(spark):
-    from usda_food_data_pipeline_spark.functions.textstats import repetition_stats
-
-    df = spark.createDataFrame(
-        [(1, "a b a b a b a b"), (2, "all words distinct here now"), (3, "x")],
-        "doc_id long, text string",
-    )
-    total, distinct, ratio = repetition_stats(F.col("text"), shingle_n=3)
-    rows = {
-        r["doc_id"]: r
-        for r in df.select("doc_id", total.alias("t"), distinct.alias("d"), ratio.alias("r")).collect()
-    }
-    # doc1: 6 trigrams, only 2 distinct ("a b a", "b a b") → ratio 2/3
-    assert rows[1]["t"] == 6 and rows[1]["d"] == 2
-    assert abs(rows[1]["r"] - (1 - 2 / 6)) < 1e-12
-    assert rows[2]["t"] == 3 and rows[2]["d"] == 3 and rows[2]["r"] == 0.0
-    assert rows[3]["t"] == 0 and rows[3]["r"] is None
-
-
 def test_quantize_int8_roundtrip_error_bound(spark):
-    from usda_food_data_pipeline_spark.operators.similarity import (
-        dequantize_int8,
-        quantize_int8,
-    )
+    from usda_food_data_pipeline_spark.operators.similarity import quantize_embeddings_df
 
     df = spark.createDataFrame(
         [
@@ -379,17 +322,18 @@ def test_quantize_int8_roundtrip_error_bound(spark):
         ],
         "vec_id long, v array<double>",
     )
-    scale, q = quantize_int8(F.col("v"))
-    out = df.select("vec_id", "v", scale.alias("s"), q.alias("q"),
-                    dequantize_int8(q, scale).alias("dq")).collect()
+    q = quantize_embeddings_df(df, vec_col="v")
+    dq = F.transform("q", lambda x: x * F.col("scale"))
+    out = q.join(df, "vec_id").select("vec_id", "v", "scale", "q", dq.alias("dq")).collect()
+    assert len(out) == 3
     for r in out:
         assert all(-127 <= x <= 127 for x in r["q"])
         if r["vec_id"] == 3:
-            assert r["s"] == 0.0 and r["q"] == [0, 0, 0, 0]
+            assert r["scale"] == 0.0 and r["q"] == [0, 0, 0, 0]
             continue
-        assert max(abs(x) for x in r["v"]) / 127.0 == r["s"]
+        assert max(abs(x) for x in r["v"]) / 127.0 == r["scale"]
         for orig, back in zip(r["v"], r["dq"]):
-            assert abs(orig - back) <= r["s"] / 2 + 1e-12
+            assert abs(orig - back) <= r["scale"] / 2 + 1e-12
         # the max-magnitude element maps to ±127 exactly
         mx = max(r["v"], key=abs)
         assert r["q"][r["v"].index(mx)] in (127, -127)
@@ -399,19 +343,17 @@ def test_quantized_search_recall(spark, sf_dir):
     """End-to-end storage path: search over int8-dequantized vectors
     must preserve the exact top-10 almost entirely (int8 keeps ~2.4
     decimal digits per component — recall@10 >= 0.8 on this corpus)."""
-    from pyspark.sql import functions as FF
-
     from usda_food_data_pipeline_spark.operators.similarity import (
         cosine_topk,
-        dequantize_int8,
-        quantize_int8,
+        quantize_embeddings_df,
     )
     from usda_food_data_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    scale, q = quantize_int8(FF.col("embedding"))
-    deq = emb.select("vec_id", dequantize_int8(q, scale).alias("embedding"))
-    query = emb.filter(FF.col("vec_id") == 0).select("embedding")
+    deq = quantize_embeddings_df(emb).select(
+        "vec_id", F.transform("q", lambda x: x * F.col("scale")).alias("embedding")
+    )
+    query = emb.filter(F.col("vec_id") == 0).select("embedding")
     exact = {r["vec_id"] for r in cosine_topk(emb, query, k=10).collect()}
     quant = {r["vec_id"] for r in cosine_topk(deq, query, k=10).collect()}
     assert len(exact & quant) >= 8
@@ -515,28 +457,6 @@ def test_pack_sequences_budget_invariants(spark):
     # streams are independent: y's packing unaffected by x
     y = sorted((r["doc_id"], r["pack_id"]) for r in out if r["lang"] == "y")
     assert y == [(100, 0), (101, 0)]  # 25 + starts-at-25 → same pack
-
-
-def test_pack_sequences_exact_greedy(spark):
-    """applyInPandas greedy packing: packs NEVER exceed the budget
-    (except single oversized docs) — the exact-semantics companion to
-    the window-cumsum approximation."""
-    from usda_food_data_pipeline_spark.functions.textstats import pack_sequences_exact
-
-    df = spark.createDataFrame(
-        [(i, "x", t) for i, t in enumerate([30, 30, 30, 30, 50, 10, 150, 5])],
-        "doc_id long, lang string, n_toks long",
-    )
-    out = pack_sequences_exact(df, "n_toks", "doc_id", 100, "lang").collect()
-    packs = {}
-    for r in out:
-        packs.setdefault(r["pack_id"], []).append((r["doc_id"], r["n_toks"]))
-    # greedy: [30,30,30] | [30,50,10] | [150] | [5]
-    got = {pid: [d for d, _ in sorted(docs)] for pid, docs in packs.items()}
-    assert got == {0: [0, 1, 2], 1: [3, 4, 5], 2: [6], 3: [7]}
-    for pid, docs in packs.items():
-        total = sum(t for _, t in docs)
-        assert total <= 100 or len(docs) == 1  # only oversized singletons exceed
 
 
 def test_star_cc_matches_label_on_real_neardup_graph(spark, sf_dir):

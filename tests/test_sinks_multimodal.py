@@ -1,10 +1,9 @@
-"""Sinks (quoted CSV, batched retry upsert, embedding index) and the
-multimodal binary plumbing."""
+"""Sinks (quoted CSV, embedding index), versioned snapshots and the
+multimodal codecs."""
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import tempfile
@@ -12,19 +11,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from usda_food_data_pipeline_spark.operators.multimodal import (
-    attach_binary_payload,
-    decode_image,
-    extract_features,
-    sample_frames,
-)
-from usda_food_data_pipeline_spark.sources.ingest import extract_zip, find_zip_url, stage_files
-from usda_food_data_pipeline_spark.sources.sinks import (
-    build_embedding_index,
-    make_local_index_upsert,
-    upsert_batches,
-    write_quoted_csv,
-)
+from usda_food_data_pipeline_spark.operators.multimodal import decode_image
+from usda_food_data_pipeline_spark.sources.sinks import build_embedding_index, write_quoted_csv
 from usda_food_data_pipeline_spark.sources.tables import load_table
 
 
@@ -45,18 +33,6 @@ def test_quoted_csv_roundtrip(spark, sf_dir, tmpdir):
     assert '"' in raw  # quoteAll in effect
 
 
-def test_upsert_batches_with_retry(spark, sf_dir, tmpdir):
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    index_dir = os.path.join(tmpdir, "index")
-    upsert_batches(docs, make_local_index_upsert(index_dir), batch_size=90)
-    items = []
-    for shard in glob.glob(index_dir + "/*.jsonl"):
-        with open(shard) as f:
-            items.extend(json.loads(line) for line in f)
-    assert len(items) == docs.count()
-    assert all("doc_id" in it for it in items)
-
-
 def test_build_embedding_index_and_search(spark, sf_dir, tmpdir):
     from usda_food_data_pipeline_spark.operators.similarity import cosine_topk
 
@@ -71,22 +47,6 @@ def test_build_embedding_index_and_search(spark, sf_dir, tmpdir):
     top = cosine_topk(index, query, k=3, id_col="doc_id").collect()
     assert top[0]["doc_id"] == query.first()["doc_id"]
     assert abs(top[0]["score"] - 1.0) < 1e-9
-
-
-def test_multimodal_payload_and_features(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    with_payload = attach_binary_payload(docs, "text", mime="text/plain")
-    meta = with_payload.select("doc_id", "payload_meta.*").collect()
-    assert all(m["n_bytes"] > 0 and m["mime"] == "text/plain" for m in meta)
-
-    feats = extract_features(with_payload).collect()
-    assert len(feats) == 20
-    assert all(len(r["features"]) == 16 for r in feats)
-    # deterministic fake: same payload → same features
-    again = extract_features(with_payload).collect()
-    assert {r["doc_id"]: r["features"] for r in feats} == {
-        r["doc_id"]: r["features"] for r in again
-    }
 
 
 def test_codec_roundtrips():
@@ -159,72 +119,6 @@ def test_decode_media_stats_roundtrip(spark, sf_dir):
         )
 
 
-def test_sample_frames(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    with_payload = attach_binary_payload(docs, "text")
-    frames = sample_frames(with_payload, every_n_bytes=64, frame_bytes=16)
-    got = frames.collect()
-    assert all(r["offset"] % 64 == 0 for r in got)
-    n = with_payload.select(F.octet_length("text").alias("n")).collect()
-    expected = sum(max((r["n"] - 1) // 64, 0) + 1 for r in n)
-    assert len(got) == expected
-
-
-def test_ingest_utilities(tmpdir):
-    import zipfile
-
-    assert find_zip_url('<a href="https://x/y/data.zip">dl</a>') == "https://x/y/data.zip"
-    src = os.path.join(tmpdir, "payload")
-    os.makedirs(src)
-    for name in ["keep.csv", "drop.csv"]:
-        with open(os.path.join(src, name), "w") as f:
-            f.write("a,b\n1,2\n")
-    zpath = os.path.join(tmpdir, "bundle.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for name in os.listdir(src):
-            zf.write(os.path.join(src, name), name)
-    out = os.path.join(tmpdir, "extracted")
-    names = extract_zip(zpath, out)
-    assert sorted(names) == ["drop.csv", "keep.csv"]
-    staged = stage_files(out, os.path.join(tmpdir, "landing"), keep=["keep.csv"])
-    assert len(staged) == 1 and staged[0].endswith("keep.csv")
-
-
-def test_custom_decoder_contract(spark):
-    """The decode seam: ANY callable bytes -> ndarray drops into
-    extract_features and its actual output (not the fake) must land in
-    the features column, batched through Arrow. This is the contract a
-    real codec implements; decode_image/decode_audio stay the only
-    declared-incomplete surface (test_real_decoder_is_stubbed)."""
-    import numpy as np
-
-    from usda_food_data_pipeline_spark.operators.multimodal import (
-        attach_binary_payload,
-        extract_features,
-    )
-
-    df = attach_binary_payload(
-        spark.createDataFrame(
-            [(1, "3.5,1.25"), (2, "0.5,-2.0")], "doc_id long, text string"
-        ),
-        "text",
-        mime="text/csv",
-    )
-
-    def csv_decoder(data: bytes) -> np.ndarray:
-        # a 'real' decoder stand-in with observable, payload-dependent
-        # output: parse the payload itself, not a hash of it
-        return np.array([float(x) for x in data.decode("utf-8").split(",")])
-
-    out = {
-        r["doc_id"]: r
-        for r in extract_features(df, decoder=csv_decoder).collect()
-    }
-    assert out[1]["features"] == [3.5, 1.25]
-    assert out[2]["features"] == [0.5, -2.0]
-    assert out[1]["n_bytes"] == len(b"3.5,1.25")
-
-
 def test_resize_nearest_identity_and_upscale():
     import numpy as np
 
@@ -237,98 +131,6 @@ def test_resize_nearest_identity_and_upscale():
     assert (up[::2, ::2] == px).all() and (up[1::2, 1::2] == px).all()
     down = resize_nearest(px, 1, 1)  # downscale picks the top-left source pixel
     assert (down[0, 0] == px[0, 0]).all()
-
-
-def test_jsonl_roundtrip_documents(spark, sf_dir, tmp_path):
-    from usda_food_data_pipeline_spark.sources.sinks import read_jsonl, write_jsonl
-    from usda_food_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, path)
-    back = read_jsonl(spark, path, docs.schema)
-    assert back.schema == docs.schema
-    a = sorted(map(tuple, docs.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b
-
-
-def test_jsonl_read_is_schema_bound_not_inferred(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from usda_food_data_pipeline_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "x.jsonl"
-    p.write_text('{"id": 1, "text": "a"}\n{"id": 2}\nnot json at all\n')
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    rows = read_jsonl(spark, str(p), schema).collect()
-    # 2 parsed rows (missing field -> null), 1 malformed -> all-null row
-    assert len(rows) == 3
-    assert sorted([(r["id"], r["text"]) for r in rows], key=lambda t: (t[0] is None, t)) == [
-        (1, "a"),
-        (2, None),
-        (None, None),
-    ]
-
-
-def test_compact_parquet_shrinks_file_count(spark, sf_dir, tmp_path):
-    from usda_food_data_pipeline_spark.sources.sinks import compact_parquet
-    import glob
-
-    frag = str(tmp_path / "frag")
-    out = str(tmp_path / "compacted")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(64).write.parquet(frag)
-    assert len(glob.glob(f"{frag}/*.parquet")) == 64
-    n = compact_parquet(spark, frag, out, target_mb=128)
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) == n < 64
-    assert spark.read.parquet(out).count() == docs.count()
-
-
-def test_read_parquet_evolved_merges_added_column(spark, tmp_path):
-    from usda_food_data_pipeline_spark.sources.sinks import read_parquet_evolved
-
-    old = str(tmp_path / "old")
-    new = str(tmp_path / "new")
-    spark.createDataFrame([(1, "a")], "id: long, text: string").write.parquet(old)
-    spark.createDataFrame(
-        [(2, "b", 0.9)], "id: long, text: string, quality: double"
-    ).write.parquet(new)
-    df = read_parquet_evolved(spark, old, new)
-    assert set(df.columns) == {"id", "text", "quality"}
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows[1]["quality"] is None and rows[2]["quality"] == 0.9
-
-
-def test_backfill_overwrite_touches_only_written_partitions(spark, tmp_path):
-    from usda_food_data_pipeline_spark.sources.sinks import (
-        backfill_overwrite,
-        write_partitioned_parquet,
-    )
-
-    out = str(tmp_path / "t")
-    full = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0), ("2024-01-03", 3, 30.0)],
-        "day string, k int, v double",
-    )
-    write_partitioned_parquet(full, out, ["day"])
-
-    # recompute ONE day with corrected values
-    patch = spark.createDataFrame([("2024-01-02", 2, 99.0)], "day string, k int, v double")
-    backfill_overwrite(patch, out, ["day"])
-
-    # partition-column type inference reads the day strings back as dates
-    got = {(str(r["day"]), r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {("2024-01-01", 10.0), ("2024-01-02", 99.0), ("2024-01-03", 30.0)}
-    # mode restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
-
-    # idempotent: same backfill twice == once
-    backfill_overwrite(patch, out, ["day"])
-    assert spark.read.parquet(out).count() == 3
 
 
 def test_snapshot_time_travel_append_and_overwrite(spark, tmp_path):
@@ -389,39 +191,3 @@ def test_snapshot_commit_conflict_retries_next_version(spark, tmp_path, monkeypa
     assert snapshots._read_manifest(t, 1) == ["competitor.parquet"]
     # the retried commit (append mode) folded the winner's files in
     assert "competitor.parquet" in snapshots._read_manifest(t, 2)
-
-
-def test_shuffled_export_deterministic_and_sharded(spark, tmp_path):
-    import glob
-
-    from usda_food_data_pipeline_spark.sources.sinks import shuffled_export
-
-    df = spark.range(5000).selectExpr("id AS doc_id", "CAST(id % 7 AS STRING) AS src")
-    p1, p2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    shuffled_export(df, p1, n_shards=4, seed=42, order_col="doc_id")
-    # same seed, adversarially re-partitioned input -> identical layout
-    shuffled_export(df.repartition(17), p2, n_shards=4, seed=42, order_col="doc_id")
-
-    def shard_rows(base, shard):
-        fs = sorted(glob.glob(f"{base}/_shard={shard}/part-*.parquet"))
-        return [r.doc_id for f in fs for r in spark.read.parquet(f).collect()]
-
-    for shard in range(4):
-        r1, r2 = shard_rows(p1, shard), shard_rows(p2, shard)
-        assert r1 and r1 == r2  # membership AND in-shard order reproducible
-    # all rows present exactly once; order genuinely shuffled
-    allrows = [d for s_ in range(4) for d in shard_rows(p1, s_)]
-    assert sorted(allrows) == list(range(5000))
-    first = shard_rows(p1, 0)
-    assert first != sorted(first)
-    # different seed -> different membership
-    p3 = str(tmp_path / "e3")
-    shuffled_export(df, p3, n_shards=4, seed=43, order_col="doc_id")
-    assert shard_rows(p3, 0) != first
-    # max_records_per_file bounds file sizes
-    p4 = str(tmp_path / "e4")
-    shuffled_export(df, p4, n_shards=2, seed=1, order_col="doc_id", max_records_per_file=1000)
-    f4 = glob.glob(p4 + "/_shard=*/part-*.parquet")
-    assert len(f4) >= 5  # 5000 rows / 1000 per file
-    for f in f4:
-        assert spark.read.parquet(f).count() <= 1000

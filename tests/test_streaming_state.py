@@ -204,137 +204,3 @@ def test_stream_stream_join_state_is_horizon_bounded(spark, tmp_path):
     assert state10 <= 2 * (n10 // N_FILES) * 2, (state10, n10)
     # eviction engaged on both runs: state is a minority of the stream
     assert state1 < n1 and state10 < n10 * 0.5
-
-
-def _mg_run(spark, base: str, m: int):
-    from usda_food_data_pipeline_spark.streaming.stateful import (
-        streaming_heavy_hitters,
-    )
-
-    schema = spark.read.parquet(os.path.join(base, "f00.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "f*.parquet"))
-    )
-    out = streaming_heavy_hitters(stream, item_col="user_id", m=m)
-    name = f"mg_{m}_{abs(hash(base)) % 10**8}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        state_rows = sum(op["numRowsTotal"] for op in q.lastProgress["stateOperators"])
-        # update mode re-emits per batch; the LAST emission per
-        # (event_type, item) carries the final summary
-        rows = spark.sql(
-            f"""SELECT event_type, item, est_count FROM (
-                  SELECT *, row_number() OVER (
-                      PARTITION BY event_type, item ORDER BY n_seen DESC
-                  ) AS rn FROM {name}) WHERE rn = 1"""
-        ).collect()
-    finally:
-        q.stop()
-    est = {(r["event_type"], r["item"]): r["est_count"] for r in rows}
-    return est, state_rows
-
-
-@pytest.mark.slow
-def test_misra_gries_stateful_heavy_hitters(spark, tmp_path):
-    """Bounded-state continuous heavy hitters (streaming/stateful.py):
-    with m >= distinct items the summary is exact; with small m the
-    classic MG guarantees hold (est <= true, every item with true
-    count > n/m survives); and the state store holds ONE row per
-    key-group regardless of item cardinality or stream volume."""
-    base = str(tmp_path / "mg")
-    os.makedirs(base)
-    _write_funnel_files(spark, base, rows_per_hour=40)
-
-    truth_rows = spark.read.parquet(os.path.join(base, "f*.parquet")).groupBy(
-        "event_type", F.col("user_id").cast("bigint").alias("item")
-    ).count().collect()
-    truth = {(r["event_type"], r["item"]): r["count"] for r in truth_rows}
-    n_per_type = {}
-    for (et, _), c in truth.items():
-        n_per_type[et] = n_per_type.get(et, 0) + c
-
-    exact, state_exact = _mg_run(spark, base, m=32)  # 20 distinct users
-    # m >= distinct items: every count exact, nothing evicted
-    final_exact = {k: v for k, v in exact.items() if v > 0}
-    assert final_exact == truth
-    assert state_exact == 2  # one state row per event_type, full stop
-
-    small, state_small = _mg_run(spark, base, m=4)
-    assert state_small == 2
-    for k, est in small.items():
-        assert est <= truth[k]  # MG never overcounts
-    for (et, item), true_n in truth.items():
-        if true_n > n_per_type[et] / 4:  # > n/m must survive the summary
-            assert (et, item) in small and small[(et, item)] > 0
-
-
-@pytest.mark.slow
-def test_streaming_hll_matches_batch_sketch_and_bounds_state(spark, tmp_path):
-    """Bounded-state continuous distinct counting (streaming/stateful.py):
-    the per-key HLL registers after replaying the whole stream must
-    EQUAL the batch sketch over the union of the data (registers are
-    elementwise-max folds of a pure per-item function, so micro-batch
-    partitioning cannot change them), the emitted estimate must be the
-    batch estimator verbatim, and the state store holds ONE row per
-    key-group regardless of item cardinality or stream volume."""
-    from usda_food_data_pipeline_spark.functions.portable_ln import (
-        py_grid_nanos,
-        py_ln_int,
-    )
-    from usda_food_data_pipeline_spark.functions.sketch import HLL_M, _hll_alpha
-    from usda_food_data_pipeline_spark.streaming.stateful import (
-        _hll_hash,
-        streaming_distinct_hll,
-    )
-
-    base = str(tmp_path / "hll")
-    os.makedirs(base)
-    _write_funnel_files(spark, base, rows_per_hour=40)
-
-    schema = spark.read.parquet(os.path.join(base, "f00.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "f*.parquet"))
-    )
-    out = streaming_distinct_hll(stream, item_col="user_id")
-    name = f"hll_{abs(hash(base)) % 10**8}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        state_rows = sum(op["numRowsTotal"] for op in q.lastProgress["stateOperators"])
-        rows = spark.sql(
-            f"""SELECT event_type, est, v_zeros, s41 FROM (
-                  SELECT *, row_number() OVER (
-                      PARTITION BY event_type ORDER BY s41 ASC
-                  ) AS rn FROM {name}) WHERE rn = 1"""
-        ).collect()
-    finally:
-        q.stop()
-    got = {r["event_type"]: (r["est"], r["v_zeros"], r["s41"]) for r in rows}
-
-    # reference: batch registers over the union, same hash/estimator
-    items = spark.read.parquet(os.path.join(base, "f*.parquet")).select(
-        "event_type", F.col("user_id").cast("bigint").alias("item")
-    ).distinct().collect()
-    regs: dict[str, list[int]] = {}
-    for r in items:
-        js, rk = _hll_hash(int(r["item"]))
-        rg = regs.setdefault(r["event_type"], [0] * HLL_M)
-        rg[js] = max(rg[js], rk)
-    assert set(got) == set(regs)
-    for et, rg in regs.items():
-        s41 = sum(1 << (41 - x) for x in rg)
-        v = sum(1 for x in rg if x == 0)
-        raw = ((_hll_alpha() * 65536.0) * 2199023255552.0) / float(s41)
-        est = 256.0 * (py_ln_int(HLL_M) - py_ln_int(v)) if (v > 0 and raw <= 640.0) else raw
-        est4 = float(py_grid_nanos(est, 4)) / 10000.0
-        assert got[et] == (est4, v, s41), et
-        # sanity: the estimate tracks the true per-key distinct count
-        true_d = sum(1 for r in items if r["event_type"] == et)
-        assert abs(est4 - true_d) / true_d < 0.25
-    # one state row per key-group, regardless of distinct items
-    assert state_rows == len(regs)

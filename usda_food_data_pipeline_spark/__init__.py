@@ -4,11 +4,11 @@ re-expressed Spark-first.
 
 Layout:
     session    — SparkSession factory tuned for local[N] testing, cluster-safe defaults
-    sources    — parquet/CSV scans of the star schema, ingest utilities, sinks
+    sources    — parquet/CSV scans of the star schema, snapshots, sinks
     functions  — scalar cleaning functions (SURVEY §2.6) + text analytics
     operators  — dedup, top-k, pivot, joins, vector similarity, multimodal
     plans      — end-to-end query plans (flagship query, faithful USDA pipeline)
-    streaming  — Structured Streaming extension (windows, watermark, stateful)
+    streaming  — Structured Streaming extension (windows, watermark, stream-stream joins)
 """
 
 __version__ = "0.1.0"

@@ -147,21 +147,6 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def repetition_stats(text: Column, shingle_n: int = 3) -> tuple[Column, Column, Column]:
-    """(total n-grams, distinct n-grams, repetition ratio) — the
-    repeated-n-gram-fraction quality signal (a high ratio marks
-    boilerplate/spam). Expression-only: total = max(tokens-n+1, 0),
-    distinct = size of the deduped shingle array."""
-    from ..operators.dedup import word_shingles
-
-    toks = tokenize(text)
-    total = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(0)).cast("long")
-    distinct = F.size(word_shingles(toks, shingle_n)).cast("long")
-    # 0 shingles → ratio null (try_divide), same as DuckDB x/0 under /
-    ratio = F.lit(1.0) - F.try_divide(distinct.cast("double"), total.cast("double"))
-    return total, distinct, ratio
-
-
 def pack_sequences(
     df,
     token_col: str,
@@ -195,60 +180,6 @@ def pack_sequences(
     cum_before = F.coalesce(F.sum(token_col).over(w), F.lit(0)).cast("long")
     return df.withColumn("cum_before", cum_before).withColumn(
         "pack_id", F.floor(F.col("cum_before") / F.lit(max_tokens)).cast("long")
-    )
-
-
-def pack_sequences_exact(
-    df,
-    token_col: str,
-    order_col: str,
-    max_tokens: int,
-    part_col: str,
-):
-    """Exact greedy packing: walk each ``part_col`` stream in
-    ``order_col`` order, open a new pack when adding the doc would
-    exceed ``max_tokens`` (oversized docs get a pack of their own).
-
-    Greedy is inherently order-sequential, so it runs per stream via
-    ``applyInPandas`` (one Arrow batch per group) — the sanctioned
-    Python path; parallelism = number of streams, which is why the
-    window-cumsum :func:`pack_sequences` is the default at scale and
-    this is the exact-semantics option for bounded stream sizes.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    # carry the input field types through (an int shard id or int token
-    # count must not be silently recast to string/long)
-    in_fields = {f.name: f.dataType for f in df.schema.fields}
-    out_schema = T.StructType(
-        [T.StructField(c, in_fields[c], True) for c in (part_col, order_col, token_col)]
-        + [T.StructField("pack_id", T.LongType(), True)]
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        pack_ids = []
-        pid, used = 0, 0
-        for t in pdf[token_col]:
-            if used > 0 and used + t > max_tokens:
-                pid += 1
-                used = 0
-            pack_ids.append(pid)
-            used += t
-        return pd.DataFrame(
-            {
-                part_col: pdf[part_col].values,
-                order_col: pdf[order_col].values,
-                token_col: pdf[token_col].values,
-                "pack_id": pack_ids,
-            }
-        )
-
-    return (
-        df.select(part_col, order_col, token_col)
-        .groupBy(part_col)
-        .applyInPandas(pack, schema=out_schema)
     )
 
 

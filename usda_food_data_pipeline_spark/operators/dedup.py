@@ -388,84 +388,6 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_col: str | Column,
-    threshold: float = 0.2,
-    shingle_n: int = 2,
-    max_block: int = DEFAULT_MAX_BUCKET,
-    observation=None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs within an EXPLICIT
-    metadata blocking key (partition-scoped variant: per-tenant,
-    per-shard, per-day). For whole-corpus dedup use
-    :func:`jaccard_pairs_prefix` — metadata keys have fixed cardinality
-    and degenerate as the corpus grows (the r04 sf1 smoke measured 100%
-    of lang×len blocks over the guard cap → zero recall), while the
-    prefix filter's content keys stay data-bounded.
-
-    Blocked self-join (no global cross product): pairs only form inside
-    ``block_col`` groups, then exact shingle-set Jaccard.
-
-    Blocks above ``max_block`` docs are dropped before the self-join
-    (:func:`cap_bucket_size`): a block that big means the key has
-    degenerated and its d² pair emission would dominate the job — the
-    right fix is a finer key, and the guard turns the failure mode from
-    a quadratic stall into an observable recall report (pass
-    ``observation`` for the counters).
-    """
-    block = F.col(block_col) if isinstance(block_col, str) else block_col
-    from ..sources.tables import spread
-    df = spread(df)
-    prepped = df.select(
-        block.alias("block_"),
-        F.col(id_col).alias("doc_id_"),
-        word_shingles(tokenize(F.col(text_col)), shingle_n).alias("sh"),
-    ).withColumn("sz", F.size("sh"))
-    prepped = cap_bucket_size(prepped, ["block_"], max_block, observation)
-
-    # Inverted-index co-count instead of per-pair array_intersect: explode
-    # shingles, self-join on (block, shingle), count common shingles per
-    # pair. Work is sum-over-shingles of d² inside each block — bounded by
-    # the blocking key — and everything stays in codegen'd join+agg
-    # operators (per-pair set intersection allocates per call and dies at
-    # scale). Pairs with no common shingle never materialize (their
-    # jaccard is 0 < threshold).
-    ex = prepped.select("block_", "doc_id_", "sz", F.explode("sh").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
-    co = (
-        a.join(
-            b,
-            (F.col("a.block_") == F.col("b.block_"))
-            & (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id_") < F.col("b.doc_id_"))
-            # lossless size filter: jaccard >= t forces t*|b| <= |a| <= |b|/t
-            # (max jaccard of two sets is min/max of their sizes), so
-            # size-incompatible pairs are pruned at the join, before any
-            # per-pair aggregation state exists
-            & (F.col("a.sz").cast("double") >= F.lit(threshold) * F.col("b.sz"))
-            & (F.col("b.sz").cast("double") >= F.lit(threshold) * F.col("a.sz")),
-        )
-        .groupBy(
-            F.col("a.doc_id_").alias("id_a"),
-            F.col("b.doc_id_").alias("id_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jaccard = F.col("inter").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    )
-    return (
-        co.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def jaccard_pairs_prefix(
     df: DataFrame,
     id_col: str,
@@ -485,10 +407,9 @@ def jaccard_pairs_prefix(
     prefix filter (Adapt-Join, Wang et al. SIGMOD 2012), escalating
     over-cap shingles to sampled triple keys.
 
-    The r04-and-earlier :func:`ngram_jaccard_pairs` blocked on METADATA
-    (lang × length bucket) — a key that degenerates as the corpus grows:
-    at 10× scale every block blew past the guard cap and the operator
-    honestly reported zero recall. This variant blocks on CONTENT:
+    Blocking on METADATA (lang × length bucket) degenerates as the
+    corpus grows: at 10× scale every block blew past the guard cap and
+    recall fell to zero. This operator blocks on CONTENT:
 
     0. shingle text NEVER shuffles (the dup_substring_spans contract):
        each doc's shingle set maps to distinct portable 48-bit

@@ -44,9 +44,7 @@ accumulators; the growing-precision decimal chains planned and ran
 
 Reference analog: none (the reference pipeline has no clustering);
 extends SURVEY.md §2's vector family per the LLM-pipeline mandate.
-Companion to :func:`..operators.similarity.kmeans_lloyd` (float means,
-never collects, feeds ``ivf_topk`` centroid training): this variant
-trades the tiny per-round collect for oracle-exact integer arithmetic,
+It pays a tiny per-round collect for oracle-exact integer arithmetic,
 making the full iterative algorithm hash-checkable against DuckDB.
 """
 

@@ -5,11 +5,9 @@ Decode is real, stdlib-only: ``decode_audio`` parses RIFF/PCM WAV
 containers via ``wave`` and ``decode_image`` parses uncompressed 24bpp
 BMP (bottom-up or top-down, 4-byte row padding) via ``struct`` — no
 third-party codec needed. Matching encoders (``encode_wav_pcm16`` /
-``encode_bmp``) exist so round-trips are testable end-to-end, and the
-``decoder=`` seam on :func:`extract_features` still accepts any other
-codec (JPEG/FLAC/...) a real deployment plugs in. ``fake_decode`` stays
-as the format-agnostic deterministic featurizer used where payloads are
-arbitrary bytes rather than media containers.
+``encode_bmp``) exist so round-trips are testable end-to-end. Other
+codecs (JPEG/FLAC/...) replace the decode call inside the
+``mapInPandas`` stages.
 
 Scale notes: payloads ride in the ``binary`` column — at 100 TB keep
 them in their own parquet files (or external object store with a
@@ -20,18 +18,14 @@ never materializing a partition in memory.
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-FEATURE_DIM = 16
 
 _BMP_FILE_HEADER = 14
 _BMP_INFO_HEADER = 40
@@ -54,8 +48,7 @@ def decode_audio(data: bytes) -> np.ndarray:
 
     Returns an ``(n_frames, n_channels)`` int array for 16-bit PCM (the
     overwhelmingly common case); 8-bit PCM is returned as unsigned
-    bytes. Compressed WAV (non-PCM comptype) raises ``ValueError`` —
-    plug an external codec through the ``decoder=`` seam for those.
+    bytes. Compressed WAV (non-PCM comptype) raises ``ValueError``.
     """
     try:
         with wave.open(io.BytesIO(data), "rb") as w:
@@ -106,8 +99,7 @@ def decode_image(data: bytes) -> np.ndarray:
     """Decode an uncompressed 24bpp BMP payload to an ``(h, w, 3)``
     uint8 RGB array (top-down, padding stripped). Handles both
     bottom-up (positive height) and top-down (negative height) files;
-    other bit depths / compressions raise ``ValueError`` — plug an
-    external codec through the ``decoder=`` seam for those."""
+    other bit depths / compressions raise ``ValueError``."""
     if len(data) < _BMP_FILE_HEADER + _BMP_INFO_HEADER or data[:2] != b"BM":
         raise ValueError("not a BMP payload")
     (offset,) = struct.unpack_from("<I", data, 10)
@@ -120,15 +112,6 @@ def decode_image(data: bytes) -> np.ndarray:
     flat = np.frombuffer(data, dtype=np.uint8, offset=offset, count=row * h)
     px = flat.reshape(h, row)[:, : w * 3].reshape(h, w, 3)[:, :, ::-1]  # BGR->RGB
     return np.ascontiguousarray(px[::-1] if bottom_up else px)
-
-
-def fake_decode(data: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in decoder: md5(payload) → dim floats in
-    [0,1). Lets the full pipeline (schema, batching, joins downstream)
-    run and be asserted on without codecs."""
-    h = hashlib.md5(data).digest()
-    raw = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype=np.uint32)
-    return (raw % 1_000_000).astype(np.float64) / 1_000_000.0
 
 
 def synthesize_media(
@@ -214,77 +197,6 @@ def decode_media_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.mapInPandas(dec, schema=schema)
 
 
-def attach_binary_payload(
-    df: DataFrame, content_col: str, mime: str = "application/octet-stream"
-) -> DataFrame:
-    """Wrap a column as an opaque binary payload + typed metadata struct
-    (n_bytes, mime, md5). For real media, the payload column comes
-    straight from the source; metadata extraction is identical."""
-    payload = F.encode(F.col(content_col), "UTF-8")
-    return df.withColumn("payload", payload).withColumn(
-        "payload_meta",
-        F.struct(
-            F.octet_length(F.col(content_col)).alias("n_bytes"),
-            F.lit(mime).alias("mime"),
-            F.md5(payload).alias("checksum"),
-        ),
-    )
-
-
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    decoder: Callable[[bytes], np.ndarray] | None = None,
-    dim: int = FEATURE_DIM,
-) -> DataFrame:
-    """Decode + featurize payloads via ``mapInPandas`` (Arrow-batched;
-    the sanctioned Python path for media). Output: id, n_bytes,
-    features array<double>."""
-    decode = decoder or (lambda b: fake_decode(b, dim))
-    schema = f"{id_col} long, n_bytes long, features array<double>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode(bytes(b)).tolist() for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": [len(bytes(b)) for b in pdf[payload_col]],
-                    "features": feats,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    every_n_bytes: int = 64,
-    frame_bytes: int = 16,
-) -> DataFrame:
-    """'Frame sampling' over an opaque byte stream: one row per sampled
-    slice (for video this is where a real demuxer plugs in; the
-    slicing/explode plumbing is the Spark-side contract). Pure
-    expressions: sequence + transform + explode — no Python."""
-    n = F.octet_length(F.col(payload_col))
-    offsets = F.sequence(F.lit(0), F.greatest((n - 1) / every_n_bytes, F.lit(0)).cast("int"))
-    frames = F.transform(
-        offsets,
-        lambda i: F.struct(
-            (i * every_n_bytes).alias("offset"),
-            F.substring(F.col(payload_col), (i * every_n_bytes + 1).cast("int"), frame_bytes).alias(
-                "frame"
-            ),
-        ),
-    )
-    return df.select(id_col, F.explode(frames).alias("f")).select(
-        id_col, F.col("f.offset").alias("offset"), F.col("f.frame").alias("frame")
-    )
-
-
 def resize_nearest(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize: ``out[i, j] = px[(i*h)//out_h, (j*w)//out_w]``.
 
@@ -305,7 +217,7 @@ def resized_image_stats(
     """mapInPandas stage over a ``bmp`` binary column: decode → resize
     to (out_h, out_w) → exact per-channel sums. The standard
     image-normalization step (thumbnail to a fixed training shape)
-    with the decode seam and Arrow batching of the other multimodal
+    with the decode step and Arrow batching of the other multimodal
     ops; emits integer stats so the result is oracle-comparable."""
     schema = f"{id_col} long, out_h long, out_w long, sum_r long, sum_g long, sum_b long"
 

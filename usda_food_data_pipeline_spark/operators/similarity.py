@@ -36,8 +36,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-from ..session import own
-
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -288,147 +286,6 @@ def knn_join(
     )
 
 
-def kmeans_lloyd(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means for IVF centroid training, as pure DataFrame ops.
-
-    Deterministic init (first k vectors by id); each iteration assigns
-    every vector to its max-cosine centroid (broadcast) and recomputes
-    centroids as element-wise means via posexplode → groupBy(centroid,
-    dim) → rebuild array. Empty clusters keep their previous centroid.
-    The iterative-driver-loop pattern matches connected_components: a
-    fixed small number of distributed passes, no data ever collected.
-    Returns (centroid_id, embedding) — feed straight into ivf_topk.
-    """
-    from pyspark.sql import Window
-
-    from ..sources.tables import spread
-
-    embeddings = spread(embeddings).persist()
-    centroids = (
-        embeddings.orderBy(id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy(id_col)) - 1).alias("centroid_id"),
-            as_double_array(vec_col).alias(vec_col),
-        )
-    )
-    try:
-        for _ in range(iters):
-            assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-            ex = assigned.select(
-                "centroid_id", F.posexplode(as_double_array(vec_col)).alias("dim", "val")
-            )
-            means = (
-                ex.groupBy("centroid_id", "dim")
-                .agg(F.avg("val").alias("m"))
-                .groupBy("centroid_id")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s.m
-                    ).alias("new_vec")
-                )
-            )
-            centroids = own(
-                centroids.join(means, "centroid_id", "left").select(
-                    "centroid_id",
-                    F.coalesce("new_vec", F.col(vec_col)).alias(vec_col),  # empty cluster
-                )
-            )
-            centroids.count()  # materialize this generation
-        return centroids
-    finally:
-        embeddings.unpersist()
-
-
-def quantize_int8(vec: Column | str) -> tuple[Column, Column]:
-    """Per-vector symmetric int8 quantization: ``scale = max|v|/127``,
-    ``q_i = clamp(floor(v_i/scale + 0.5), -127, 127)``.
-
-    The storage-scale path for 100 TB embedding corpora: 4× smaller than
-    float32 (plus one double per vector), and int8 dot products SIMD-
-    vectorize. floor(x+0.5) instead of round(): identical half-up
-    behavior in Spark and the DuckDB oracle, no banker's-rounding
-    divergence. A zero vector quantizes to all zeros (scale 0 guard).
-
-    Returns (scale, quantized array<int>) column pair.
-    """
-    v = as_double_array(vec)
-    scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
-    q = F.transform(
-        v,
-        lambda x: F.least(
-            F.lit(127.0),
-            F.greatest(
-                F.lit(-127.0),
-                F.when(scale == 0, F.lit(0.0)).otherwise(
-                    F.floor(x / scale + F.lit(0.5))
-                ),
-            ),
-        ).cast("int"),
-    )
-    return scale, q
-
-
-def dequantize_int8(q: Column, scale: Column) -> Column:
-    """Inverse of :func:`quantize_int8`; max abs error <= scale/2."""
-    return F.transform(q, lambda x: x.cast("double") * scale)
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index as parquet PARTITIONED BY centroid_id —
-    the serving layout: each cluster is its own directory, so a probe
-    reads 1/C of the corpus via partition pruning instead of scanning
-    and filtering. At 100 TB this is the difference between a pruned
-    ~100 GB scan and a full-corpus scan per query."""
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-    assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(path)
-
-
-def ivf_search_index(
-    spark,
-    path: str,
-    centroids: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a :func:`write_ivf_index` layout: rank centroids against
-    the query (tiny: C rows, collected), then scan ONLY the nprobe
-    matching partitions — the centroid_id filter is a partition filter,
-    so unprobed clusters contribute zero input files."""
-    from ..sources.tables import read_parquet
-
-    # rank ALL centroids for the query, take nprobe best (C is small —
-    # this collect is the sanctioned dimension collect)
-    cent = _with_double_vec(centroids, vec_col).select(
-        F.col("centroid_id").alias("_cid"), F.col(vec_col).alias("_cv")
-    )
-    qv = _with_double_vec(query, vec_col).select(F.col(vec_col).alias("_qv"))
-    scored = cent.crossJoin(F.broadcast(qv)).select(
-        "_cid", cosine(F.col("_cv"), F.col("_qv")).alias("_cs")
-    )
-    probe_ids = [
-        r["_cid"]
-        for r in scored.orderBy(F.col("_cs").desc(), F.col("_cid")).limit(nprobe).collect()
-    ]
-    cluster = read_parquet(spark, path).where(F.col("centroid_id").isin(probe_ids))
-    return cosine_topk(cluster, query, k, id_col, vec_col)
-
-
 # ---------------------------------------------------------------------------
 # Binary (sign-bit) embedding sketch + Hamming-distance search
 # ---------------------------------------------------------------------------
@@ -531,9 +388,9 @@ def semantic_dedup(
     sketch), standing in for the k-means cluster id the SemDeDup paper
     uses: near-identical embeddings share the pattern, so candidate
     pairs come from a bucketed equi-join, never an all-pairs product.
-    At 100 TB the bucket key is also the storage partition key
-    (write_ivf_index layout), so the self-join is co-located; more
-    bits → smaller buckets → the quadratic term stays bounded.
+    At 100 TB the bucket key is also the storage partition key, so the
+    self-join is co-located; more bits → smaller buckets → the
+    quadratic term stays bounded.
 
     Greedy keep-lowest-id (not transitive closure): a survivor set
     computable in ONE join pass. For full transitive clustering use
@@ -584,11 +441,20 @@ def semantic_dedup(
 def quantize_embeddings_df(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """:func:`quantize_int8` as a two-stage projection: ``scale``
-    (an O(dim) array fold) materializes ONCE per row in stage 1, and
-    the per-element quantize lambda in stage 2 references the column.
-    Inlined single-select use re-evaluates the scale fold inside every
-    element's lambda — O(dim^2) per row, ~3x slower at dim 64.
+    """Per-vector symmetric int8 quantization: ``scale = max|v|/127``,
+    ``q_i = clamp(floor(v_i/scale + 0.5), -127, 127)``; ``q_i * scale``
+    recovers ``v_i`` within ``scale/2``.
+
+    4x smaller than float32 (plus one double per vector).
+    floor(x+0.5) instead of round(): identical half-up behavior in Spark
+    and the DuckDB oracle. A zero vector quantizes to all zeros (scale 0
+    guard).
+
+    A two-stage projection: ``scale`` (an O(dim) array fold)
+    materializes ONCE per row in stage 1, and the per-element quantize
+    lambda in stage 2 references the column. Inlined single-select use
+    re-evaluates the scale fold inside every element's lambda —
+    O(dim^2) per row, ~3x slower at dim 64.
     Returns (id, scale, q).
     """
     from ..sources.tables import spread

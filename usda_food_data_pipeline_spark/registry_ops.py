@@ -949,9 +949,8 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Z-order (Morton) clustering key — the oracle row for the data-skipping
-# layout family (sources/sinks.zorder_key / write_zorder were tests-only;
-# the key derivation itself is exactly twinnable: min/max bounds, IEEE
-# double scaling, integer bit interleave)
+# layout family (sources/sinks.zorder_key; the key derivation is exactly
+# twinnable: min/max bounds, IEEE double scaling, integer bit interleave)
 # ---------------------------------------------------------------------------
 
 _Z_BITS = 8  # 8 bits/dim x 2 dims = 16-bit Morton key
@@ -999,18 +998,17 @@ SELECT o_orderkey AS order_key, CAST({interleave} AS BIGINT) AS zkey FROM s
     f"{_Z_BITS} bits/dim — the multi-dimensional data-skipping sort key",
 )
 def q_zorder_key_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The key derivation write_zorder sorts by, as an oracle-checked
-    projection: one tiny min/max bounds aggregate (collected — two
-    doubles, the kmeans-centroid pattern), then a scan-local pure
+    """The Z-order clustering key, as an oracle-checked projection:
+    one tiny min/max bounds aggregate (collected — two doubles, the
+    kmeans-centroid pattern), then a scan-local pure
     integer/IEEE expression per row (no UDF, whole-stage codegen).
     Engine-exactness: the double scaling is the same op sequence in
     both engines (IEEE ops are correctly rounded; inputs >= bounds-min
     make truncation == floor), and the bit interleave is integer
-    shifts.  At 100 TB this projection feeds repartitionByRange +
-    sortWithinPartitions (sources/sinks.write_zorder) so every parquet
-    file covers a tight rectangle of the clustered space — predicates
-    on EITHER column prune most row groups (pinned by
-    tests/test_layout.py::test_zorder_write_skips_on_both_columns)."""
+    shifts.  A clustered write feeds this key to repartitionByRange +
+    sortWithinPartitions so every parquet file covers a tight rectangle
+    of the clustered space — predicates on EITHER column prune most row
+    groups."""
     from .sources.sinks import zorder_bounds, zorder_key
 
     orders = load_table(spark, sf_dir, "orders")

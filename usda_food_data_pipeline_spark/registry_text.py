@@ -768,9 +768,8 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", redact_pii(F.col("text")).alias("redacted"))
 
 
-# text_repetition was folded into text_tokens (round 2) so the
-# repetition signal sits inside the driver's verification window;
-# functions.textstats.repetition_stats keeps its own unit test.
+# The repeated-trigram fraction (rep_ratio) is computed by text_tokens,
+# so the repetition signal is oracle-checked with that query.
 
 
 # ---------------------------------------------------------------------------
@@ -3221,8 +3220,8 @@ def q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Gopher repetition signals (functions/textstats.doc_repetition): per-doc
 # top-bigram dominance + duplicated-bigram fraction — the curation
-# thresholds of Rae et al. 2021 §A1.2; deepens the expression-only
-# repetition_stats shingle ratio with count-distribution signals
+# thresholds of Rae et al. 2021 §A1.2; deepens text_tokens' expression-only
+# shingle ratio (rep_ratio) with count-distribution signals
 # ---------------------------------------------------------------------------
 
 _REP_SNAP6 = (
