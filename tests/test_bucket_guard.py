@@ -94,15 +94,16 @@ def _docs(spark, hot_n: int, cold_texts: list[str]):
 
 
 def test_neardup_guard(spark):
-    # one hot label with 6 identical vectors, one cold label with 2
-    rows = [(i, "hot", [1.0, 0.0]) for i in range(6)] + [
-        (100, "cold", [0.0, 1.0]),
-        (101, "cold", [0.0, 1.0]),
+    # 6 identical vectors fill one sign-bit bucket past the cap of 4;
+    # the 2 in the opposite-sign bucket stay under it
+    rows = [(i, [1.0] * 8) for i in range(6)] + [
+        (100, [-1.0] * 8),
+        (101, [-1.0] * 8),
     ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, label string, embedding array<double>")
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     obs = Observation()
     pairs = embedding_neardup_pairs(
-        emb, threshold=0.9, block_col="label", max_block=4, observation=obs
+        emb, threshold=0.9, bucket_bits=8, max_block=4, observation=obs
     ).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(100, 101)}
     assert obs.get["guard_dropped_rows"] == 6

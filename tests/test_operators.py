@@ -177,41 +177,29 @@ def test_band_join_is_hash_join_not_nlj(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_connected_components_star_matches_label(spark):
+def test_connected_components_raises_past_max_iter(spark):
+    """Labels on a 6-node chain need 5 rounds to settle: with a bound of
+    3 the loop raises instead of returning partial components, and the
+    generations it made are freed with the run."""
+    from rdd_blocks import persistent_rdd_ids
+
     from usda_food_data_pipeline_spark.operators.dedup import connected_components
+    from usda_food_data_pipeline_spark.session import QueryRun
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 5), (8, 9), (9, 8)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(1, 11)], "node long")
-    want = {r["node"]: r["component"] for r in connected_components(edges, nodes).collect()}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, nodes, algorithm="star").collect()
-    }
-    assert got == want
-    assert got[3] == 1 and got[7] == 5 and got[9] == 8 and got[10] == 10
-
-
-@pytest.mark.slow
-def test_connected_components_star_long_chain_few_rounds(spark):
-    """A 1000-node chain has diameter 1000 — label propagation needs
-    ~1000 rounds, star contraction must finish in ~log rounds. max_iter
-    doubles as the round bound: convergence within 12 or it raises."""
-    from usda_food_data_pipeline_spark.operators.dedup import connected_components
-
-    n = 1000
+    before = persistent_rdd_ids(spark)
+    n = 6
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
-    out = connected_components(edges, nodes, algorithm="star", max_iter=12)
-    comps = {r["component"] for r in out.collect()}
-    assert comps == {0}
+    with pytest.raises(RuntimeError, match="did not converge within 3 rounds"):
+        with QueryRun():
+            connected_components(edges, nodes, max_iter=3)
+    assert not (persistent_rdd_ids(spark) - before)
 
 
 def test_checkpoint_release_keeps_storage_flat(spark, monkeypatch):
     """r03 verdict item 5: superseded localCheckpoint generations must be
-    freed each round, not left for ContextCleaner. Over a multi-round
-    star contraction on the 1000-chain, at most ONE checkpoint
+    freed each round, not left for ContextCleaner. Over the label
+    propagation rounds on a 12-node chain, at most ONE checkpoint
     generation holds blocks at any time, and none once the query run
     that owns the last one exits."""
     from rdd_blocks import persistent_rdd_ids, spy_live_generations
@@ -221,11 +209,11 @@ def test_checkpoint_release_keeps_storage_flat(spark, monkeypatch):
 
     before = persistent_rdd_ids(spark)
     live = spy_live_generations(spark, monkeypatch)
-    n = 1000
+    n = 12
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     with QueryRun():
-        out = connected_components(edges, nodes, algorithm="star", max_iter=12)
+        out = connected_components(edges, nodes)
         assert out.count() == n
         # the final generation is still read by `out`; every superseded
         # one must be gone
@@ -457,41 +445,6 @@ def test_pack_sequences_budget_invariants(spark):
     # streams are independent: y's packing unaffected by x
     y = sorted((r["doc_id"], r["pack_id"]) for r in out if r["lang"] == "y")
     assert y == [(100, 0), (101, 0)]  # 25 + starts-at-25 → same pack
-
-
-def test_star_cc_matches_label_on_real_neardup_graph(spark, sf_dir):
-    """Both CC algorithms must agree on the actual MinHash-LSH pair
-    graph from the documents corpus — not just synthetic chains."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-    from usda_food_data_pipeline_spark.registry_text import (
-        _BANDS,
-        _MH_THRESHOLD,
-        _NUM_HASHES,
-        _SHINGLE_N,
-    )
-    from usda_food_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text",
-        num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N,
-        jaccard_threshold=_MH_THRESHOLD,
-    ).persist()
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    label = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, nodes, "id_a", "id_b").collect()
-    }
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, nodes, "id_a", "id_b", algorithm="star").collect()
-    }
-    pairs.unpersist()
-    assert label == star
-    assert len({c for c in label.values()}) < len(label)  # real merges happened
 
 
 def test_mix_sample_partition_independent(spark, sf_dir):

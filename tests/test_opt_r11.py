@@ -5,8 +5,8 @@ these tests pin the operator-internal rewrites to their pre-rewrite
 arithmetic directly (not only via the oracle gate):
 
 - `_train_books_joint` (one round job for ALL IVFADC codebooks) must
-  produce bit-identical codebooks to the separate `_train_pq` calls it
-  replaced in `ivf_adc_topk`.
+  produce bit-identical codebooks to separate trainings of the coarse
+  book and of the subspace books, which it replaced in `ivf_adc_topk`.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ import pytest
 from usda_food_data_pipeline_spark.operators.kmeans import (
     _quantized,
     _train_books_joint,
-    _train_pq,
 )
 from usda_food_data_pipeline_spark.sources.tables import load_table
 
@@ -31,8 +30,10 @@ def test_joint_training_equals_separate(spark, kc, m, k, n_iter):
     w = dim // m
     pts = _quantized(emb, "vec_id", "embedding")
 
-    coarse_sep = _train_pq(pts, "vec_id", 1, kc, n_iter, dim)
-    fine_sep = _train_pq(pts, "vec_id", m, k, n_iter, w)
+    coarse_sep = _train_books_joint(pts, "vec_id", [(0, kc, dim)], n_iter)
+    fine_sep = _train_books_joint(
+        pts, "vec_id", [(j * w, k, w) for j in range(m)], n_iter
+    )
 
     joint = _train_books_joint(
         pts, "vec_id", [(0, kc, dim)] + [(j * w, k, w) for j in range(m)], n_iter

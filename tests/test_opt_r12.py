@@ -7,8 +7,9 @@ arithmetic directly (not only via the oracle gate):
 - `_train_cents` (plain k-means) moved from its pandas_udf-assign +
   JVM-element_at-aggregate round shape to the mapInPandas-partials
   shape, as the one-full-width-book case of `_train_books_joint`;
-- `_train_pq` now delegates to `_train_books_joint` (ADVICE r11, low:
-  two trainers duplicated the seeding/argmin/update/carry-over rules).
+- PQ subspace codebooks train through `_train_books_joint` (ADVICE r11,
+  low: two trainers duplicated the seeding/argmin/update/carry-over
+  rules).
 
 Both are pinned here against an INDEPENDENT driver-side pure-numpy
 Lloyd reference that re-implements the documented arithmetic contract
@@ -27,7 +28,6 @@ from usda_food_data_pipeline_spark.operators.kmeans import (
     _quantized,
     _train_books_joint,
     _train_cents,
-    _train_pq,
 )
 from usda_food_data_pipeline_spark.sources.tables import load_table
 
@@ -80,14 +80,15 @@ def test_train_cents_equals_reference(spark, xq_rows, k, n_iter):
 
 
 @pytest.mark.parametrize("m,k,n_iter", [(4, 16, 2), (2, 7, 3)])
-def test_train_pq_equals_reference(spark, xq_rows, m, k, n_iter):
+def test_subspace_books_equal_reference(spark, xq_rows, m, k, n_iter):
     emb = load_table(spark, SF_DIR, "embeddings")
     pts = _quantized(emb, "vec_id", "embedding")
     dim = xq_rows.shape[1]
     assert dim % m == 0
     w = dim // m
-    got = _train_pq(pts, "vec_id", m, k, n_iter, w)
-    want = _ref_lloyd(xq_rows, [(j * w, k, w) for j in range(m)], n_iter)
+    spec = [(j * w, k, w) for j in range(m)]
+    got = _train_books_joint(pts, "vec_id", spec, n_iter)
+    want = _ref_lloyd(xq_rows, spec, n_iter)
     assert got == want
 
 

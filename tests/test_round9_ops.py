@@ -189,7 +189,7 @@ def test_ivf_adc_topk_prunes_to_the_query_cell(spark):
         _assign_books,
         _fixed_width,
         _quantized,
-        _train_pq,
+        _train_books_joint,
         ivf_adc_topk,
     )
     import numpy as np
@@ -213,7 +213,9 @@ def test_ivf_adc_topk_prunes_to_the_query_cell(spark):
     # recompute each vector's coarse cell with the operator's own
     # helpers and assert every returned neighbor shares its query's cell
     pts = _quantized(docs, "vec_id", "embedding")
-    coarse = _train_pq(pts, "vec_id", 1, 2, 2, _fixed_width(docs, "embedding", "t"))
+    coarse = _train_books_joint(
+        pts, "vec_id", [(0, 2, _fixed_width(docs, "embedding", "t"))], 2
+    )
     cells = {
         r["vec_id"]: int(r["c"])
         for r in _assign_books(pts, [(0, np.asarray(coarse[0]))])

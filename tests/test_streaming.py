@@ -98,7 +98,7 @@ def test_foreachbatch_sink(spark, events_dir, tmp_path):
 def test_stream_stream_join(spark, events_dir):
     """Purchases joined to prior same-user events within 30 minutes —
     results must match the equivalent batch join."""
-    from usda_food_data_pipeline_spark.streaming.dedup import stream_stream_join
+    from usda_food_data_pipeline_spark.streaming.joins import stream_stream_join
     from pyspark.sql import functions as FF
 
     purchases = _stream(spark, events_dir).filter(FF.col("event_type") == "purchase")
@@ -135,7 +135,7 @@ def test_streaming_funnel_matches_batch(spark, sf_dir, events_dir):
     Every purchase the stream emits as converted must be converted in
     the batch twin, and all but the watermark-tail purchases must be
     emitted."""
-    from usda_food_data_pipeline_spark.streaming.dedup import streaming_funnel
+    from usda_food_data_pipeline_spark.streaming.joins import streaming_funnel
 
     stream = _stream(spark, events_dir)
     q = (

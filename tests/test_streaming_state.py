@@ -162,7 +162,7 @@ def _write_funnel_files(spark, base: str, rows_per_hour: int) -> int:
 
 
 def _funnel_state_rows(spark, base: str) -> int:
-    from usda_food_data_pipeline_spark.streaming.dedup import streaming_funnel
+    from usda_food_data_pipeline_spark.streaming.joins import streaming_funnel
 
     schema = spark.read.parquet(os.path.join(base, "f00.parquet")).schema
     stream = (

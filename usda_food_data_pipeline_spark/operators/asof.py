@@ -21,7 +21,7 @@ because right rows sort before left rows at equal timestamps. Among
 right rows sharing (key, ts), the row with the greatest value tuple
 wins (struct comparison, nulls smallest) — resolved by a pre-aggregation
 per (key, ts) BEFORE the union, so the window sorts only on
-(ts, _side[, tiebreak]): a narrower sort key than ordering by the
+(ts, _side): a narrower sort key than ordering by the
 carried values inside the window (round-2 design, 1.9x slower at
 sf0.1), and the dedup is a map-side-combinable aggregate.
 """
@@ -55,7 +55,6 @@ def asof_join(
     ts_col: str,
     by_cols: list[str],
     value_cols: list[str],
-    tiebreak_col: str | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the as-of right-side ``value_cols``
@@ -100,9 +99,6 @@ def asof_join(
         # right rows sort before left rows at equal ts in BOTH scan
         # directions: _side asc keeps a right row at exactly t visible
         order = [F.col(ts_col).desc() if desc else F.col(ts_col).asc(), F.col("_side")]
-        if tiebreak_col is not None:
-            tb = F.col(tiebreak_col)
-            order.append(tb.desc_nulls_first() if desc else tb.asc_nulls_first())
         return (
             Window.partitionBy(*by_cols)
             .orderBy(*order)

@@ -324,43 +324,13 @@ def minhash_lsh_pairs(
     near-dup sweeps here; route contractual-recall dedup (benchmark
     decontamination, oracle parity) to :func:`jaccard_pairs_prefix`.
     """
-    rows_per_band = num_hashes // bands
-    # testdata parquet is single-row-group → 1 scan task; spread the
-    # expression-heavy shingle/hash work across the cluster first
-    from ..sources.tables import spread
-    df = spread(df)
-    sig = (
-        df.select(
-            F.col(id_col).alias("doc_id_"),
-            word_shingles(tokenize(F.col(text_col)), shingle_n).alias("shingles"),
-        )
-        .select("doc_id_", "shingles", minhash_base(F.col("shingles")).alias("_mhbase"))
-        .select("doc_id_", "shingles", *minhash_signature(F.col("_mhbase"), num_hashes))
-    )
     # the signature table feeds three plan branches (banding + two
-    # candidate-verify attaches); persist it so shingling/hashing runs
+    # candidate-verify attaches); persisted so shingling/hashing runs
     # once — at cluster scale this is a materialized intermediate table
-    sig = own(sig)
-
-    # band value = concat of its rows' minhashes; explode to (band_id,
-    # bucket). The banded rows carry ONLY (doc_id, band, bucket) — the
-    # shingle arrays stay out of the self-join shuffle.
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    sig = _minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    banded = cap_bucket_size(
+        _minhash_bands(sig, num_hashes, bands), ["band", "bucket"], max_bucket, observation
     )
-    banded = sig.select("doc_id_", F.explode(band_cols).alias("bb")).select(
-        "doc_id_", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    banded = cap_bucket_size(banded, ["band", "bucket"], max_bucket, observation)
-
     cand = (
         banded.alias("a")
         .join(
@@ -372,12 +342,61 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id_").alias("id_a"), F.col("b.doc_id_").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # verify candidates with exact Jaccard: re-attach shingles to the
-    # (small) candidate set, then one fold per pair
-    sh = sig.select("doc_id_", "shingles")
-    verified = (
-        cand.join(sh.select(F.col("doc_id_").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("doc_id_").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
+    return _jaccard_verified(cand, sig, sig, jaccard_threshold)
+
+
+def _minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """Owned (persisted) ``(doc_id_, shingles, mh_0..mh_{num_hashes-1})``
+    signature table of the MinHash-LSH operators."""
+    # testdata parquet is single-row-group → 1 scan task; spread the
+    # expression-heavy shingle/hash work across the cluster first
+    from ..sources.tables import spread
+
+    return own(
+        spread(df)
+        .select(
+            F.col(id_col).alias("doc_id_"),
+            word_shingles(tokenize(F.col(text_col)), shingle_n).alias("shingles"),
+        )
+        .select("doc_id_", "shingles", minhash_base(F.col("shingles")).alias("_mhbase"))
+        .select("doc_id_", "shingles", *minhash_signature(F.col("_mhbase"), num_hashes))
+    )
+
+
+def _minhash_bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """Explode a signature table to ``(doc_id_, band, bucket)``: band
+    value = concat of its rows' minhashes. The banded rows carry ONLY
+    these three columns — the shingle arrays stay out of the bucket-join
+    shuffle."""
+    rows_per_band = num_hashes // bands
+    band_cols = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "_", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
+                ).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select("doc_id_", F.explode(band_cols).alias("bb")).select(
+        "doc_id_", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _jaccard_verified(
+    cand: DataFrame, sig_a: DataFrame, sig_b: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """Verify ``(id_a, id_b)`` candidates with exact shingle Jaccard:
+    re-attach each side's shingles to the (small) candidate set, then
+    one fold per pair. Output ``(id_a, id_b, jaccard)``."""
+    verified = cand.join(
+        sig_a.select(F.col("doc_id_").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
+    ).join(
+        sig_b.select(F.col("doc_id_").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b"
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
@@ -718,12 +737,17 @@ def decontaminate(
     )
 
 
-def simhash_token_hashes(tokens: Column) -> Column:
-    """md5-derived 16-bit hash per distinct token — materialize ONCE in
+def simhash_token_hashes(tokens: Column, bits: int = 16) -> Column:
+    """md5-derived ``bits``-wide hash per distinct token (``bits`` must
+    be a multiple of 4 — md5_int works in nibbles). Materialize ONCE in
     its own projection before the bit folds (the minhash_base rule:
     lambda-bearing expressions are excluded from Spark's subexpression
     elimination, so inlining re-runs the md5 transform per bit)."""
-    return F.transform(F.array_distinct(tokens), lambda t: md5_int(t, 999, nibbles=4))
+    if bits % 4 != 0:
+        raise ValueError(f"bits={bits} must be a multiple of 4")
+    return F.transform(
+        F.array_distinct(tokens), lambda t: md5_int(t, 999, nibbles=bits // 4)
+    )
 
 
 def simhash_from_hashes(hashes: Column, bits: int = 16) -> Column:
@@ -772,7 +796,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, bits: int = 
     df = spread(df)
     return df.select(
         F.col(id_col).alias("doc_id"),
-        simhash_token_hashes(tokenize(F.col(text_col))).alias("_sh"),
+        simhash_token_hashes(tokenize(F.col(text_col)), bits).alias("_sh"),
     ).select("doc_id", simhash_from_hashes(F.col("_sh"), bits).alias("simhash"))
 
 
@@ -825,7 +849,7 @@ def simhash_neardup_pairs(
         spread(df)
         .select(
             F.col(id_col).alias("doc_id_"),
-            simhash_token_hashes_wide(tokenize(F.col(text_col)), bits).alias("_sh"),
+            simhash_token_hashes(tokenize(F.col(text_col)), bits).alias("_sh"),
         )
         .select("doc_id_", simhash_from_hashes(F.col("_sh"), bits).alias("fp"))
     )
@@ -864,18 +888,6 @@ def simhash_neardup_pairs(
     )
 
 
-def simhash_token_hashes_wide(tokens: Column, bits: int) -> Column:
-    """``bits``-wide md5 token hashes (``bits`` must be a multiple of
-    4 — md5_int works in nibbles). The 16-bit :func:`simhash_token_hashes`
-    stays as-is for the fingerprint-table query; the near-dup join uses
-    48 bits so block values rarely collide by chance."""
-    if bits % 4 != 0:
-        raise ValueError(f"bits={bits} must be a multiple of 4")
-    return F.transform(
-        F.array_distinct(tokens), lambda t: md5_int(t, 999, nibbles=bits // 4)
-    )
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -883,33 +895,22 @@ def connected_components(
     id_b: str = "id_b",
     node_col: str = "node",
     max_iter: int = 100,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components: the cluster step of a near-dup pipeline
     (pairs → clusters → one canonical doc per cluster).
 
-    ``algorithm="label"`` (default): iterative min-label propagation.
-    Each round every node takes min(own label, neighbors' labels);
-    converges in O(component diameter) rounds — near-dup components are
-    shallow in practice, and one join+group per round is the cheapest
-    loop body. The driver loop only checks a changed-count per round
-    (an aggregate, not a collect of data).
+    Iterative min-label propagation: each round every node takes
+    min(own label, neighbors' labels); converges in O(component
+    diameter) rounds — near-dup components are shallow in practice, and
+    one join+group per round is the cheapest loop body. The driver loop
+    only checks a changed-count per round (an aggregate, not a collect
+    of data). A component whose diameter needs more than ``max_iter``
+    rounds raises ``RuntimeError``.
 
-    ``algorithm="star"``: alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    O(log^2 n) rounds even on adversarially long chains, the 100 TB
-    path when component diameter is unbounded. Same result contract.
-
-    Singleton nodes keep their own id in both variants.
+    Singleton nodes keep their own id.
 
     Returns (node, component) where component = min node id reachable.
     """
-    if algorithm == "star":
-        return _connected_components_star(
-            edges, nodes, id_a, id_b, node_col, max_iter
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
     # persist the edge list: every iteration joins against it, and its
     # lineage (e.g. a full MinHash pipeline) must not replay per round
     und = (
@@ -976,108 +977,6 @@ def connected_components(
     )
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """For each node u: connect every strictly-larger neighbor to
-    min(N(u) ∪ {u}). Emitted per undirected neighborhood, so both
-    orientations of the input are considered."""
-    bidir = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    mins = bidir.groupBy("src").agg(F.least(F.min("dst"), F.col("src")).alias("m"))
-    return (
-        bidir.join(mins, "src")
-        .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient each edge large→small; for each node u connect every
-    smaller neighbor (and u itself) to min(N(u) ∪ {u})."""
-    oriented = e.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).where(F.col("src") != F.col("dst"))
-    mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    with_m = oriented.join(mins, "src")
-    links = with_m.where(F.col("dst") != F.col("m")).select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    )
-    centers = with_m.select("src", F.col("m").alias("dst"))
-    return links.union(centers).distinct()
-
-
-def _connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_a: str,
-    id_b: str,
-    node_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Two-phase star contraction. Converges when a large+small round
-    leaves the canonical edge set unchanged (count + order-insensitive
-    xxhash64 checksum — an aggregate probe, no collect); at the fixpoint
-    every component is a star centered on its min node."""
-    all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-    # the persist()'d input edge list; every later generation is a
-    # localCheckpoint
-    e = first_gen = (
-        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        canon = df.select(
-            F.greatest("src", "dst").alias("a"), F.least("src", "dst").alias("b")
-        ).distinct()
-        # bit_xor: order-insensitive and overflow-free under ANSI mode
-        # (edges are distinct, so xor cancellation can't occur)
-        row = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    converged = False
-    try:
-        prev_fp = fingerprint(e)
-        for _ in range(max_iter):
-            # localCheckpoint (not persist): each round's plan references
-            # the previous round twice per star op, so the LOGICAL plan
-            # doubles every round and Catalyst re-optimization comes to
-            # dominate wall-clock (~70s/round by round 3 on a 999-edge
-            # chain); checkpointing truncates lineage so each round
-            # plans O(1) work. Each round frees the generation it
-            # supersedes, so storage stays one generation flat however
-            # many rounds the contraction takes.
-            new_e = checkpoint(_small_star(_large_star(e)))
-            if e is first_gen:
-                first_gen.unpersist()
-            else:
-                release(e)
-            e = new_e
-            fp = fingerprint(e)
-            if fp == prev_fp:
-                converged = True
-                break
-            prev_fp = fp
-    finally:
-        first_gen.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"star connected_components did not converge within {max_iter} rounds"
-        )
-    # fixpoint edges are (child, center) stars; centers/singletons → self
-    # (the final checkpoint generation belongs to the query run)
-    labels = e.select(
-        F.greatest("src", "dst").alias("node"), F.least("src", "dst").alias("component")
-    ).distinct()
-    return all_nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
-
-
 def minhash_lsh_pairs_cross(
     left: DataFrame,
     right: DataFrame,
@@ -1100,42 +999,15 @@ def minhash_lsh_pairs_cross(
     Each side's band buckets are capped at ``max_bucket`` rows
     (:func:`cap_bucket_size`), bounding the per-bucket A×B product at
     max_bucket² — same backstop as the self-join path."""
-    rows_per_band = num_hashes // bands
-    from ..sources.tables import spread
-
-    def sig_of(df: DataFrame) -> DataFrame:
-        s = spread(df).select(
-            F.col(id_col).alias("doc_id_"),
-            word_shingles(tokenize(F.col(text_col)), shingle_n).alias("shingles"),
-        )
-        return own(
-            s.select("doc_id_", "shingles", minhash_base(F.col("shingles")).alias("_mhbase"))
-            .select("doc_id_", "shingles", *minhash_signature(F.col("_mhbase"), num_hashes))
-        )
-
-    def banded_of(sig: DataFrame) -> DataFrame:
-        band_cols = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"mh_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return sig.select("doc_id_", F.explode(band_cols).alias("bb")).select(
-            "doc_id_", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    sig_a, sig_b = sig_of(left), sig_of(right)
-    banded_a = cap_bucket_size(banded_of(sig_a), ["band", "bucket"], max_bucket, observation)
-    banded_b = cap_bucket_size(banded_of(sig_b), ["band", "bucket"], max_bucket, observation_right)
+    sig_a = _minhash_signatures(left, id_col, text_col, num_hashes, shingle_n)
+    sig_b = _minhash_signatures(right, id_col, text_col, num_hashes, shingle_n)
+    banded_a = cap_bucket_size(
+        _minhash_bands(sig_a, num_hashes, bands), ["band", "bucket"], max_bucket, observation
+    )
+    banded_b = cap_bucket_size(
+        _minhash_bands(sig_b, num_hashes, bands), ["band", "bucket"], max_bucket,
+        observation_right,
+    )
     cand = (
         banded_a
         .alias("a")
@@ -1146,18 +1018,7 @@ def minhash_lsh_pairs_cross(
         .select(F.col("a.doc_id_").alias("id_a"), F.col("b.doc_id_").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    verified = cand.join(
-        sig_a.select(F.col("doc_id_").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
-    ).join(
-        sig_b.select(F.col("doc_id_").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        verified.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(cand, sig_a, sig_b, jaccard_threshold)
 
 
 def incremental_dedup(

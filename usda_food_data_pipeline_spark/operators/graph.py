@@ -1,7 +1,7 @@
 """Distributed graph analytics: PageRank over an item co-occurrence graph.
 
 Connected components already live in ``operators/dedup.py`` (label
-propagation + large-star/small-star for dup clusters); this module adds
+propagation for dup clusters); this module adds
 the other workhorse graph primitive a corpus pipeline needs — PageRank
 for importance-weighting sources/documents in a link graph (e.g.
 ranking crawl domains before sampling, the CommonCrawl harmonic-rank

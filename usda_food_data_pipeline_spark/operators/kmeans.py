@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import own
@@ -189,72 +189,10 @@ def _fixed_width(emb: DataFrame, vec_col: str, op: str) -> int:
     return int(r["hi"])
 
 
-def _assign_multi(pts: DataFrame, cents: list[list[list[int]]]) -> DataFrame:
-    """All-subspace PQ assignment in ONE Arrow-batched projection over
-    the quantized scan (r09 verdict task 3: the former per-subspace
-    assignment outputs were reassembled by m sequential id-keyed joins
-    — m slim shuffles at scale; the codebooks are tiny collected
-    constants, so every subspace's argmin belongs in one pass).
-
-    ``cents`` is (m, k_eff, w) grid-integer codebooks; emits
-    ``_keys array<long>`` with ``_keys[j] = d2_j * k_eff + cluster_j``
-    (the winnowing-encoded argmin key, ties to the lowest cluster id —
-    identical arithmetic to :func:`_assign`, vectorized over m)."""
-    from pyspark.sql.functions import pandas_udf
-
-    c_all = np.asarray(cents, dtype=np.int64)  # (m, k_eff, w)
-    m, k_eff, w = c_all.shape
-
-    @pandas_udf("array<long>")
-    def keys(xq: pd.Series) -> pd.Series:
-        x = np.stack(xq.to_numpy()).astype(np.int64) * GRID  # (b, m*w)
-        xs = x.reshape(-1, m, 1, w)
-        dd = ((xs - c_all[None]) ** 2).sum(axis=3)  # (b, m, k_eff)
-        key = (
-            dd * k_eff + np.arange(k_eff, dtype=np.int64)[None, None, :]
-        ).min(axis=2)  # (b, m)
-        return pd.Series(list(key))
-
-    return pts.withColumn("_keys", keys("xq"))
-
-
-def _train_pq(
-    pts: DataFrame, id_col: str, m: int, k: int, n_iter: int, w: int
-) -> list[list[list[int]]]:
-    """Train all ``m`` subspace Lloyd codebooks together: per round ONE
-    all-subspace assignment (:func:`_assign_multi`) feeding ONE
-    (subspace, cluster)-grouped aggregate whose exchange carries
-    m*k*(w+1) fixed-width rows — n_iter jobs total where the former
-    per-subspace chains ran m*n_iter (r09 verdict task 3).  The
-    arithmetic is per-subspace identical to :func:`_train_cents`:
-    seeds are the k lowest-id points (the same rows for every
-    subspace), centroid updates are the exact round-half-up integer
-    division, empty clusters carry their previous centroid.
-
-    The per-round stats are folded map-side INSIDE the Arrow batches
-    (mapInPandas emitting (subspace, cluster, count, subvector sums)
-    partials, then one tiny m*k-group aggregate): a first cut derived
-    the same groups relationally via posexplode, but the explode
-    duplicates every row's full dim-wide array m times before the
-    partial aggregate — measured ~2x SLOWER than the old per-subspace
-    chains at sf1/sf3, while this form is one slim scan per round.
-
-    Since r12 this is the ``m`` uniform-subspace special case of
-    :func:`_train_books_joint` (ADVICE r11, low: the two trainers
-    duplicated ~90 lines of seeding/argmin/update/carry-over rules
-    that could drift; subspace books have equal widths so the joint
-    trainer's w_max padding is zero here).  Arithmetic equality is
-    pinned by tests/test_opt_r12.py against a pure-numpy Lloyd
-    reference and by tests/test_opt_r11.py joint-vs-separate."""
-    return _train_books_joint(
-        pts, id_col, [(j * w, k, w) for j in range(m)], n_iter
-    )
-
-
 def _train_books_joint(
     pts: DataFrame,
     id_col: str,
-    books_spec: list[tuple[int, int, int]],
+    books_spec: list[tuple[int, int, int | None]],
     n_iter: int,
 ) -> list[list[list[int]]]:
     """Train SEVERAL independent Lloyd codebooks in the same per-round
@@ -266,16 +204,21 @@ def _train_books_joint(
     job.
 
     Training the books separately (the pre-r11-opt ivf_adc_topk shape:
-    ``_train_pq(m=1, kc)`` then ``_train_pq(m, k)``) runs 2·n_iter
-    scan+collect round jobs and two seed collects; the books are
-    mutually independent, so one round job can carry all of them —
+    one call for the coarse book, one for the m subspace books) runs
+    2·n_iter scan+collect round jobs and two seed collects; the books
+    are mutually independent, so one round job can carry all of them —
     n_iter rounds and one seed collect total, halving the job count of
-    every IVFADC-family query.  Per-book arithmetic is IDENTICAL to
-    :func:`_train_pq` (same lowest-id seeds — book i takes the first
-    k_i of one max(k_i)-row collect, same first-minimum argmin tie
-    rule, same round-half-up integer centroid update, empty clusters
-    carry over); tests pin codebook equality against the separate
-    trainers on the driver testdata.
+    every IVFADC-family query.  Per-book arithmetic does not depend on
+    which other books train alongside (same lowest-id seeds — book i
+    takes the first k_i of one max(k_i)-row collect, same first-minimum
+    argmin tie rule, same round-half-up integer centroid update, empty
+    clusters carry over); tests pin codebook equality against separate
+    training and against a pure-numpy Lloyd reference.
+
+    The round stats fold map-side inside the Arrow batches (mapInPandas
+    partials, then one tiny grouped aggregate); a posexplode form that
+    copies each row once per book measured ~2x slower at sf1/sf3.
+    Stats rows are padded to the widest book.
     """
     k_max = max(k for _, k, _ in books_spec)
     seeds = sorted(
@@ -311,7 +254,7 @@ def _train_books_joint(
                     sub = xg[:, off : off + ww]
                     dd = ((sub[:, None, :] - _c[bi][None]) ** 2).sum(axis=2)
                     # np.argmin takes the FIRST minimum — ties to the
-                    # lowest cluster id, the _assign/_train_pq rule
+                    # lowest cluster id, the _assign rule
                     cl = dd.argmin(axis=1)
                     n_by = np.bincount(cl, minlength=kk)
                     sums = np.zeros((kk, ww), dtype=np.int64)
@@ -349,11 +292,136 @@ def _train_books_joint(
     return cents
 
 
-def _pq_code_cols(m: int, k_eff: int) -> list:
+def _pq_code_cols(m: int, k_eff: int, first: int) -> list:
+    """``code_0..code_{m-1}`` from the ``_keys`` argmin keys starting at
+    1-based position ``first``."""
     return [
-        (F.element_at("_keys", j + 1) % k_eff).cast("int").alias(f"code_{j}")
+        (F.element_at("_keys", first + j) % k_eff).cast("int").alias(f"code_{j}")
         for j in range(m)
     ]
+
+
+def _pq_trained(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    lead: list[tuple[int, int, int | None]],
+    m: int,
+    k: int,
+    n_iter: int,
+    op: str,
+) -> tuple[DataFrame, DataFrame, list[list[list[int]]], int]:
+    """The PQ build every compressed-domain operator starts from: check
+    that the fixed vector width splits into ``m`` subspaces, persist the
+    quantized points for the life of the query run (they feed the seed
+    collect, every training round, the query-row collect and the final
+    assignment), train the ``lead`` books and then ``m`` subspace books
+    of ``k`` centroids in the SAME per-round jobs
+    (:func:`_train_books_joint`), and assign every point to all of them
+    in one projection (:func:`_assign_books`).
+
+    Returns ``(points, points with _keys, books, subspace width)``."""
+    dim = _fixed_width(emb, vec_col, op)
+    if dim % m != 0:
+        raise ValueError(f"{op}: dim {dim} not divisible by m={m}")
+    w = dim // m
+    pts = own(_quantized(emb, id_col, vec_col))
+    spec = lead + [(j * w, k, w) for j in range(m)]
+    books = _train_books_joint(pts, id_col, spec, n_iter)
+    assigned = _assign_books(pts, [(off, b) for (off, _, _), b in zip(spec, books)])
+    return pts, assigned, books, w
+
+
+def _query_rows(pts: DataFrame, id_col: str, n_queries: int, op: str) -> list:
+    """The quantized rows of query ids ``0..n_queries-1``, in id order.
+    The query vectors ARE corpus rows; their exact ``xq`` is collected
+    once (n_queries x dim ints), never re-derived from floats. Fewer
+    rows than ``n_queries`` raises instead of silently scoring a
+    smaller query set than the oracle."""
+    qrows = pts.filter(F.col(id_col) < n_queries).collect()
+    if len(qrows) < n_queries:
+        raise ValueError(
+            f"{op}: only {len(qrows)} rows with {id_col} < "
+            f"{n_queries}; query ids 0..n_queries-1 must all exist"
+        )
+    return sorted(qrows, key=lambda r: int(r[id_col]))
+
+
+def _lut(xq, fine: list[list[list[int]]], w: int) -> list[list[int]]:
+    """One query's ADC lookup tables: per subspace j, the exact squared
+    grid distance from its j-th subvector to each centroid of book j,
+    folded in Python integer arithmetic."""
+    return [
+        [
+            sum(
+                (int(x) * GRID - c) ** 2
+                for x, c in zip(xq[j * w : (j + 1) * w], cent, strict=True)
+            )
+            for cent in book
+        ]
+        for j, book in enumerate(fine)
+    ]
+
+
+def _adc_topk(
+    codes: DataFrame,
+    id_col: str,
+    m: int,
+    top_k: int,
+    lut_rows: list[tuple],
+    head_schema: list[str],
+    keep: Column,
+) -> DataFrame:
+    """Score ``codes`` against a broadcast of the query LUT rows (the
+    ``head_schema`` columns, then m ``_lut{j}`` arrays) and keep each
+    query's ``top_k`` by (ADC distance, neighbor id). ``keep`` is the
+    caller's candidate condition over the crossed row; the query itself
+    is always excluded.
+
+    Output: ``(query_id, neighbor_id, adc_d2 bigint, rank int)``."""
+    lut_schema = ", ".join(head_schema + [f"_lut{j} array<long>" for j in range(m)])
+    luts = F.broadcast(codes.sparkSession.createDataFrame(lut_rows, lut_schema))
+    adc = None
+    for j in range(m):
+        term = F.element_at(f"_lut{j}", F.col(f"code_{j}") + 1)
+        adc = term if adc is None else adc + term
+    scored = (
+        codes.crossJoin(luts)
+        .filter(keep & (F.col(id_col) != F.col("query_id")))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            adc.cast("bigint").alias("adc_d2"),
+        )
+    )
+    rank_w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_d2"), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(rank_w))
+        .filter(F.col("rank") <= top_k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "adc_d2",
+            F.col("rank").cast("int").alias("rank"),
+        )
+    )
+
+
+def _exact_d2(pts: DataFrame, id_col: str, n_queries: int) -> tuple[DataFrame, Column]:
+    """Broadcast ``(query_id, _qx)`` query vectors and the exact int64
+    ``sum((_qx - xq)^2)`` fold against a row's ``xq`` — zip_with over
+    lambda args only, no captured expressions."""
+    qpts = pts.filter(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("query_id"), F.col("xq").alias("_qx")
+    )
+    d2 = F.aggregate(
+        F.zip_with("_qx", "xq", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return F.broadcast(qpts), d2
 
 
 def pq_quantize(
@@ -387,24 +455,17 @@ def pq_quantize(
 
     Output: ``(id_col, code_0..code_{m-1} int, d2 bigint)``.
     """
-    dim = _fixed_width(emb, vec_col, "pq_quantize")
-    if dim % m != 0:
-        raise ValueError(f"pq_quantize: dim {dim} not divisible by m={m}")
-    w = dim // m
-
-    # one quantized point table feeds the seed collect, every training
-    # round and the final code projection — persist it for the life of
-    # the query run (r12 opt, the ivf_adc_topk pattern)
-    pts = own(_quantized(emb, id_col, vec_col))
-    cents = _train_pq(pts, id_col, m, k, n_iter, w)
-    k_eff = len(cents[0])
+    _pts, assigned, books, _w = _pq_trained(
+        emb, id_col, vec_col, [], m, k, n_iter, "pq_quantize"
+    )
+    k_eff = len(books[0])
     d2 = None
     for j in range(m):
         dj = F.expr(f"element_at(_keys, {j + 1}) DIV {k_eff}")
         d2 = dj if d2 is None else d2 + dj
-    return _assign_multi(pts, cents).select(
+    return assigned.select(
         F.col(id_col),
-        *_pq_code_cols(m, k_eff),
+        *_pq_code_cols(m, k_eff, 1),
         d2.cast("bigint").alias("d2"),
     )
 
@@ -431,90 +492,35 @@ def pq_adc_topk(
 
     Everything is oracle-exact: codebooks come from the same
     exact-integer Lloyd as :func:`pq_quantize`, the LUTs are integer
-    sums over the SAME quantized values the corpus side used (the
-    query rows are corpus rows — their ``xq`` is collected once, never
-    re-derived from floats), and the ADC score is an int64 sum of m
+    sums over the SAME quantized values the corpus side used
+    (:func:`_query_rows`), and the ADC score is an int64 sum of m
     lookups.  Ragged widths and id gaps fail fast (ADVICE r09):
     :func:`_fixed_width` asserts min(size)==max(size), and fewer than
-    ``n_queries`` rows with id < n_queries raises instead of silently
-    scoring a smaller query set than the oracle.
+    ``n_queries`` rows with id < n_queries raises.
 
     Scale shape (r09 verdict task 3): one combined codebook training
-    (n_iter jobs, see :func:`_train_pq`), the code table from ONE
-    projection over the quantized scan (the former m-way id-keyed join
-    chain is gone), then ONE scan of the m-code table against a
-    broadcast of n_queries LUT rows (n_queries*m*k ints); the per-query
-    rank is a WindowGroupLimit top-k, so the exchange carries at most
-    (partitions x top_k) candidate rows per query — never the corpus.
+    (n_iter jobs, see :func:`_train_books_joint`), the code table from
+    ONE projection over the quantized scan, then ONE scan of the m-code
+    table against a broadcast of n_queries LUT rows (n_queries*m*k
+    ints); the per-query rank is a WindowGroupLimit top-k, so the
+    exchange carries at most (partitions x top_k) candidate rows per
+    query — never the corpus.
+
+    Not ``ivf_adc_topk(kc=1, nprobe=1)``: that returns the same rows,
+    but the joint trainer pads every book's stats row to the widest
+    (full-width coarse) book, and measured slower at sf0.1.
 
     Output: ``(query_id, neighbor_id, adc_d2 bigint, rank int)``.
     """
-    dim = _fixed_width(emb, vec_col, "pq_adc_topk")
-    if dim % m != 0:
-        raise ValueError(f"pq_adc_topk: dim {dim} not divisible by m={m}")
-    w = dim // m
-
-    # persist the quantized point table across seed/round/query-row/
-    # code jobs (r12 opt, the ivf_adc_topk pattern)
-    pts = own(_quantized(emb, id_col, vec_col))
-    cents = _train_pq(pts, id_col, m, k, n_iter, w)
-    k_eff = len(cents[0])
-    codes = _assign_multi(pts, cents).select(
-        F.col(id_col), *_pq_code_cols(m, k_eff)
-    )
-
-    # query LUT rows: the query subvectors ARE corpus rows; collect
-    # their exact xq once (n_queries x dim ints) and fold each m x k
-    # distance table in Python integer arithmetic
-    qrows = pts.filter(F.col(id_col) < n_queries).collect()
-    if len(qrows) < n_queries:
-        raise ValueError(
-            f"pq_adc_topk: only {len(qrows)} rows with {id_col} < "
-            f"{n_queries}; query ids 0..n_queries-1 must all exist"
-        )
-    lut = {
-        int(r[id_col]): [
-            [
-                sum(
-                    (int(x) * GRID - c) ** 2
-                    for x, c in zip(
-                        r["xq"][j * w : (j + 1) * w], cents[j][cl], strict=True
-                    )
-                )
-                for cl in range(k_eff)
-            ]
-            for j in range(m)
-        ]
-        for r in qrows
-    }
-
-    spark = emb.sparkSession
-    qids = sorted(lut)
-    lut_rows = [tuple([qid] + list(lut[qid])) for qid in qids]
-    lut_schema = ", ".join(
-        ["query_id long"] + [f"_lut{j} array<long>" for j in range(m)]
-    )
-    luts = F.broadcast(spark.createDataFrame(lut_rows, lut_schema))
-
-    adc = None
-    for j in range(m):
-        term = F.element_at(f"_lut{j}", F.col(f"code_{j}") + 1)
-        adc = term if adc is None else adc + term
-
-    from pyspark.sql import Window
-
-    scored = (
-        codes.crossJoin(luts)
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), adc.cast("bigint").alias("adc_d2"))
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "adc_d2", F.col("rank").cast("int").alias("rank"))
+    op = "pq_adc_topk"
+    pts, assigned, books, w = _pq_trained(emb, id_col, vec_col, [], m, k, n_iter, op)
+    codes = assigned.select(F.col(id_col), *_pq_code_cols(m, len(books[0]), 1))
+    lut_rows = [
+        (int(r[id_col]), *_lut(r["xq"], books, w))
+        for r in _query_rows(pts, id_col, n_queries, op)
+    ]
+    return _adc_topk(
+        codes, id_col, m, top_k, lut_rows, ["query_id long"], F.lit(True)
     )
 
 
@@ -524,9 +530,10 @@ def _assign_books(pts: DataFrame, books: list[tuple[int, "np.ndarray"]]) -> Data
     codebook) pairs — e.g. one coarse full-width quantizer plus m PQ
     subspace codebooks — and the output column ``_keys[i]`` carries the
     winnowing-encoded argmin ``d2_i * k_i + cluster_i`` for book i.
-    Generalizes :func:`_assign_multi` (uniform subspaces) so an IVF-PQ
-    index derives its coarse cell AND its fine codes from one scan of
-    the vector payload instead of an id-keyed join of two projections."""
+    :func:`pq_quantize` passes its m uniform subspace books; an IVF-PQ
+    index passes its coarse book too, deriving its coarse cell AND its
+    fine codes from one scan of the vector payload instead of an
+    id-keyed join of two projections."""
     from pyspark.sql.functions import pandas_udf
 
     metas = [(off, np.asarray(cb, dtype=np.int64)) for off, cb in books]
@@ -573,11 +580,11 @@ def ivf_adc_topk(
     never touches raw vectors.
 
     Everything is oracle-exact: both quantizers are the exact-integer
-    Lloyd via :func:`_train_books_joint` (per-book arithmetic equals
-    :func:`_train_pq` — test-pinned; the coarse book is the full-width
-    special case), cells and codes come from ONE heterogeneous assignment
-    projection (:func:`_assign_books` — no id-keyed join between the
-    coarse and fine assignments), the per-query cell is derived in
+    Lloyd via :func:`_train_books_joint` (the coarse book is the
+    full-width special case), cells and codes come from ONE
+    heterogeneous assignment projection (:func:`_assign_books` — no
+    id-keyed join between the coarse and fine assignments), the
+    per-query cell is derived in
     Python from the SAME collected ``xq`` ints that built the LUTs,
     and the ADC score is an int64 sum of m lookups.
 
@@ -586,47 +593,22 @@ def ivf_adc_topk(
     neighbor in an unprobed cell is missed, exactly the recall
     :func:`adc_recall_eval` measures).
     """
+    op = "ivf_adc_topk"
     if not 1 <= nprobe <= kc:
-        raise ValueError(f"ivf_adc_topk: nprobe {nprobe} outside 1..kc={kc}")
-    dim = _fixed_width(emb, vec_col, "ivf_adc_topk")
-    if dim % m != 0:
-        raise ValueError(f"ivf_adc_topk: dim {dim} not divisible by m={m}")
-    w = dim // m
-
-    # one quantized point table feeds the seed collect, every training
-    # round, the query-row collect and the final assignment — persist it
-    # for the life of the query run
-    pts = own(_quantized(emb, id_col, vec_col))
-    # coarse + fine codebooks are independent: train them in the SAME
-    # per-round jobs (was: two _train_pq calls = 2x the round jobs and
-    # seed collects; r11-opt same-session A/B below)
-    joint = _train_books_joint(
-        pts, id_col, [(0, kc, dim)] + [(j * w, k, w) for j in range(m)], n_iter
+        raise ValueError(f"{op}: nprobe {nprobe} outside 1..kc={kc}")
+    # the coarse book spans the full width (None = to the vector's end)
+    pts, assigned, books, w = _pq_trained(
+        emb, id_col, vec_col, [(0, kc, None)], m, k, n_iter, op
     )
-    coarse, fine = [joint[0]], joint[1:]
-    kc_eff = len(coarse[0])
-    k_eff = len(fine[0])
-
-    books = [(0, np.asarray(coarse[0], dtype=np.int64))] + [
-        (j * w, np.asarray(fine[j], dtype=np.int64)) for j in range(m)
-    ]
-    assigned = _assign_books(pts, books)
+    coarse, fine = books[0], books[1:]
+    kc_eff = len(coarse)
     codes = assigned.select(
         F.col(id_col),
         (F.element_at("_keys", 1) % kc_eff).cast("int").alias("_cell"),
-        *[
-            (F.element_at("_keys", j + 2) % k_eff).cast("int").alias(f"code_{j}")
-            for j in range(m)
-        ],
+        *_pq_code_cols(m, len(fine[0]), 2),
     )
 
-    qrows = pts.filter(F.col(id_col) < n_queries).collect()
-    if len(qrows) < n_queries:
-        raise ValueError(
-            f"ivf_adc_topk: only {len(qrows)} rows with {id_col} < "
-            f"{n_queries}; query ids 0..n_queries-1 must all exist"
-        )
-    c_arr = np.asarray(coarse[0], dtype=np.int64)
+    c_arr = np.asarray(coarse, dtype=np.int64)
 
     def _qcells(xq) -> list[int]:
         x = np.asarray(xq, dtype=np.int64) * GRID
@@ -637,59 +619,18 @@ def ivf_adc_topk(
         keys = np.sort(dd * kc_eff + np.arange(kc_eff, dtype=np.int64))
         return [int(v % kc_eff) for v in keys[:nprobe]]
 
-    lut_rows = []
-    for r in sorted(qrows, key=lambda r: int(r[id_col])):
-        xq = r["xq"]
-        luts = [
-            [
-                sum(
-                    (int(x) * GRID - c) ** 2
-                    for x, c in zip(
-                        xq[j * w : (j + 1) * w], fine[j][cl], strict=True
-                    )
-                )
-                for cl in range(k_eff)
-            ]
-            for j in range(m)
-        ]
-        lut_rows.append(tuple([int(r[id_col]), _qcells(xq)] + luts))
-    lut_schema = ", ".join(
-        ["query_id long", "_qcells array<int>"]
-        + [f"_lut{j} array<long>" for j in range(m)]
-    )
-    luts = F.broadcast(emb.sparkSession.createDataFrame(lut_rows, lut_schema))
-
-    adc = None
-    for j in range(m):
-        term = F.element_at(f"_lut{j}", F.col(f"code_{j}") + 1)
-        adc = term if adc is None else adc + term
-
-    from pyspark.sql import Window
-
-    scored = (
-        codes.crossJoin(luts)
-        .filter(
-            F.array_contains("_qcells", F.col("_cell"))
-            & (F.col(id_col) != F.col("query_id"))
-        )
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            adc.cast("bigint").alias("adc_d2"),
-        )
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_d2",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    lut_rows = [
+        (int(r[id_col]), _qcells(r["xq"]), *_lut(r["xq"], fine, w))
+        for r in _query_rows(pts, id_col, n_queries, op)
+    ]
+    return _adc_topk(
+        codes,
+        id_col,
+        m,
+        top_k,
+        lut_rows,
+        ["query_id long", "_qcells array<int>"],
+        F.array_contains("_qcells", F.col("_cell")),
     )
 
 
@@ -726,23 +667,14 @@ def adc_recall_eval(
     Output: ``(query_id, n_true bigint, n_hits bigint)`` — integer
     hits, not a float recall, so the oracle compares exactly.
     """
-    from pyspark.sql import Window
-
     ann = ivf_adc_topk(
         emb, n_queries, top_k, id_col, vec_col, kc, m, k, n_iter, nprobe
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
 
     pts = _quantized(emb, id_col, vec_col)
-    qpts = pts.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("xq").alias("_qx")
-    )
-    d2 = F.aggregate(
-        F.zip_with("_qx", "xq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    qpts, d2 = _exact_d2(pts, id_col, n_queries)
     truth = (
-        pts.crossJoin(F.broadcast(qpts))
+        pts.crossJoin(qpts)
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", F.col(id_col).alias("neighbor_id"), d2.alias("_d2"))
     )
@@ -810,22 +742,12 @@ def adc_rerank_topk(
     ).select("query_id", "neighbor_id")
 
     pts = _quantized(emb, id_col, vec_col)
-    qpts = pts.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col("xq").alias("_qx")
-    )
-    d2 = F.aggregate(
-        F.zip_with("_qx", "xq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    qpts, d2 = _exact_d2(pts, id_col, n_queries)
     rescored = (
         pool.join(pts, pool.neighbor_id == pts[id_col])
-        .join(F.broadcast(qpts), "query_id")
+        .join(qpts, "query_id")
         .select("query_id", "neighbor_id", d2.alias("exact_d2"))
     )
-
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("exact_d2"), F.col("neighbor_id")
     )

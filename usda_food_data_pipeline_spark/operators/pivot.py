@@ -34,17 +34,16 @@ def group_avg_pivot(
     value_col: str,
     pivot_values: list[str],
     rename: Mapping[str, str] | None = None,
-    scale: int | None = None,
     max_width: int = MAX_PIVOT_WIDTH,
 ) -> DataFrame:
     """AVG ``value_col`` per (group, pivot) then pivot wide.
 
     One shuffle on ``group_col``; partial aggregation map-side. The avg
     is computed with the exact-decimal trick so results hash-match any
-    other engine (see functions.cleaning.deterministic_avg). Leave
-    ``scale=None`` for oracle-checked outputs: rounding a quotient can
-    land on a decimal tie where engines disagree (string-based vs
-    binary-based rounding); the raw double is bit-identical everywhere.
+    other engine (see functions.cleaning.deterministic_avg). The avg is
+    left unrounded: rounding a quotient can land on a decimal tie where
+    engines disagree (string-based vs binary-based rounding); the raw
+    double is bit-identical everywhere.
     """
     if len(pivot_values) > max_width:
         raise ValueError(
@@ -52,8 +51,6 @@ def group_avg_pivot(
             "aggregate to long format or raise max_width explicitly"
         )
     agg = deterministic_avg(value_col)
-    if scale is not None:
-        agg = F.round(agg, scale)
     piv = df.groupBy(group_col).pivot(pivot_col, pivot_values).agg(agg.alias("v"))
     if rename:
         piv = piv.select(

@@ -163,7 +163,7 @@ def q_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from .streaming.dedup import streaming_funnel
+    from .streaming.joins import streaming_funnel
 
     events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
